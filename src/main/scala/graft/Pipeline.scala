@@ -54,10 +54,10 @@ object Pipeline {
     // below (and the warehouse reads dependents make) re-read the
     // same paths — a session-memoized kernel frame keyed on the plan's
     // semantic hash would serve the PREVIOUS run's corpus (the exact
-    // staleness CorpusPrep's scaladoc warns about; r12: the span
+    // staleness SessionMemo's scaladoc warns about; r12: the span
     // marts surfaced it). A pipeline run is the documented
     // invalidate() call site.
-    graft.operators.CorpusPrep.invalidate()
+    SessionMemo.invalidate()
     val dag = dagFor(eventsFrom(stored))
     // a typo'd export name would otherwise just never load, silently,
     // run after run — malformed config is a bug, not a condition to

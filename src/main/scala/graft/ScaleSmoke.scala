@@ -349,14 +349,17 @@ object ScaleSmoke {
     val basePartitions = spark.conf.get("spark.sql.shuffle.partitions")
     val scaledPartitions = sys.env.getOrElse("SPARK_GRAFT_SCALE_SHUFFLE", basePartitions)
 
+    // every timed run starts cold: no memo, table load or cached
+    // block survives from the previous run (or the previous N's files)
+    def clear(): Unit = {
+      SessionMemo.invalidate()
+      spark.sharedState.cacheManager.clearCache()
+    }
+
     def run(name: String, dir: String): Double = {
       spark.conf.set("spark.sql.shuffle.partitions",
         if (dir == work) scaledPartitions else basePartitions)
-      operators.CorpusPrep.invalidate()
-      streaming.StoreMemo.invalidate()
-      streaming.BudgetStream.invalidateQuotaPlans()
-      sources.Tables.invalidate()
-      spark.sharedState.cacheManager.clearCache()
+      clear()
       // localCheckpoint blocks are reclaimed by the ContextCleaner
       // only after their RDDs are GC'd — at N× scale the previous
       // query's multi-GB blocks would otherwise still occupy storage
@@ -393,11 +396,7 @@ object ScaleSmoke {
     // row is a PLAN finding only when time_ratio outruns mass_ratio.
     {
       def mass(dir: String): (Long, Long) = {
-        operators.CorpusPrep.invalidate()
-        streaming.StoreMemo.invalidate()
-        streaming.BudgetStream.invalidateQuotaPlans()
-        sources.Tables.invalidate()
-        spark.sharedState.cacheManager.clearCache()
+        clear()
         operators.Dedup.evidenceMass(sources.Tables.documents(spark, dir))
       }
       // the pair-evidence probe materializes the overlap chain — at

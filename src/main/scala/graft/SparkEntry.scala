@@ -34,7 +34,7 @@ object SparkEntry {
   // ~1 ms of work per task); a real table reaches full width (and
   // past cores splits the gate no-ops).
   private def stg(s: SparkSession, dir: String): DataFrame =
-    graft.operators.CorpusPrep.memo("stg_events", Tables.events(s, dir))(
+    SessionMemo.frame("stg_events", Tables.events(s, dir))(
       graft.operators.Materialize.frame(Staging.stgEvents(
         Tables.parallelKernelInput(Tables.events(s, dir), bytesPerTask = 2048L << 10))))
 

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.SessionMemo
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.TextFns
@@ -55,7 +56,7 @@ object Dedup {
     * pass per (session, corpus) — c2, c3, c12, and c20 all derive
     * from this instead of re-tokenizing the corpus per query. */
   private[operators] def sharedShingleSets(docs: DataFrame): DataFrame =
-    CorpusPrep.memo("shingle_sets", docs)(Materialize.frame(shingleSets(docs)))
+    SessionMemo.frame("shingle_sets", docs)(Materialize.frame(shingleSets(docs)))
 
   /** Distinct 32-bit shingle keys per doc, exploded off the shared
     * sets (md5 via the codegen'd SQL expression — only the shingle
@@ -100,7 +101,7 @@ object Dedup {
     // is dropped, instead of accumulating in the CacheManager for
     // the life of a shared session.
     def build = ngramPostingsPlan(docs, dfCap).localCheckpoint()
-    if (dfCap == DfCap) CorpusPrep.memo("ngram_postings", docs)(build) else build
+    if (dfCap == DfCap) SessionMemo.frame("ngram_postings", docs)(build) else build
   }
 
   /** The posting build as a pure plan (exposed for the plan-shape
@@ -143,8 +144,8 @@ object Dedup {
       // memoized — a duplicate-lineage regression waiting to fire);
       // lazy so a double memo HIT never constructs the plan at all
       lazy val built = overlapFramesBuild(docs, dfCap)
-      val inter = CorpusPrep.memo("overlap_inter", docs)(Materialize.frame(built._1))
-      val sizes = CorpusPrep.memo("overlap_sizes", docs)(Materialize.frame(built._2))
+      val inter = SessionMemo.frame("overlap_inter", docs)(Materialize.frame(built._1))
+      val sizes = SessionMemo.frame("overlap_sizes", docs)(Materialize.frame(built._2))
       (inter, sizes)
     } else overlapFramesBuild(docs, dfCap)
   }
@@ -243,7 +244,7 @@ object Dedup {
         .filter(col("containment") >= floor)
     }
     if (dfCap == DfCap && bar >= ContainmentBar)
-      CorpusPrep.memo("verified_contain", docs)(Materialize.frame(frame(ContainmentBar)))
+      SessionMemo.frame("verified_contain", docs)(Materialize.frame(frame(ContainmentBar)))
         .filter(col("containment") >= bar)
     else frame(bar)
   }
@@ -276,7 +277,7 @@ object Dedup {
         .filter(col("jac") >= floor)
     }
     if (dfCap == DfCap && bar >= NearBarFloor)
-      CorpusPrep.memo("verified_jac", docs)(Materialize.frame(jacFrame(NearBarFloor)))
+      SessionMemo.frame("verified_jac", docs)(Materialize.frame(jacFrame(NearBarFloor)))
         .filter(col("jac") >= bar)
     else jacFrame(bar)
   }
@@ -504,11 +505,11 @@ object Dedup {
     * 8×2 band keys from it and c114's geometry sweep derives all
     * THREE factorings from the same frame, so the 16-min-agg corpus
     * pass runs once per (session, corpus), not once per consumer
-    * (CorpusPrep's standing discipline; the kernel input is spread
+    * (the session memo's standing discipline; the kernel input is spread
     * across cores when the scan arrives as one row-group — the
     * explode+md5 pass is the dense leg). */
   private[graft] def sharedMinhashSigs(docs: DataFrame): DataFrame =
-    CorpusPrep.memo("minhash_sigs", docs)(Materialize.frame(
+    SessionMemo.frame("minhash_sigs", docs)(Materialize.frame(
       minhashSigs(Materialize.spreadScan(sharedShingleSets(docs), col("doc_id"))
         .select(col("doc_id"), explode(col("sh")).as("s")))))
 
@@ -527,7 +528,7 @@ object Dedup {
   /** Raw (doc_id, band_key) rows off a sets frame — the signature
     * input is the sets exploded back to (doc_id, shingle) rows, so
     * the tokenize+shingle kernel never runs a second time (and, via
-    * CorpusPrep, not even a second time ACROSS queries in the same
+    * SessionMemo, not even a second time ACROSS queries in the same
     * session). Uncapped: the batch path applies the bucket cap on
     * top; the streaming gate probes/stores these directly (its
     * keeper-side buckets are self-bounding — kept docs are mutually
@@ -793,7 +794,7 @@ object Dedup {
     // verify + component-labeling chain per session, not one per
     // consumer (the labels are themselves a checkpointed frame, so
     // the memo adds storage of one (doc_id, label) table).
-    CorpusPrep.memo(s"dup_labels_$threshold", docs)(Materialize.frame(
+    SessionMemo.frame(s"dup_labels_$threshold", docs)(Materialize.frame(
       labelComponents(
         minhashCandidatePairs(docs)
           .filter(col("jaccard") >= threshold)
@@ -1044,7 +1045,7 @@ object Dedup {
     * delta chain read the SAME frame, so one kernel pass + one
     * materialization serves all four consumers per session. */
   private def posShinglesMat(docs: DataFrame, w: Int): DataFrame =
-    CorpusPrep.memo(s"pos_shingles_$w", docs)(
+    SessionMemo.frame(s"pos_shingles_$w", docs)(
       Materialize.frame(posShingles(docs, w)))
 
   /** c33: exact repeated-SPAN dedup across documents — the Lee et
@@ -1085,13 +1086,13 @@ object Dedup {
 
   /** The SHARED span evidence: c33's chain up to (but not including)
     * its report sort, memoized per (session, corpus, geometry) via
-    * the CorpusPrep discipline — c33 and c34 both derive from this,
+    * the session-memo discipline — c33 and c34 both derive from this,
     * so a session running the report AND the cut decision pays for
     * the shingle/pair/collapse chain once (the same reason c2/c3/c12
     * share one shingle kernel). */
   private def spanFrame(docs: DataFrame, w: Int,
       minSpan: Int, occCap: Int): DataFrame =
-    CorpusPrep.memo(s"c33_spans_${w}_${minSpan}_$occCap", docs)(
+    SessionMemo.frame(s"c33_spans_${w}_${minSpan}_$occCap", docs)(
       Materialize.frame(spanChain(docs, w, minSpan, occCap)))
 
   /** The span chain as a pure plan (exposed for the plan-shape spec:
@@ -1111,7 +1112,7 @@ object Dedup {
     // buffer in one task. Key set identical to the old post-collect
     // filter, so spans cannot move. The shingle frame is the
     // session-memoized materialization (batchSpans' postB
-    // discipline + the CorpusPrep memo) so the count branch and the
+    // discipline + the session memo) so the count branch and the
     // semi-join probe don't each re-run the tokenize kernel, and c56
     // reads the same frame.
     val ps = posShinglesMat(docs, w)

@@ -3,8 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 
 /** Strategy switch for materializing corpus-grain intermediates (the
-  * staged tf frames of c17/c31, a9's staging+marts, CorpusPrep's
-  * shingle/bigram kernels, c30's scored frame).
+  * staged tf frames of c17/c31, a9's staging+marts, the session
+  * memo's shingle/bigram kernels, c30's scored frame).
   *
   * `localCheckpoint` is the right default for a single-JVM session
   * (Verify/Bench/local notebooks): blocks land in executor
@@ -106,33 +106,56 @@ object Materialize {
     * thousands of splits (the gate no-ops and costs nothing), but a
     * small file is ONE task and serializes the kernel while the rest
     * of the cluster idles (guide §2.5's "input skew: repartition
-    * immediately after the read"). The partition count is read from
-    * the ANALYZED plan's leaves (a checkpointed frame's LogicalRDD
-    * already holds its RDD; a file scan gets the same split estimate
-    * `Tables.parallelKernelInput` uses) — no `df.rdd` call, which
-    * would force a full physical-planning + RDD-conversion pass per
-    * gate evaluation. Unknown leaf shapes spread conservatively. */
-  def spreadScan(df: DataFrame, keys: org.apache.spark.sql.Column*): DataFrame = {
+    * immediately after the read"). The layout is [[plannedWidth]]. */
+  def spreadScan(df: DataFrame, keys: org.apache.spark.sql.Column*): DataFrame =
+    if (plannedWidth(df) >= df.sparkSession.sparkContext.defaultParallelism) df
+    else spread(df, keys: _*)
+
+  /** The partition count `df` is PLANNED to arrive with, estimated from
+    * the analyzed plan instead of `df.rdd.getNumPartitions` (which
+    * forces a full physical-planning + RDD-conversion pass per call):
+    *   - a repartition node's own count (a coalesce caps its child's);
+    *   - a checkpointed frame's LogicalRDD partitions;
+    *   - a file scan's split count, by the arithmetic of Spark's
+    *     FilePartition packing — maxSplitBytes = min(maxPartitionBytes,
+    *     max(openCostInBytes, bytes/minPartitionNum)). Plain
+    *     ceil(bytes/maxPartitionBytes) would miss the bytes-per-core
+    *     term and call narrow any corpus under ~cores×128MB that
+    *     Spark already plans as `cores` splits.
+    * Any other node takes its widest child; any other leaf counts as
+    * one partition, so unknown inputs read as narrow. */
+  def plannedWidth(df: DataFrame): Long = {
+    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, RepartitionOperation}
     val spark = df.sparkSession
-    val n = spark.sparkContext.defaultParallelism
     val conf = spark.sessionState.conf
-    val minPartitionNum = conf.filesMinPartitionNum.getOrElse(n)
-    val leafParts = df.queryExecution.analyzed.collect {
-      case r: org.apache.spark.sql.execution.LogicalRDD =>
-        r.rdd.getNumPartitions.toLong
-      case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        r.relation match {
-          case f: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            val bytes = f.location.sizeInBytes
-            val bytesPerCore = bytes / math.max(1, minPartitionNum)
-            val maxSplit = math.max(1L, math.min(conf.filesMaxPartitionBytes,
-              math.max(conf.filesOpenCostInBytes, bytesPerCore)))
-            (bytes + maxSplit - 1) / maxSplit
-          case _ => 1L
-        }
+    val minPartitionNum = conf.filesMinPartitionNum
+      .getOrElse(spark.sparkContext.defaultParallelism)
+    def width(p: LogicalPlan): Long = p match {
+      case r: RepartitionOperation =>
+        if (r.shuffle) r.numPartitions else math.min(r.numPartitions, width(r.child))
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.getNumPartitions
+      case FileScan(f) =>
+        val bytes = f.location.sizeInBytes
+        val maxSplit = math.max(1L, math.min(conf.filesMaxPartitionBytes,
+          math.max(conf.filesOpenCostInBytes, bytes / math.max(1, minPartitionNum))))
+        (bytes + maxSplit - 1) / maxSplit
+      case _ if p.children.isEmpty => 1L
+      case _ => p.children.map(width).max
     }
-    val known = if (leafParts.isEmpty) 0L else leafParts.max
-    if (known >= n) df else spread(df, keys: _*)
+    width(df.queryExecution.analyzed)
+  }
+
+  /** A file-source scan leaf, by its relation. */
+  private[graft] object FileScan {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    def unapply(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+        : Option[HadoopFsRelation] = p match {
+      case r: LogicalRelation => r.relation match {
+        case f: HadoopFsRelation => Some(f)
+        case _ => None
+      }
+      case _ => None
+    }
   }
 
   /** Run INDEPENDENT driver-side action sequences concurrently and
@@ -141,7 +164,9 @@ object Materialize {
     * sweep's per-width loops, an audit's two trainer chains). The
     * caller owns independence: items must not share mutable state
     * beyond Spark's own thread-safe surfaces (memo caches, actions).
-    * One item's failure cancels the rest and rethrows its cause. */
+    * One item's failure cancels the queued and running rest (wasted
+    * cluster work, and leaked scratch dirs if left to finish in
+    * background threads) and rethrows its cause. */
   def concurrently[A, B](items: Seq[A])(f: A => B): Seq[B] =
     if (items.sizeIs <= 1) items.map(f)
     else {
@@ -173,25 +198,5 @@ object Materialize {
     * way); results are identical to sequential per-frame calls
     * (Round6Spec asserts row equality; Round5Spec's strategy-equality
     * contract covers [[frame]] itself). */
-  def frames(dfs: Seq[DataFrame]): Seq[DataFrame] =
-    if (dfs.sizeIs <= 1) dfs.map(frame)
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(dfs.size, 8))
-      try {
-        val futures = dfs.map(df => pool.submit(
-          new java.util.concurrent.Callable[DataFrame] { def call(): DataFrame = frame(df) }))
-        try futures.map(_.get())
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            // one frame failed: the whole unit fails, so sibling
-            // materializations are wasted cluster work — cancel the
-            // queued ones and interrupt the running ones instead of
-            // letting them finish (and leak scratch dirs) in
-            // background threads after the failure propagates
-            futures.foreach(_.cancel(true))
-            pool.shutdownNow()
-            throw e.getCause
-        }
-      } finally pool.shutdown()
-    }
+  def frames(dfs: Seq[DataFrame]): Seq[DataFrame] = concurrently(dfs)(frame)
 }

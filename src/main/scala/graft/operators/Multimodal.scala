@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.SessionMemo
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -335,7 +336,7 @@ object Multimodal {
   private[graft] def d6Assets(docs: DataFrame, maxHamming: Int = PhashMaxHamming,
       bucketCap: Int = Dedup.BucketCap): DataFrame =
     if (maxHamming == PhashMaxHamming && bucketCap == Dedup.BucketCap)
-      CorpusPrep.memo("d6_assets", docs)(
+      SessionMemo.frame("d6_assets", docs)(
         Materialize.frame(d6AssetsBuild(docs, maxHamming, bucketCap)))
     else d6AssetsBuild(docs, maxHamming, bucketCap)
 

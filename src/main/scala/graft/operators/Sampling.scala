@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.SessionMemo
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -260,7 +261,7 @@ object Sampling {
     // memoized per (vintage plan, geometry): c98's manifest and c101's
     // live leg aggregate the SAME doc-grain assignment — one
     // funnel-join + split window chain per session, not one per query
-    graft.operators.CorpusPrep.memo(s"manifest_assign_${budget}_$shards", docs)(
+    SessionMemo.frame(s"manifest_assign_${budget}_$shards", docs)(
       Materialize.frame {
         val keeps = graft.operators.TextAnalysis.funnelDecisions(docs)
           .filter(col("stage") === "keep").select("doc_id")
@@ -284,7 +285,7 @@ object Sampling {
     * its stored manifest — never by recomputing the base vintage. */
   private def manifestV1Artifact(spark: org.apache.spark.sql.SparkSession,
       dir: String, budget: Long, shards: Int): String = {
-    val root = graft.streaming.StoreMemo.memo(spark,
+    val root = SessionMemo.store(spark,
         s"c98_manifest_v1_${dir}_${budget}_$shards") { root =>
       manifestAssign(spark, dir,
           graft.sources.Tables.documents(spark, dir)
@@ -329,7 +330,7 @@ object Sampling {
     * Shape: ONE live manifest assignment (c98's plan) + a stored-
     * artifact scan + one doc-grain full-outer join + a report-sized
     * aggregate — the r10 verdict's "one funnel chain instead of two";
-    * the artifact build is a once-per-session store cost (StoreMemo),
+    * the artifact build is a once-per-session store cost (SessionMemo.store),
     * exactly like the index/tokenizer/classifier tiers. */
   def c101ManifestDiff(spark: org.apache.spark.sql.SparkSession, dir: String,
       budget: Long = DefaultTokenBudget, shards: Int = PackShards): DataFrame = {
@@ -774,7 +775,7 @@ object Sampling {
     // memoized per (vintage plan, geometry): the kept-set schedule is
     // read by the c105 keyed report AND the c111 pack build — one
     // funnel-join + two-window chain per session
-    graft.operators.CorpusPrep.memo(s"keeps_sched_${seed}_${shards}_$bins", docs)(
+    SessionMemo.frame(s"keeps_sched_${seed}_${shards}_$bins", docs)(
       Materialize.frame {
         val keeps = graft.operators.TextAnalysis.funnelDecisions(docs)
           .filter(col("stage") === "keep").select("doc_id")
@@ -801,13 +802,13 @@ object Sampling {
     // (c111 itself, c117's epochs, c120's index, c130's taint, c146's
     // masks, c152's budget) — memoized at the driver-checked geometry
     // so the funnel+schedule+window chain runs once per (session,
-    // corpus), CorpusPrep's standing discipline. Off-default
+    // corpus), the session memo's standing discipline. Off-default
     // geometries (specs, sweeps) build direct. The frame carries its
     // own total ORDER BY (shard, pos) from packBySchedule.
     val docs = graft.sources.Tables.documents(spark, dir)
     def build = keepsPackOver(spark, dir, docs, budget, seed, shards)
     if (budget == DefaultTokenBudget && seed == ShuffleSeed && shards == ShuffleShards)
-      CorpusPrep.memo("c111_keeps_pack", docs)(Materialize.frame(build))
+      SessionMemo.frame("c111_keeps_pack", docs)(Materialize.frame(build))
     else build
   }
 
@@ -852,7 +853,7 @@ object Sampling {
       dir: String,
       bins: Int = graft.operators.TextAnalysis.QualityBins): DataFrame = {
     val docs = graft.sources.Tables.documents(spark, dir)
-    val cutsRoot = graft.streaming.StoreMemo.memo(spark, s"c129_cuts_$dir") { r =>
+    val cutsRoot = SessionMemo.store(spark, s"c129_cuts_$dir") { r =>
       val v1 = docs.filter(Dedup.isBaseDoc(col("doc_id")))
       val v1kept = v1.join(
         graft.operators.TextAnalysis.funnelDecisions(v1)
@@ -933,7 +934,7 @@ object Sampling {
     * base vintage's funnel + packing. */
   private[graft] def seqManifestV1Artifact(spark: org.apache.spark.sql.SparkSession,
       dir: String, budget: Long, seed: Long, shards: Int): String = {
-    val root = graft.streaming.StoreMemo.memo(spark,
+    val root = SessionMemo.store(spark,
         s"c127_seqv1_${dir}_${budget}_${seed}_$shards") { root =>
       seqChecksumOver(keepsPackOver(spark, dir,
           graft.sources.Tables.documents(spark, dir)
@@ -983,7 +984,7 @@ object Sampling {
     * BOTH vintages; the base leg is now c101's artifact pattern at
     * sequence grain), one full-outer join over report-sized sequence
     * rows. The artifact build is a once-per-session store cost
-    * (StoreMemo), like the index/tokenizer/classifier tiers. */
+    * (SessionMemo.store), like the index/tokenizer/classifier tiers. */
   def c127SeqVintageDiff(spark: org.apache.spark.sql.SparkSession, dir: String,
       budget: Long = DefaultTokenBudget, seed: Long = ShuffleSeed,
       shards: Int = ShuffleShards): DataFrame = {

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.SessionMemo
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFns
@@ -374,7 +375,7 @@ object Similarity {
   private def doubleVecs(emb: DataFrame): DataFrame =
     emb.select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
 
-  /** Session-memoized TRAINED index artifacts — the CorpusPrep
+  /** Session-memoized TRAINED index artifacts — the session-memo
     * discipline at the index tier (the r9 verdict's "a production
     * index trains once, stores its artifacts, and serves many
     * times"): each trainer runs once per (session, corpus plan)
@@ -385,10 +386,10 @@ object Similarity {
     * own entry; the trainers' fixed-point determinism means a memo
     * hit is indistinguishable from a re-run. */
   private def trainedCentFrame(emb: DataFrame): DataFrame =
-    CorpusPrep.memo("pq_cent_trained", emb)(trainCentroidsQuantized(emb))
+    SessionMemo.frame("pq_cent_trained", emb)(trainCentroidsQuantized(emb))
 
   private def trainedBooksOver(vecs: DataFrame): DataFrame =
-    CorpusPrep.memo("pq_books", vecs)(trainPqCodebooks(vecs))
+    SessionMemo.frame("pq_books", vecs)(trainPqCodebooks(vecs))
 
   /** Collect a trained codebook frame (m, k, csub) into the [m][k][i]
     * serving layout — M·K rows, bounded by construction. */
@@ -1343,7 +1344,7 @@ object Similarity {
       nQueries: Int = DefaultQueryCount, topK: Int = PqTopK,
       nprobe: Int = DefaultNProbe): DataFrame = {
     val emb = graft.sources.Tables.embeddings(spark, dir)
-    val root = graft.streaming.StoreMemo.memo(spark, s"c79_index_$dir")(
+    val root = SessionMemo.store(spark, s"c79_index_$dir")(
       buildIndexArtifacts(emb, _))
     serveStoredIndex(spark, emb, root, nQueries, topK, nprobe)
   }
@@ -1380,9 +1381,9 @@ object Similarity {
       nQueries: Int = DefaultQueryCount, topK: Int = PqTopK,
       nprobe: Int = DefaultNProbe, label: Long = FilterLabel): DataFrame = {
     val emb = graft.sources.Tables.embeddings(spark, dir)
-    val root = graft.streaming.StoreMemo.memo(spark, s"c79_index_$dir")(
+    val root = SessionMemo.store(spark, s"c79_index_$dir")(
       buildIndexArtifacts(emb, _))
-    val attrRoot = graft.streaming.StoreMemo.memo(spark, s"c131_attr_$dir") { r =>
+    val attrRoot = SessionMemo.store(spark, s"c131_attr_$dir") { r =>
       spark.read.parquet(s"$root/codes")
         .join(emb.select(col("vec_id"), col("label")), Seq("vec_id"))
         .write.mode("overwrite").parquet(s"$r/codes_attr")
@@ -1410,7 +1411,7 @@ object Similarity {
     * codes-scan projection, shared by c144 and its spec recount. */
   private[graft] def storedAssignment(spark: SparkSession, dir: String): DataFrame = {
     val emb = graft.sources.Tables.embeddings(spark, dir)
-    val root = graft.streaming.StoreMemo.memo(spark, s"c79_index_$dir")(
+    val root = SessionMemo.store(spark, s"c79_index_$dir")(
       buildIndexArtifacts(emb, _))
     spark.read.parquet(s"$root/codes")
       .select(col("vec_id").as("doc_id"), col("cluster"))
@@ -1649,7 +1650,7 @@ object Similarity {
     * sketch consumer. */
   private[graft] def sketchArtifact(spark: SparkSession, dir: String): String = {
     val emb = graft.sources.Tables.embeddings(spark, dir)
-    graft.streaming.StoreMemo.memo(spark, s"c151_sketch_$dir") { r =>
+    SessionMemo.store(spark, s"c151_sketch_$dir") { r =>
       jlProjected(emb).select(col("vec_id"), col("p"))
         .write.mode("overwrite").parquet(s"$r/sketch")
       import spark.implicits._
@@ -1696,7 +1697,7 @@ object Similarity {
   private def sketchCandidates(spark: SparkSession, dir: String,
       nQueries: Int, depth: Int): DataFrame = {
     val emb = graft.sources.Tables.embeddings(spark, dir)
-    CorpusPrep.memo(s"sketch_cand_${nQueries}_$depth", emb)(Materialize.frame {
+    SessionMemo.frame(s"sketch_cand_${nQueries}_$depth", emb)(Materialize.frame {
       import org.apache.spark.sql.expressions.Window
       val root = sketchArtifact(spark, dir)
       // single-file artifact: spread so the |vecs|x|Q| stage-1 scoring
@@ -1769,7 +1770,7 @@ object Similarity {
       depth: Int = RerankDepth): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val emb = graft.sources.Tables.embeddings(spark, dir)
-    val idxRoot = graft.streaming.StoreMemo.memo(spark, s"c79_index_$dir")(
+    val idxRoot = SessionMemo.store(spark, s"c79_index_$dir")(
       buildIndexArtifacts(emb, _))
     // stage 1 is c158's memoized candidate frame — the one sketch
     // scoring pass per session serves both rerank modes
@@ -1905,7 +1906,7 @@ object Similarity {
       nQueries: Int = DefaultQueryCount, topK: Int = PqTopK): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val emb = graft.sources.Tables.embeddings(spark, dir)
-    val root = graft.streaming.StoreMemo.memo(spark, s"c79_index_$dir")(
+    val root = SessionMemo.store(spark, s"c79_index_$dir")(
       buildIndexArtifacts(emb, _))
     val dims = PqSubspaces * PqSubDim
     val (rBooks, centLocal, centNorm) = loadArtifacts(spark, root)
@@ -2083,18 +2084,12 @@ object Similarity {
   /** Load a stored index root's (codebooks, centroids, norms) — the
     * bounded artifact pull the serve/append paths share. */
   // collected artifacts are BOUNDED (K codebook cells, k centroids)
-  // and immutable for a store root's lifetime — cache the collected
-  // arrays per (application, root) so the seven serving consumers
-  // pay the two collect jobs once per session, not once per query.
-  // Keys are strings (the quotaPlanCache lesson): no session object
-  // is pinned, stale entries are a few KB of doubles.
-  private val artifactCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), (Array[Array[Array[Double]]], Array[Array[Double]], Array[Double])]
-  graft.streaming.StoreMemo.registerInvalidateHook(() => artifactCache.clear())
-
+  // and immutable for a store root's lifetime — memoized per
+  // (session, root) so the seven serving consumers pay the two
+  // collect jobs once per session, not once per query.
   private def loadArtifacts(spark: SparkSession, root: String)
       : (Array[Array[Array[Double]]], Array[Array[Double]], Array[Double]) =
-    artifactCache.getOrElseUpdate((spark.sparkContext.applicationId, root), {
+    SessionMemo(spark, s"artifacts:$root") {
       val rBooks = collectBooks(spark.read.parquet(s"$root/codebooks"))
       val centRows = spark.read.parquet(s"$root/centroids")
         .select(col("c_id"), col("c_emb")).collect()
@@ -2104,7 +2099,7 @@ object Similarity {
         s"stored centroid ids not the dense prefix: ${centRows.map(_._1).mkString(",")}")
       val centLocal = centRows.map(_._2)
       (rBooks, centLocal, centLocal.map(c => math.sqrt(dot64(c, c))))
-    })
+    }
 
   /** The base/delta boundary for the incremental index (c81):
     * vectors below the boundary are always base (the seed prefix and
@@ -2136,7 +2131,7 @@ object Similarity {
       nQueries: Int = DefaultQueryCount, topK: Int = PqTopK,
       nprobe: Int = DefaultNProbe): DataFrame = {
     val emb = graft.sources.Tables.embeddings(spark, dir)
-    val root = graft.streaming.StoreMemo.memo(spark, s"c81_index_$dir") { r =>
+    val root = SessionMemo.store(spark, s"c81_index_$dir") { r =>
       buildIndexArtifacts(emb.filter(isBaseVec(col("vec_id"))), r)
       val (rBooks, centLocal, centNorm) = loadArtifacts(spark, r)
       encodeWithArtifacts(emb.filter(!isBaseVec(col("vec_id"))),
@@ -2193,7 +2188,7 @@ object Similarity {
     * consumers against it. */
   private[graft] def churnedIndexRoot(spark: SparkSession, emb: DataFrame,
       dir: String): String =
-    graft.streaming.StoreMemo.memo(spark, s"c82_index_$dir") { r =>
+    SessionMemo.store(spark, s"c82_index_$dir") { r =>
       buildIndexArtifacts(emb, r) // v1: the pre-churn index
       val (rBooks, centLocal, centNorm) = loadArtifacts(spark, r)
       val v1 = spark.read.parquet(s"$r/codes")
@@ -2242,7 +2237,7 @@ object Similarity {
     // session. A bounded consumer's vecFilter lands on the memoized
     // blocks' vec_id column — identical rows to filtering both scan
     // sides (vec_id is the join key), without a second kernel pass.
-    val perVec = CorpusPrep.memo("churned_pvec_err", emb)(Materialize.frame {
+    val perVec = SessionMemo.frame("churned_pvec_err", emb)(Materialize.frame {
       val root = churnedIndexRoot(spark, emb, dir)
       val (rBooks, centLocal, _) = loadArtifacts(spark, root)
       val bc = spark.sparkContext.broadcast((rBooks, centLocal))
@@ -2279,7 +2274,7 @@ object Similarity {
     * ratio join and c138's router (via c133). */
   private def healthFrame(spark: SparkSession, dir: String): DataFrame = {
     val emb = graft.sources.Tables.embeddings(spark, dir)
-    CorpusPrep.memo("c87_health", emb)(Materialize.frame(
+    SessionMemo.frame("c87_health", emb)(Materialize.frame(
       churnedPerVecErr(spark, dir)
         .withColumn("upd", isUpdatedVec(col("vec_id")))
         .groupBy("cluster")
@@ -2331,7 +2326,7 @@ object Similarity {
     // memoized (|Q| rows): c133's keyed report and c138's router both
     // read it — the router's flagged-id collect becomes a bounded
     // block read instead of a re-derivation of the ratio join
-    CorpusPrep.memo(s"c133_ood_$nQueries", emb)(Materialize.frame {
+    SessionMemo.frame(s"c133_ood_$nQueries", emb)(Materialize.frame {
       val qErr = churnedPerVecErr(spark, dir,
         vecFilter = Some(col("vec_id") < nQueries))
       val health = healthFrame(spark, dir).select("cluster", "mean_qerr")
@@ -2445,7 +2440,7 @@ object Similarity {
   private[graft] def c122RepairRoot(spark: SparkSession, dir: String): String = {
     val emb = graft.sources.Tables.embeddings(spark, dir)
     val root = churnedIndexRoot(spark, emb, dir)
-    graft.streaming.StoreMemo.memo(spark, s"c122_repair_$dir") { r =>
+    SessionMemo.store(spark, s"c122_repair_$dir") { r =>
       val repair = c87IndexHealth(spark, dir)
         .filter(col("degraded") && col("n_vecs") >= PqCodebookK)
         .select(col("cluster"))
@@ -2708,7 +2703,7 @@ object Similarity {
     // per consumer per call. The memo key is the ranked PLAN's
     // semantic hash, so different corpora/query sets/k never collide;
     // the frame is |Q|·k rows at any corpus size.
-    CorpusPrep.memo(s"c6_exact_$k", ranked)(Materialize.frame(ranked))
+    SessionMemo.frame(s"c6_exact_$k", ranked)(Materialize.frame(ranked))
       .orderBy(col("q_id"), col("rank"))
   }
 
@@ -3074,28 +3069,36 @@ object Similarity {
     // plan (a cheap, already-memoized loader frame), NOT the leg's
     // own plan: building the serve plan collects the query vectors
     // (a driver job), which a memo hit must not pay.
-    CorpusPrep.memo(s"c118_dense_${depth}_$nprobe", emb)(Materialize.frame {
-      import org.apache.spark.sql.expressions.Window
-      // ONE index per (session, corpus): c79's artifact, shared — a
-      // deployment maintains one index and runs many consumers on it
-      val root = graft.streaming.StoreMemo.memo(spark, s"c79_index_$dir")(
-        buildIndexArtifacts(emb, _))
-      val qPred = col("vec_id") % 101 === 0 && col("vec_id") < RrfQueryBound
-      val cand = serveStoredIndex(spark, emb, root, nQueries = 0, topK = depth,
-          nprobe = nprobe, queryFilter = Some(qPred),
-          candFilter = Some(col("vec_id") % 101 =!= 0))
-        .select(col("q_id"), col("vec_id"), col("rank").as("adc_rank"))
-      val q = withNorm(emb).filter(qPred)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-          col("nrm").as("q_nrm"))
-      val wSem = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id"))
-      withNorm(emb)
-        .join(broadcast(cand), Seq("vec_id"))
-        .join(broadcast(q), Seq("q_id"))
-        .select(col("q_id"), col("vec_id"), col("adc_rank"),
-          pairCos("q_emb", "q_nrm", "embedding", "nrm").as("cos"))
-        .withColumn("sem_rank", row_number().over(wSem).cast("long"))
-    })
+    SessionMemo.frame(s"c118_dense_${depth}_$nprobe", emb)(
+      Materialize.frame(storedDenseRanked(spark, dir, depth, nprobe)))
+  }
+
+  /** The dense leg's producer plan (pre-memo) — kept separate so the
+    * plan-shape pin checks the codes scan itself (the memoized
+    * consumer read is a checkpoint scan with no index read left in
+    * it), as [[c6RankedTopK]] does for c6. */
+  private[graft] def storedDenseRanked(spark: SparkSession, dir: String,
+      depth: Int = RerankDepth, nprobe: Int = DefaultNProbe): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val emb = graft.sources.Tables.embeddings(spark, dir)
+    // ONE index per (session, corpus): c79's artifact, shared — a
+    // deployment maintains one index and runs many consumers on it
+    val root = SessionMemo.store(spark, s"c79_index_$dir")(buildIndexArtifacts(emb, _))
+    val qPred = col("vec_id") % 101 === 0 && col("vec_id") < RrfQueryBound
+    val cand = serveStoredIndex(spark, emb, root, nQueries = 0, topK = depth,
+        nprobe = nprobe, queryFilter = Some(qPred),
+        candFilter = Some(col("vec_id") % 101 =!= 0))
+      .select(col("q_id"), col("vec_id"), col("rank").as("adc_rank"))
+    val q = withNorm(emb).filter(qPred)
+      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
+        col("nrm").as("q_nrm"))
+    val wSem = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id"))
+    withNorm(emb)
+      .join(broadcast(cand), Seq("vec_id"))
+      .join(broadcast(q), Seq("q_id"))
+      .select(col("q_id"), col("vec_id"), col("adc_rank"),
+        pairCos("q_emb", "q_nrm", "embedding", "nrm").as("cos"))
+      .withColumn("sem_rank", row_number().over(wSem).cast("long"))
   }
 
   // ---- c113: two-stage PQ serve + exact re-rank ------------------------

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.SessionMemo
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.TextFns
@@ -831,7 +832,7 @@ object TextAnalysis {
     * so the build needs zero shuffles and the materialized frame is
     * distinct-bigram-sized, not token-sized. */
   private def bigramCounts(docs: DataFrame): DataFrame =
-    CorpusPrep.memo("bigram_counts", docs)(Materialize.frame(bigramCountsKernel(docs)))
+    SessionMemo.frame("bigram_counts", docs)(Materialize.frame(bigramCountsKernel(docs)))
 
   /** c19: corpus n-gram statistics — top-k word bigrams by total
     * occurrences with document frequency: the vocabulary/phrase
@@ -865,7 +866,7 @@ object TextAnalysis {
     * doesn't. */
   def c20Contamination(docs: DataFrame, k: Int = 50): DataFrame = {
     // shingle keys off the SHARED materialized corpus-prep frame
-    // (CorpusPrep via Dedup) — the typed kernel runs once per
+    // (SessionMemo via Dedup) — the typed kernel runs once per
     // (session, corpus), not once per query or per consuming subtree;
     // both branches below explode the already-materialized sets.
     val sh = Dedup.docShingles8(docs)
@@ -1154,7 +1155,7 @@ object TextAnalysis {
     // materialized once: the sizes aggregate and BOTH self-join sides
     // read it (3 consumers — without the checkpoint the whole winnow
     // chain would run three times)
-    val fpk = CorpusPrep.memo("c69_fp", docs)(Materialize.frame {
+    val fpk = SessionMemo.frame("c69_fp", docs)(Materialize.frame {
       val fpRows = winnowMins(docs)
         .select(col("doc_id"), explode(array_distinct(col("mins"))).as("fp"))
         // a <3-word doc has no shingles and its minima collapse to
@@ -1197,7 +1198,7 @@ object TextAnalysis {
     // (jacAtLeast's discipline; the re-sort after the memo read is a
     // k-row job)
     if (dfCap == Dedup.DfCap && bar == WinnowPairBar && k == 50)
-      CorpusPrep.memo("c69_pairs", docs)(Materialize.frame(pairs()))
+      SessionMemo.frame("c69_pairs", docs)(Materialize.frame(pairs()))
         .orderBy(col("containment").desc, col("doc_a"), col("doc_b"))
     else pairs()
   }
@@ -1237,7 +1238,7 @@ object TextAnalysis {
     // deeper: the r14 profile ask), so repeat reads price as a tiny
     // scan instead of re-deriving the candidate-subset span chain
     val memoized = if (dfCap == Dedup.DfCap && bar == WinnowPairBar)
-      CorpusPrep.memo("c74_spans", docs)(Materialize.frame(spans()))
+      SessionMemo.frame("c74_spans", docs)(Materialize.frame(spans()))
     else spans()
     memoized.orderBy("doc_a", "doc_b", "a_start", "b_start")
   }
@@ -1497,11 +1498,11 @@ object TextAnalysis {
     * the shingle+rank corpus pass runs once per session. Streaming
     * batch paths (the register doors) keep their direct per-batch
     * derivations — a memo keyed on transient micro-batch plans would
-    * only leak entries (CorpusPrep's standing caveat). NULL m_base =
+    * only leak entries (the session memo's standing caveat). NULL m_base =
     * the group had no base-vintage item, exactly the groups the
     * two-pass spelling's base table lacked. */
   private[graft] def sourceRegistersFused(docs: DataFrame): DataFrame =
-    CorpusPrep.memo("hll_src_regs", docs)(Materialize.frame(
+    SessionMemo.frame("hll_src_regs", docs)(Materialize.frame(
       hllRanks(Dedup.docShingles8(docs))
         .join(docs.select(col("doc_id"), col("source")), Seq("doc_id"))
         .withColumn("is_base", graft.operators.Dedup.isBaseDoc(col("doc_id")))
@@ -1808,7 +1809,7 @@ object TextAnalysis {
     // blocks instead of re-running the doc-grain and term-grain
     // aggregates per call (the r14 c109 profile: the leg's warm cost
     // was these rebuilds, not the fusion)
-    val dl = CorpusPrep.memo("bm25_dl", corpusTf)(Materialize.frame(
+    val dl = SessionMemo.frame("bm25_dl", corpusTf)(Materialize.frame(
       corpusTf.groupBy("doc_id").agg(sum(col("tf")).as("dl"))))
     // avgdl = exact-long sum / exact-long count: both engines divide
     // the same two integers, so the double is bit-identical with no
@@ -1817,7 +1818,7 @@ object TextAnalysis {
     val stats = dl.agg(
       (sum(col("dl")).cast("double") / count(lit(1))).as("avgdl"),
       count(lit(1)).as("n_docs"))
-    val dfCapped = CorpusPrep.memo("bm25_df", corpusTf)(Materialize.frame(
+    val dfCapped = SessionMemo.frame("bm25_df", corpusTf)(Materialize.frame(
         corpusTf.groupBy("term").agg(count(lit(1)).as("df"))))
       .crossJoin(broadcast(stats))
       .filter(col("df") * 10 <= col("n_docs") * 9)
@@ -1834,7 +1835,7 @@ object TextAnalysis {
       .filter(col("prank") <= cap)
       .drop("prank")
     val postings = if (postingCap == Bm25PostingCap)
-      CorpusPrep.memo("bm25_postings", corpusTf)(Materialize.frame(prune(postingCap)))
+      SessionMemo.frame("bm25_postings", corpusTf)(Materialize.frame(prune(postingCap)))
     else prune(postingCap)
     val scored = queries.join(postings, Seq("term"))
       .join(dfCapped, Seq("term"))
@@ -1857,7 +1858,7 @@ object TextAnalysis {
     // and every consumer reads the |Q|·topK frame back. The memo key
     // is the ranked plan's semantic hash (cap/topK/bound are literals
     // in it), so dial probes never collide.
-    CorpusPrep.memo("bm25_ranked", ranked)(Materialize.frame(ranked))
+    SessionMemo.frame("bm25_ranked", ranked)(Materialize.frame(ranked))
       .orderBy("q_id", "rank")
   }
 
@@ -1934,7 +1935,7 @@ object TextAnalysis {
   def c140Bm25Stored(spark: org.apache.spark.sql.SparkSession, dir: String,
       postingCap: Int = Bm25PostingCap, topK: Int = Bm25TopK): DataFrame = {
     val docs = graft.sources.Tables.documents(spark, dir)
-    val root = graft.streaming.StoreMemo.memo(spark, s"c140_lex_$dir") { r =>
+    val root = SessionMemo.store(spark, s"c140_lex_$dir") { r =>
       writeLexArtifacts(tfRows(docs).filter(col("doc_id") % 101 =!= 0),
         r, "", postingCap)
     }
@@ -1959,7 +1960,7 @@ object TextAnalysis {
       postingCap: Int = Bm25PostingCap, topK: Int = Bm25TopK): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val docs = graft.sources.Tables.documents(spark, dir)
-    val root = graft.streaming.StoreMemo.memo(spark, s"c141_lex_$dir")(
+    val root = SessionMemo.store(spark, s"c141_lex_$dir")(
       buildLexAppend(spark, tfRows(docs).filter(col("doc_id") % 101 =!= 0),
         _, postingCap))
     bm25ServeStored(spark, root, docs, "_v2", topK)
@@ -2012,7 +2013,7 @@ object TextAnalysis {
     * start from the same tokenize + (doc, term) count, so inside a
     * multi-query session the corpus is tokenized once. */
   private[operators] def tfRows(docs: DataFrame): DataFrame =
-    CorpusPrep.memo("tf_rows", docs)(Materialize.frame(tfRowsDirect(docs)))
+    SessionMemo.frame("tf_rows", docs)(Materialize.frame(tfRowsDirect(docs)))
 
   /** The tokenize + (doc, term) count WITHOUT the corpus memo — the
     * one spelling [[tfRows]] memoizes, exposed for batch-grain
@@ -2833,7 +2834,7 @@ object TextAnalysis {
     // doc_id, so the keyed read and every re-aggregating consumer see
     // identical rows.
     val docs = graft.sources.Tables.documents(spark, dir)
-    CorpusPrep.memo(s"c83_encode_$nMerges", docs)(Materialize.frame(
+    SessionMemo.frame(s"c83_encode_$nMerges", docs)(Materialize.frame(
       encodeUnderMerges(docs, storedMerges(spark, dir, nMerges))))
   }
 
@@ -2843,7 +2844,7 @@ object TextAnalysis {
   private[graft] def storedMerges(spark: org.apache.spark.sql.SparkSession,
       dir: String, nMerges: Int = BpeMerges): Array[(String, String)] = {
     val docs = graft.sources.Tables.documents(spark, dir)
-    val root = graft.streaming.StoreMemo.memo(spark, s"c83_tokenizer_$dir") { r =>
+    val root = SessionMemo.store(spark, s"c83_tokenizer_$dir") { r =>
       c75BpeTrain(docs, nMerges)
         .write.mode("overwrite").parquet(s"$r/merges")
     }
@@ -3060,7 +3061,7 @@ object TextAnalysis {
     // (session, corpus) instead of one per query. Doc-grain narrow
     // rows (doc_id, stage); consumers aggregate or join, none depends
     // on this frame's row order.
-    CorpusPrep.memo("funnel_decisions", docs)(Materialize.frame(
+    SessionMemo.frame("funnel_decisions", docs)(Materialize.frame(
       funnelStages(docs,
         docs.filter(col("doc_id") % 97 =!= 0)
           .select(col("doc_id"), md5(col("text")).as("h"),
@@ -3140,7 +3141,7 @@ object TextAnalysis {
     // it so the span chain below gets a STABLE memo key (a per-call
     // localCheckpoint plan would miss c34's span memo every call and
     // leak one dead entry per run)
-    val kept = CorpusPrep.memo("funnel_kept_docs", docs)(
+    val kept = SessionMemo.frame("funnel_kept_docs", docs)(
       Materialize.frame(docs.join(keeps, Seq("doc_id"))))
     val tok = graft.operators.Sampling.storedTokCounts(spark, dir)
     val ws = kept.select(col("doc_id"),
@@ -3342,7 +3343,7 @@ object TextAnalysis {
     * Materialized once per (session, corpus): the trainer re-scans a
     * doc-grain frame of 7 narrow columns per step, never the corpus. */
   private def qcTrainFrame(docs: DataFrame): DataFrame =
-    CorpusPrep.memo("qc_train", docs)(Materialize.frame(
+    SessionMemo.frame("qc_train", docs)(Materialize.frame(
       qcFeaturesFrom(qcSignals(docs))
         .join(gopherFrame(docs).select(col("doc_id"), col("keep").cast("double").as("y")),
           Seq("doc_id"))))
@@ -3452,7 +3453,7 @@ object TextAnalysis {
     * w_e6). c88 reads the trajectory, c89 serves off the weights. */
   private def classifierRoot(spark: org.apache.spark.sql.SparkSession,
       docs: DataFrame, dir: String): String =
-    graft.streaming.StoreMemo.memo(spark, s"c88_classifier_$dir") { r =>
+    SessionMemo.store(spark, s"c88_classifier_$dir") { r =>
       val (traj, wE6) = trainQualityClassifier(docs)
       import spark.implicits._
       traj.toDF("step", "w0_e6", "w1_e6", "w2_e6", "w3_e6", "w4_e6", "w5_e6",
@@ -3558,7 +3559,7 @@ object TextAnalysis {
     // teacher's (same dedup/contam stages, classifier verdicts for
     // the quality leg) — c90's report is then two memo reads + one
     // doc-grain join
-    val student = CorpusPrep.memo("c90_student_funnel", docs)(Materialize.frame(
+    val student = SessionMemo.frame("c90_student_funnel", docs)(Materialize.frame(
         funnelDecisionsFrom(docs, studentReasons)))
       .select(col("doc_id"), col("stage").as("student_stage"))
     shareOfTotal(
@@ -3667,7 +3668,7 @@ object TextAnalysis {
     * were learned show up as a train/holdout compression gap; OOV
     * share bounds how much of the holdout the merge table can even
     * touch. Artifact discipline: the split-trained list persists
-    * under its own StoreMemo root (it is NOT c83's corpus-trained
+    * under its own SessionMemo.store root (it is NOT c83's corpus-trained
     * artifact — different training corpus, different model).
     *
     * Shape: trainer cost is c75's (vocabulary-grain loop over the
@@ -3679,7 +3680,7 @@ object TextAnalysis {
     val docs = graft.sources.Tables.documents(spark, dir)
     val bucket = conv(substring(md5(col("doc_id").cast("string")), 1, 7), 16, 10)
       .cast("long") % 100
-    val root = graft.streaming.StoreMemo.memo(spark, s"c92_tokenizer_$dir") { r =>
+    val root = SessionMemo.store(spark, s"c92_tokenizer_$dir") { r =>
       c75BpeTrain(docs.filter(bucket < Sampling.SplitTrainPct), nMerges)
         .write.mode("overwrite").parquet(s"$r/merges")
     }
@@ -3729,7 +3730,7 @@ object TextAnalysis {
     val docs = graft.sources.Tables.documents(spark, dir)
     val bucket = conv(substring(md5(col("doc_id").cast("string")), 1, 7), 16, 10)
       .cast("long") % 100
-    val vintageRoot = graft.streaming.StoreMemo.memo(spark, s"c97_vintage_$dir") { r =>
+    val vintageRoot = SessionMemo.store(spark, s"c97_vintage_$dir") { r =>
       val (_, wE6) = trainQualityClassifier(docs.filter(bucket < Sampling.SplitTrainPct))
       import spark.implicits._
       wE6.toSeq.zipWithIndex.map { case (v, i) => (i.toLong, v) }

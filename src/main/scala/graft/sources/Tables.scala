@@ -13,56 +13,11 @@ object Tables {
   // directory and re-reads footers for schema on EVERY call, which is
   // pure fixed cost when 50+ queries hit the same 10 tables in one
   // session. A DataFrame is an immutable logical plan — safe to share.
-  // Keyed by session so tests/Verify/Bench sessions don't cross-talk.
-  // Assumes immutable inputs (true for the test tables); mutated
-  // paths need `invalidate()`.
-  private val cache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  /** Drop every cached entry, or just the entries under one path —
-    * REQUIRED after rewriting files beneath a loaded path (the cached
-    * frame pins the old FileIndex listing + schema). Write paths in
-    * this repo target fresh output dirs, so nothing calls it on the
-    * hot path; it exists for callers that mutate inputs in place.
-    *
-    * Also evicts CorpusPrep's memoized kernel frames: they are
-    * DERIVED from these loads (localCheckpoint'd shingle/bigram
-    * passes), and their semantic-hash keys collide for same
-    * path+schema — without the cascade a caller following this
-    * method's contract would still be served stale corpus-prep
-    * blocks. CorpusPrep entries aren't keyed by path (they memoize
-    * arbitrary input plans), so the path-scoped form evicts them
-    * all — invalidation is a cold-path correctness hook, not a
-    * performance one. */
-  def invalidate(): Unit = {
-    cache.clear()
-    graft.operators.CorpusPrep.invalidate()
-  }
-  def invalidate(path: String): Unit = {
-    // exact file, or everything under a directory — a bare prefix
-    // would also evict siblings ("/data/sf1" must not match
-    // "/data/sf10/...")
-    val dir = if (path.endsWith("/")) path else path + "/"
-    cache.keys.foreach { k =>
-      if (k._2 == path || k._2.startsWith(dir)) cache.remove(k)
-    }
-    graft.operators.CorpusPrep.invalidate()
-  }
-
+  // A caller that rewrites files beneath a loaded path drops the
+  // session memo (`SessionMemo.invalidate()`).
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val key = (spark, s"$sfDir/$name.parquet")
-    cache.get(key) match {
-      case Some(df) => df // hit: one map lookup, no cache scan
-      case None =>
-        // prune entries pinning STOPPED sessions on the miss path only
-        // — otherwise a JVM that cycles sessions (test suites,
-        // long-lived services) accumulates unreclaimable plans +
-        // FileIndex listings forever
-        cache.keys.foreach { k =>
-          if (k._1.sparkContext.isStopped) cache.remove(k)
-        }
-        cache.getOrElseUpdate(key, spark.read.parquet(key._2))
-    }
+    val path = s"$sfDir/$name.parquet"
+    graft.SessionMemo(spark, s"table:$path")(spark.read.parquet(path))
   }
 
   /** Ensure a frame has enough partitions to parallelize a per-row
@@ -73,35 +28,16 @@ object Tables {
     * when the scan's split count is below the session's parallelism,
     * so it never adds a shuffle to an already-distributed input.
     *
-    * The split count is ESTIMATED with the same arithmetic Spark's
-    * FilePartition packing uses — maxSplitBytes =
-    * min(maxPartitionBytes, max(openCostInBytes, bytes/minPartitionNum))
-    * — instead of `df.rdd.getNumPartitions`, which forces a full
-    * physical-planning + RDD-conversion pass per kernel invocation.
-    * (Plain ceil(bytes/maxPartitionBytes) would miss the bytes-per-
-    * core term and shuffle any corpus under ~cores×128MB that Spark
-    * already plans as `cores` splits.) Non-file inputs (test frames)
-    * fall back to the repartition: harmless on small local data,
-    * unreachable for the parquet-backed operators. */
+    * The current width is `Materialize.plannedWidth` (no `df.rdd`
+    * planning pass per kernel invocation). Non-file inputs (test
+    * frames) read as narrow and get the repartition: harmless on
+    * small local data. */
   def parallelKernelInput(df: DataFrame, bytesPerTask: Long = 0L): DataFrame = {
     val spark = df.sparkSession
-    val conf = spark.sessionState.conf
-    val minPartitionNum = conf.filesMinPartitionNum
-      .getOrElse(spark.sparkContext.defaultParallelism)
-    val fileStats = df.queryExecution.analyzed.collect {
-      case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        r.relation match {
-          case f: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            val bytes = f.location.sizeInBytes
-            val bytesPerCore = bytes / math.max(1, minPartitionNum)
-            val maxSplit = math.max(1L, math.min(conf.filesMaxPartitionBytes,
-              math.max(conf.filesOpenCostInBytes, bytesPerCore)))
-            (bytes, (bytes + maxSplit - 1) / maxSplit)
-          case _ => (0L, 1L)
-        }
-    }
-    val planned = if (fileStats.isEmpty) 1L else fileStats.map(_._2).max
-    val totalBytes = fileStats.map(_._1).sum
+    val planned = graft.operators.Materialize.plannedWidth(df)
+    val totalBytes = df.queryExecution.analyzed.collectLeaves().collect {
+      case graft.operators.Materialize.FileScan(f) => f.location.sizeInBytes
+    }.sum
     // byte-aware width (optional): a spread whose CONSUMERS are plain
     // aggregates (the staging memo — its readers do ~no per-row work)
     // should not mint defaultParallelism near-empty blocks for a

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.SessionMemo
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -145,7 +146,7 @@ object BudgetStream {
       .select(col("doc_id"), col("text"))
       .filter(col("doc_id") % 97 =!= 0)
     val merges = TextAnalysis.storedMerges(spark, dir)
-    StoreMemo.memo(spark, s"budget_${dir}_$nBatches") { scratch =>
+    SessionMemo.store(spark, s"budget_${dir}_$nBatches") { scratch =>
       for (i <- 0 until nBatches)
         processBatch(pop.filter(pmod(col("doc_id"), lit(nBatches)) === i),
           merges, s"$scratch/decisions", s"$scratch/ledger", i.toLong)
@@ -157,33 +158,17 @@ object BudgetStream {
     * reports — floor(1000·√n/Σ√n) with the 6-rounded z — so the
     * door enforces the same mixture the repeat plan budgets);
     * quota = (budget · mille) div 1000, exact integers. Bounded
-    * collect (|sources| rows). */
-  /** Session cache for the bounded quota PLANS — a quota map is an
-    * artifact of the corpus vintage (the deployment computes it once
-    * per vintage and every door poll reads it), but the plan
-    * derivations (the stored-tokenizer mass rollup; c156's whole HLL
-    * novelty chain) were re-running on EVERY audit-store build, which
-    * charged each keyed door query for the planning job instead of
-    * the door. Same staleness contract as the store memos: anyone
-    * rewriting a corpus dir in place calls [[invalidateQuotaPlans]]
-    * beside the other invalidates. */
-  // keyed on applicationId (a string), NOT the SparkSession object —
-  // a session-keyed map would pin the last session (and its context)
-  // for the JVM's lifetime in a long-lived host process; stale
-  // string-keyed entries are just small Map[String,Long] values
-  private val quotaPlanCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String, String, Long), Map[String, Long]]
-
-  private[graft] def invalidateQuotaPlans(): Unit = quotaPlanCache.clear()
-
-  private def quotaPlan(spark: SparkSession, kind: String, dir: String,
-      budget: Long)(derive: => Map[String, Long]): Map[String, Long] =
-    quotaPlanCache.getOrElseUpdate(
-      (spark.sparkContext.applicationId, kind, dir, budget), derive)
-
+    * collect (|sources| rows).
+    *
+    * Quota plans are session-memoized: a quota map is an artifact of
+    * the corpus vintage (the deployment computes it once per vintage
+    * and every door poll reads it), but the plan derivations (the
+    * stored-tokenizer mass rollup; c156's whole HLL novelty chain)
+    * were re-running on EVERY audit-store build, which charged each
+    * keyed door query for the planning job instead of the door. */
   private[graft] def sourceQuotas(spark: SparkSession, dir: String,
       budget: Long = BudgetTokens): Map[String, Long] =
-    quotaPlan(spark, "volume", dir, budget) {
+    SessionMemo(spark, s"quota:volume_${dir}_$budget") {
       sourceQuotasDirect(spark, dir, budget)
     }
 
@@ -212,7 +197,7 @@ object BudgetStream {
     * bit-for-bit. Bounded collect (|sources| rows). */
   private[graft] def noveltyQuotas(spark: SparkSession, dir: String,
       budget: Long = BudgetTokens): Map[String, Long] =
-    quotaPlan(spark, "novelty", dir, budget) {
+    SessionMemo(spark, s"quota:novelty_${dir}_$budget") {
       noveltyQuotasDirect(spark, dir, budget)
     }
 
@@ -238,7 +223,7 @@ object BudgetStream {
       .filter(col("doc_id") % 97 =!= 0)
     val merges = TextAnalysis.storedMerges(spark, dir)
     val quotas = noveltyQuotas(spark, dir)
-    StoreMemo.memo(spark, s"nquota_${dir}_$nBatches") { scratch =>
+    SessionMemo.store(spark, s"nquota_${dir}_$nBatches") { scratch =>
       for (i <- 0 until nBatches)
         processQuotaBatch(pop.filter(pmod(col("doc_id"), lit(nBatches)) === i),
           merges, quotas, s"$scratch/decisions", s"$scratch/ledger", i.toLong)
@@ -325,7 +310,7 @@ object BudgetStream {
       .filter(col("doc_id") % 97 =!= 0)
     val merges = TextAnalysis.storedMerges(spark, dir)
     val quotas = sourceQuotas(spark, dir)
-    StoreMemo.memo(spark, s"quota_${dir}_$nBatches") { scratch =>
+    SessionMemo.store(spark, s"quota_${dir}_$nBatches") { scratch =>
       for (i <- 0 until nBatches)
         processQuotaBatch(pop.filter(pmod(col("doc_id"), lit(nBatches)) === i),
           merges, quotas, s"$scratch/decisions", s"$scratch/ledger", i.toLong)
@@ -489,7 +474,7 @@ object BudgetStream {
       .filter(col("doc_id") % 97 =!= 0)
     val merges = TextAnalysis.storedMerges(spark, dir)
     val quotas = noveltyQuotas(spark, dir)
-    StoreMemo.memo(spark, s"ndoor_${dir}_$nBatches") { scratch =>
+    SessionMemo.store(spark, s"ndoor_${dir}_$nBatches") { scratch =>
       for (i <- 0 until nBatches)
         processNoveltyDoorBatch(pop.filter(pmod(col("doc_id"), lit(nBatches)) === i),
           merges, quotas, s"$scratch/decisions", s"$scratch/ledger", i.toLong)
@@ -533,7 +518,7 @@ object BudgetStream {
       .filter(col("doc_id") % 97 =!= 0)
     val merges = TextAnalysis.storedMerges(spark, dir)
     val quotas = sourceQuotas(spark, dir)
-    StoreMemo.memo(spark, s"composed_${dir}_$nBatches") { scratch =>
+    SessionMemo.store(spark, s"composed_${dir}_$nBatches") { scratch =>
       for (i <- 0 until nBatches)
         processComposedBatch(pop.filter(pmod(col("doc_id"), lit(nBatches)) === i),
           merges, quotas, s"$scratch/decisions", s"$scratch/ledger", i.toLong)
@@ -708,7 +693,7 @@ object BudgetStream {
     val merges = TextAnalysis.storedMerges(spark, dir)
     val quotas = sourceQuotas(spark, dir)
     val cuts = graft.operators.Sampling.pinnedCuts(spark, dir)
-    StoreMemo.memo(spark, s"handoff_${dir}_$nBatches") { scratch =>
+    SessionMemo.store(spark, s"handoff_${dir}_$nBatches") { scratch =>
       for (i <- 0 until nBatches)
         processHandoffBatch(pop.filter(pmod(col("doc_id"), lit(nBatches)) === i),
           merges, quotas, cuts, scratch, i.toLong)
@@ -853,7 +838,7 @@ object BudgetStream {
     val pop = graft.sources.Tables.documents(spark, dir)
       .select(col("doc_id"), col("text"), col("source"))
       .filter(col("doc_id") % 97 =!= 0)
-    StoreMemo.memo(spark, s"regdoor_${dir}_$nBatches") { scratch =>
+    SessionMemo.store(spark, s"regdoor_${dir}_$nBatches") { scratch =>
       for (i <- 0 until nBatches)
         processRegisterBatch(pop.filter(pmod(col("doc_id"), lit(nBatches)) === i),
           scratch + "/registers", i.toLong)
@@ -898,7 +883,7 @@ object BudgetStream {
     * vintage); a zero-novelty source likewise. */
   private[graft] def logNoveltyQuotas(spark: SparkSession, dir: String,
       nBatches: Int, budget: Long = BudgetTokens): Map[String, Long] =
-    quotaPlan(spark, "lognovelty", dir, budget) {
+    SessionMemo(spark, s"quota:lognovelty_${dir}_${nBatches}_$budget") {
       logNoveltyQuotasFrom(
         spark.read
           .parquet(s"${registerDoorStores(spark, dir, nBatches)}/registers")
@@ -940,7 +925,7 @@ object BudgetStream {
       .filter(col("doc_id") % 97 =!= 0)
     val merges = TextAnalysis.storedMerges(spark, dir)
     val quotas = logNoveltyQuotas(spark, dir, nBatches)
-    StoreMemo.memo(spark, s"lnquota_${dir}_$nBatches") { scratch =>
+    SessionMemo.store(spark, s"lnquota_${dir}_$nBatches") { scratch =>
       for (i <- 0 until nBatches)
         processQuotaBatch(pop.filter(pmod(col("doc_id"), lit(nBatches)) === i),
           merges, quotas, s"$scratch/decisions", s"$scratch/ledger", i.toLong)
@@ -1067,7 +1052,7 @@ object BudgetStream {
     val pop = graft.sources.Tables.documents(spark, dir)
       .select(col("doc_id"), col("text"), col("source"))
       .filter(col("doc_id") % 97 =!= 0)
-    StoreMemo.memo(spark, s"cregdoor_${dir}_$nBatches") { scratch =>
+    SessionMemo.store(spark, s"cregdoor_${dir}_$nBatches") { scratch =>
       for (i <- 0 until nBatches)
         processChunkRegisterBatch(pop.filter(pmod(col("doc_id"), lit(nBatches)) === i),
           scratch + "/registers", i.toLong)
@@ -1198,7 +1183,7 @@ object BudgetStream {
     val pop = graft.sources.Tables.documents(spark, dir)
       .select(col("doc_id"), col("text"), col("source"))
       .filter(col("doc_id") % 97 =!= 0)
-    StoreMemo.memo(spark, s"histdoor_${dir}_$nBatches") { scratch =>
+    SessionMemo.store(spark, s"histdoor_${dir}_$nBatches") { scratch =>
       for (i <- 0 until nBatches)
         processHistBatch(pop.filter(pmod(col("doc_id"), lit(nBatches)) === i),
           scratch + "/bins", i.toLong)
@@ -1334,7 +1319,7 @@ object BudgetStream {
     val pop = graft.sources.Tables.documents(spark, dir)
       .select(col("doc_id"), col("text"), col("source"))
       .filter(col("doc_id") % 97 =!= 0)
-    StoreMemo.memo(spark, s"sampledoor_${dir}_$nBatches") { scratch =>
+    SessionMemo.store(spark, s"sampledoor_${dir}_$nBatches") { scratch =>
       for (i <- 0 until nBatches)
         processSampleBatch(pop.filter(pmod(col("doc_id"), lit(nBatches)) === i),
           scratch + "/sample", i.toLong)

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.SessionMemo
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -144,14 +145,14 @@ object EmbedDupStream {
     * connected components, keepers-win-clusters — so every (vec_id,
     * admitted, dup_of) row in the store is hash-checked against an
     * independent derivation of what the live gate SHOULD have
-    * accumulated. StoreMemo: one store build per (session, corpus,
+    * accumulated. SessionMemo.store: one store build per (session, corpus,
     * geometry). */
   def c84EmbedGateAudit(spark: SparkSession, dir: String,
       nBatches: Int = EmbedAuditBatches,
       threshold: Double = CosThreshold): DataFrame = {
     val vecs = graft.sources.Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"))
-    val scratch = StoreMemo.memo(spark, s"c84_embedgate_${dir}_$nBatches") { root =>
+    val scratch = SessionMemo.store(spark, s"c84_embedgate_${dir}_$nBatches") { root =>
       for (i <- 0 until nBatches) {
         val b = Materialize.frame(vecs.filter(pmod(col("vec_id"), lit(nBatches)) === i))
         val (decisions, bucketsB) = batchDecisions(b, s"$root/buckets", s"$root/keep", threshold)
@@ -356,7 +357,7 @@ object EmbedDupStream {
     val vecs = graft.sources.Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"))
     val band = Similarity.storedBand(spark, dir)
-    val scratch = StoreMemo.memo(spark, s"c157_sketchgate_${dir}_$nBatches") { root =>
+    val scratch = SessionMemo.store(spark, s"c157_sketchgate_${dir}_$nBatches") { root =>
       for (i <- 0 until nBatches) {
         val b = Materialize.frame(vecs.filter(pmod(col("vec_id"), lit(nBatches)) === i))
         val (decisions, bucketsB, sketches) = batchDecisions157(

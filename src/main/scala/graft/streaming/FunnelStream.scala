@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.SessionMemo
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -267,10 +268,10 @@ object FunnelStream {
     // (a deployment builds it once and broadcasts it for the life of
     // the stream — rebuilding it per audit invocation would charge
     // the audit for the gate's setup cost on every run)
-    val bits = graft.operators.CorpusPrep.memo("c67_bits", docs)(
+    val bits = SessionMemo.frame("c67_bits", docs)(
       TextAnalysis.bloomBitsFromKeys(
         TextAnalysis.docShingles8Direct(docs.filter(col("doc_id") % 97 === 0))))
-    StoreMemo.memo(spark, s"gate4_${dir}_$nBatches") { scratch =>
+    SessionMemo.store(spark, s"gate4_${dir}_$nBatches") { scratch =>
       for (i <- 0 until nBatches)
         processBatch4(pop.filter(pmod(col("doc_id"), lit(nBatches)) === i), bits,
           s"$scratch/decisions", s"$scratch/keep", s"$scratch/bands",
@@ -339,11 +340,11 @@ object FunnelStream {
     val docs = graft.sources.Tables.documents(spark, dir)
       .select(col("doc_id"), col("text"))
     val pop = docs.filter(col("doc_id") % 97 =!= 0)
-    val bits = graft.operators.CorpusPrep.memo("c67_bits", docs)(
+    val bits = SessionMemo.frame("c67_bits", docs)(
       TextAnalysis.bloomBitsFromKeys(
         TextAnalysis.docShingles8Direct(docs.filter(col("doc_id") % 97 === 0))))
     val wE6 = TextAnalysis.storedClassifierWeights(spark, dir)
-    StoreMemo.memo(spark, s"gateq_${dir}_$nBatches") { scratch =>
+    SessionMemo.store(spark, s"gateq_${dir}_$nBatches") { scratch =>
       for (i <- 0 until nBatches)
         processBatch(pop.filter(pmod(col("doc_id"), lit(nBatches)) === i), bits,
           s"$scratch/decisions", s"$scratch/keep", s"$scratch/bands",
@@ -404,10 +405,10 @@ object FunnelStream {
     val vecs = graft.sources.Tables.embeddings(spark, dir)
       .select(col("vec_id").as("doc_id"), col("embedding"))
     val pop = docs.filter(col("doc_id") % 97 =!= 0).join(vecs, Seq("doc_id"))
-    val bits = graft.operators.CorpusPrep.memo("c67_bits", docs)(
+    val bits = SessionMemo.frame("c67_bits", docs)(
       TextAnalysis.bloomBitsFromKeys(
         TextAnalysis.docShingles8Direct(docs.filter(col("doc_id") % 97 === 0))))
-    StoreMemo.memo(spark, s"gate5_${dir}_$nBatches") { scratch =>
+    SessionMemo.store(spark, s"gate5_${dir}_$nBatches") { scratch =>
       for (i <- 0 until nBatches)
         processBatch5(pop.filter(pmod(col("doc_id"), lit(nBatches)) === i), bits,
           s"$scratch/decisions", s"$scratch/keep", s"$scratch/bands",
@@ -430,11 +431,11 @@ object FunnelStream {
     val vecs = graft.sources.Tables.embeddings(spark, dir)
       .select(col("vec_id").as("doc_id"), col("embedding"))
     val pop = docs.filter(col("doc_id") % 97 =!= 0).join(vecs, Seq("doc_id"))
-    val bits = graft.operators.CorpusPrep.memo("c67_bits", docs)(
+    val bits = SessionMemo.frame("c67_bits", docs)(
       TextAnalysis.bloomBitsFromKeys(
         TextAnalysis.docShingles8Direct(docs.filter(col("doc_id") % 97 === 0))))
     val wE6 = TextAnalysis.storedClassifierWeights(spark, dir)
-    StoreMemo.memo(spark, s"gate5q_${dir}_$nBatches") { scratch =>
+    SessionMemo.store(spark, s"gate5q_${dir}_$nBatches") { scratch =>
       for (i <- 0 until nBatches)
         processBatch5(pop.filter(pmod(col("doc_id"), lit(nBatches)) === i), bits,
           s"$scratch/decisions", s"$scratch/keep", s"$scratch/bands",

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.SessionMemo
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -94,10 +95,10 @@ object SpanStream {
       occCap: Int = Dedup.SpanOccCap): DataFrame = {
     val docs = graft.sources.Tables.documents(spark, dir).select(col("doc_id"), col("text"))
     // ONE base-store accumulation per (session, corpus, geometry) —
-    // the StoreMemo discipline: a deployment's posting store is
+    // the session-memo discipline: a deployment's posting store is
     // accumulated once and probed many times, so only the DELTA probe
     // below is per-invocation cost (c56's marginal-cost claim)
-    val scratch = StoreMemo.memo(spark,
+    val scratch = SessionMemo.store(spark,
         s"c68_span_${dir}_${w}_${minSpan}_$occCap") { root =>
       val base = docs.filter(Dedup.isBaseDoc(col("doc_id")))
       // the base corpus lands as two overlapping-free polls in arrival
@@ -185,10 +186,10 @@ object SpanStream {
       minSpan: Int = Dedup.SpanMinTokens, occCap: Int = Dedup.SpanOccCap): DataFrame = {
     val docs = graft.sources.Tables.documents(spark, dir).select(col("doc_id"), col("text"))
     // ONE gate-history replay per (session, corpus, geometry) — the
-    // StoreMemo discipline: the accumulated span store is the gate's
+    // session-memo discipline: the accumulated span store is the gate's
     // state, built once; this query's own cost is executing the
     // stored cut instructions (island merge + token pricing)
-    val scratch = StoreMemo.memo(spark,
+    val scratch = SessionMemo.store(spark,
         s"c72_exec_${dir}_${nBatches}_${w}_${minSpan}_$occCap") { root =>
       for (i <- 0 until nBatches)
         processBatch(Materialize.frame(docs.filter(pmod(col("doc_id"), lit(nBatches)) === i)),

@@ -243,8 +243,11 @@ class PlanShapeSpec extends AnyFunSuite {
     // the r11 verdict's #1 done-criterion: the fusion's dense leg
     // must rank off the persisted index (codes scan), with raw
     // embeddings touched only by (a) the bounded query frame and
-    // (b) the broadcast-bounded candidate fetch of the refine stage
-    val p = plan("c118_rrf_stored")
+    // (b) the broadcast-bounded candidate fetch of the refine stage.
+    // The keyed query memoizes the dense leg (a checkpoint read), so
+    // the scan pins check its producer plan, as c6's pin does.
+    val p = graft.operators.Similarity.storedDenseRanked(spark, sf)
+      .queryExecution.executedPlan.toString
     assert(p.contains("c79_index"),
       s"c118's dense leg does not scan the stored index:\n$p")
     val rawScans = "embeddings\\.parquet".r.findAllIn(p).size
@@ -253,9 +256,10 @@ class PlanShapeSpec extends AnyFunSuite {
     // the candidate fetch rides broadcast joins; the only sort-merge
     // join allowed is the fusion's report-sized FULL-OUTER combine
     // (≤ 2k rows — full outer cannot broadcast)
-    val smj = p.linesIterator.filter(_.contains("SortMergeJoin")).toSeq
+    val both = p + plan("c118_rrf_stored")
+    val smj = both.linesIterator.filter(_.contains("SortMergeJoin")).toSeq
     assert(smj.forall(_.contains("FullOuter")),
-      s"c118 shuffle-joins something besides the report-sized fusion:\n$p")
+      s"c118 shuffle-joins something besides the report-sized fusion:\n$both")
   }
 
   test("c49 assembles the hashed vectors in aggregates alone off the tf memo") {

@@ -407,7 +407,7 @@ class Round21Spec extends AnyFunSuite {
     val vecs = graft.sources.Tables.embeddings(spark, sf)
       .select(col("vec_id").as("doc_id"), col("embedding"))
     val pop = docs.filter(col("doc_id") % 97 =!= 0).join(vecs, Seq("doc_id"))
-    val bits = graft.operators.CorpusPrep.memo("c67_bits", docs)(
+    val bits = SessionMemo.frame("c67_bits", docs)(
       TextAnalysis.bloomBitsFromKeys(
         TextAnalysis.docShingles8Direct(docs.filter(col("doc_id") % 97 === 0))))
     val wE6 = TextAnalysis.storedClassifierWeights(spark, sf)

@@ -143,5 +143,127 @@ class Round27Spec extends AnyFunSuite {
     val p1 = rows(graft.operators.Sampling.c111KeepsPack(spark, sf))
     val p2 = rows(graft.operators.Sampling.c111KeepsPack(spark, sf))
     assert(p1 == p2)
+    // c118's memoized dense leg holds exactly its producer's rows
+    val d1 = rows(graft.operators.Similarity.storedDenseLeg(spark, sf))
+    val dp = rows(graft.operators.Similarity.storedDenseRanked(spark, sf))
+    assert(d1.nonEmpty && d1.toSet == dp.toSet && d1.size == dp.size)
+  }
+
+  test("one SessionMemo.invalidate() rebuilds every entry kind from a corpus rewritten in place") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_memo_spec").toString
+    val ref = java.nio.file.Files.createTempDirectory("graft_memo_ref").toString
+    try memoRebuildCase(dir, ref)
+    finally {
+      // leave no store roots behind: Round14Spec counts this
+      // application's c79/c82 roots
+      SessionMemo.invalidate()
+      val mine = Seq(dir, ref).map(d => new java.io.File(d).getName)
+      new java.io.File(System.getProperty("java.io.tmpdir")).listFiles()
+        .filter(f => f.getName.startsWith("graft_store_") && mine.exists(f.getName.contains))
+        .foreach(org.apache.commons.io.FileUtils.deleteQuietly)
+      Seq(dir, ref).foreach(d => org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
+    }
+  }
+
+  private def memoRebuildCase(dir: String, ref: String): Unit = {
+    val path = s"$dir/embeddings.parquet"
+    spark.read.parquet(s"$sf/embeddings.parquet").write.parquet(path)
+    def dim0(emb: org.apache.spark.sql.DataFrame) =
+      emb.select(col("vec_id"), col("embedding").getItem(0).as("e0"))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+    def table() = rows(dim0(Tables.embeddings(spark, dir)))
+    def frame() = rows(SessionMemo.frame("spec_dim0", Tables.embeddings(spark, dir))(
+      Materialize.frame(dim0(Tables.embeddings(spark, dir)))))
+    def store() = rows(spark.read.parquet(SessionMemo.store(spark, s"spec_dim0_$dir") { r =>
+      dim0(Tables.embeddings(spark, dir)).write.parquet(s"$r/dim0")
+    } + "/dim0"))
+    def health(d: String) = SparkEntry.queries("c87_index_health")(spark, d)
+      .collect().map(_.toSeq).toSeq
+    val before = (table(), frame(), store(), health(dir))
+    // rewrite the corpus in place with shifted vectors (same ids, so
+    // the index geometry still trains), the way ScaleSmoke rewrites
+    // its work dir; `ref` holds the same new files under a fresh path
+    spark.read.parquet(path)
+      .withColumn("embedding", transform(col("embedding"), (x, i) => x + (i % 3 + 1) * 0.05)
+        .cast("array<float>"))
+      .write.parquet(s"$ref/embeddings.parquet")
+    spark.read.parquet(s"$ref/embeddings.parquet").write.mode("overwrite").parquet(path)
+    SessionMemo.invalidate()
+    // (row sets compared into booleans: a failure would otherwise
+    // print both 500-row sets)
+    val expected = rows(dim0(spark.read.parquet(path)))
+    val rewritten = expected != before._1
+    assert(rewritten, "the rewrite left dim 0 unchanged")
+    val tableFresh = table() == expected
+    val frameFresh = frame() == expected
+    val storeFresh = store() == expected
+    assert(tableFresh, "stale table load")
+    assert(frameFresh, "stale frame memo")
+    assert(storeFresh, "stale store root")
+    // the artifact-derived frames (churned_pvec_err → c87_health) are
+    // rebuilt from the NEW store, not served from the old one
+    val after = health(dir)
+    assert(after != before._4)
+    assert(after == health(ref))
+  }
+
+  test("SessionMemo: a build that throws is retried on the next call") {
+    var calls = 0
+    intercept[IllegalStateException] {
+      SessionMemo(spark, "spec_throws") { calls += 1; throw new IllegalStateException("boom") }
+    }
+    assert(SessionMemo(spark, "spec_throws") { calls += 1; 42 } == 42)
+    assert(SessionMemo(spark, "spec_throws") { calls += 1; 0 } == 42)
+    assert(calls == 2)
+  }
+
+  test("SessionMemo: a frame build fanning out on concurrent threads to other keys completes") {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    val docs = Tables.documents(spark, sf).select("doc_id")
+    val built = Future {
+      SessionMemo.frame("spec_fanout", docs) {
+        val parts = Materialize.concurrently(0 until 4) { i =>
+          SessionMemo.frame(s"spec_fanout_$i", docs)(
+            Materialize.frame(docs.filter(pmod(col("doc_id"), lit(4)) === i)))
+        }
+        Materialize.frame(parts.reduce(_ union _))
+      }.count()
+    }(ExecutionContext.global)
+    assert(Await.result(built, 5.minutes) == docs.count())
+  }
+
+  test("SessionMemo: a stopped session's entries are pruned on the next miss") {
+    // one JVM holds one live SparkContext and this suite's must stay
+    // up, so the stop/restart runs in a child JVM (MemoPruneProbe)
+    import scala.jdk.CollectionConverters._
+    import scala.sys.process._
+    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getInputArguments.asScala.filterNot(_.startsWith("-Xmx")).toSeq
+    val cmd = Seq(sys.props("java.home") + "/bin/java") ++ jvmArgs ++
+      Seq("-Xmx1g", "-cp", sys.props("java.class.path"), "graft.MemoPruneProbe")
+    val out = cmd.!!(ProcessLogger(_ => ()))
+    assert(out.linesIterator.contains("memo sizes: 2 2 1"), out)
+  }
+}
+
+/** Child-JVM body of the stopped-session prune check: two entries of
+  * session `a`; after `a` stops, a HIT-free restart still sees both
+  * until session `b`'s first miss prunes them. Prints the memo's
+  * entry count after each step. */
+object MemoPruneProbe {
+  def main(args: Array[String]): Unit = {
+    val a = GraftSession.builder("local[1]").getOrCreate()
+    SessionMemo(a, "probe_1")(1)
+    SessionMemo(a, "probe_2")(2)
+    val sizes = Seq.newBuilder[Int]
+    sizes += SessionMemo.size
+    a.stop()
+    val b = GraftSession.builder("local[1]").getOrCreate()
+    sizes += SessionMemo.size
+    SessionMemo(b, "probe_1")(3)
+    sizes += SessionMemo.size
+    println(s"memo sizes: ${sizes.result().mkString(" ")}")
+    b.stop()
   }
 }

@@ -392,11 +392,11 @@ class Round5Spec extends AnyFunSuite {
     val saved = spark.conf.getOption(key)
     spark.sparkContext.setCheckpointDir("/tmp/graft-test-ckpt")
     def runAll(): (Array[org.apache.spark.sql.Row], Array[org.apache.spark.sql.Row], Array[org.apache.spark.sql.Row]) = {
-      // r8: c31's tf frame is session-memoized (CorpusPrep) — drop the
+      // r8: c31's tf frame is session-memoized (SessionMemo) — drop the
       // memo so each strategy run actually MATERIALIZES under the
       // strategy being tested instead of reading the previous
       // strategy's blocks
-      graft.operators.CorpusPrep.invalidate()
+      SessionMemo.invalidate()
       (TextAnalysis.c31UnigramLogprob(docs).collect(),
         Checks.a9DqChecks(Staging.stgEvents(Tables.events(spark, sf))).collect(),
         TextAnalysis.c30SourceMixtureBucketed(docs).collect())
@@ -412,7 +412,7 @@ class Round5Spec extends AnyFunSuite {
         assert(got._3.sameElements(base._3), s"$strategy: c30 diverged")
       }
       spark.conf.set(key, "bogus")
-      graft.operators.CorpusPrep.invalidate() // force a re-materialization
+      SessionMemo.invalidate() // force a re-materialization
       intercept[IllegalArgumentException] {
         TextAnalysis.c31UnigramLogprob(docs).collect()
       }

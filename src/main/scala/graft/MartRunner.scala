@@ -91,12 +91,14 @@ object MartRunner {
   }
 
   /** Parquet warehouse sink: overwrite `<root>/<name>` and return the
-    * re-read frame, so dependents scan the materialized files. */
+    * re-read frame, so dependents scan the materialized files. The
+    * re-read pins the written frame's schema, which skips the
+    * schema-inference job a bare parquet read launches. */
   def parquetSink(spark: SparkSession, root: String): (String, DataFrame) => DataFrame =
     (name, df) => {
       val path = s"$root/$name"
       df.write.mode("overwrite").parquet(path)
-      spark.read.parquet(path)
+      spark.read.schema(df.schema).parquet(path)
     }
 
   /** Incremental warehouse sink — dbt's `incremental` materialization

@@ -48,7 +48,7 @@ object Pipeline {
     // rather than crash every scheduled run until data appears
     if (!graft.streaming.EventsStream.hasCommittedData(spark, ingestStore))
       return PipelineReport(fetched, Map.empty, Nil)
-    val stored = spark.read.parquet(ingestStore)
+    val stored = spark.read.schema(pageSchema).parquet(ingestStore)
       .drop(graft.streaming.EventsStream.KeyBucketCol)
     // the ingest merge just mutated the store IN PLACE, and the marts
     // below (and the warehouse reads dependents make) re-read the
@@ -67,18 +67,21 @@ object Pipeline {
         s"${exportKeys.keySet -- dag.map(_.name)}")
     // `save` overrides the default parquet warehouse (e.g.
     // MartRunner.incrementalSink for keyed-merge marts — the curation
-    // DAG's quality_reasons). Exported tables are read back from the
-    // warehouse root, so names in exportKeys should be
-    // overwrite-materialized marts (reports), not keyed stores.
-    val status = MartRunner.run(dag,
-      save.getOrElse(MartRunner.parquetSink(spark, warehouseRoot)))
+    // DAG's quality_reasons). Exports read the frame the sink
+    // returned, the materialized mart dependents also read.
+    val sink = save.getOrElse(MartRunner.parquetSink(spark, warehouseRoot))
+    val materialized = scala.collection.mutable.Map.empty[String, DataFrame]
+    val status = MartRunner.run(dag, (name, df) => {
+      val out = sink(name, df)
+      materialized(name) = out
+      out
+    })
     // export ONLY marts that built this run — a failed mart must not
     // overwrite the store with stale or partial rows; its last good
     // load simply stands (the keyed store makes that safe)
     val loaded = exportKeys.toSeq.sortBy(_._1).collect {
       case (table, keys) if status.get(table).contains(MartStatus.Built) =>
-        Sinks.writeExternal(
-          spark.read.parquet(s"$warehouseRoot/$table"), external, table, keys)
+        Sinks.writeExternal(materialized(table), external, table, keys)
         table
     }
     PipelineReport(fetched, status, loaded)

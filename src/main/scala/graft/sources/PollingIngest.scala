@@ -39,8 +39,11 @@ object PollingIngest {
   /** Current incremental cursor: max `tsCol` (epoch-micros long) in
     * the committed store, 0 for an empty/absent store. Parquet
     * footer stats make the max cheap; a production deployment would
-    * keep it in a metadata sidecar instead. */
-  def cursorOf(spark: SparkSession, storePath: String, tsCol: String): Long = {
+    * keep it in a metadata sidecar instead. `schema` is the page
+    * schema the store was merged from: pinning it skips the
+    * schema-inference job a bare parquet read launches. */
+  def cursorOf(spark: SparkSession, storePath: String, tsCol: String,
+      schema: StructType): Long = {
     import graft.streaming.EventsStream
     // READ-ONLY mid-swap tolerance: if a compaction crash left the
     // store at its aside path, read the cursor from THERE rather than
@@ -58,7 +61,7 @@ object PollingIngest {
     readable match {
       case None => 0L
       case Some(dir) =>
-        val row = spark.read.parquet(dir).agg(max(col(tsCol))).head
+        val row = spark.read.schema(schema).parquet(dir).agg(max(col(tsCol))).head
         if (row.isNullAt(0)) 0L else row.getLong(0)
     }
   }
@@ -80,7 +83,7 @@ object PollingIngest {
       pagesPerMerge: Int = 50): Long = {
     import spark.implicits._
     require(pagesPerMerge > 0, "pagesPerMerge must be positive")
-    val cursorUs = cursorOf(spark, storePath, tsCol)
+    val cursorUs = cursorOf(spark, storePath, tsCol, schema)
     var fetched = 0L
     Iterator.from(0)
       .map(p => source.fetchPage(cursorUs, p))

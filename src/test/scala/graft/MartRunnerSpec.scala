@@ -194,4 +194,69 @@ class MartRunnerSpec extends AnyFunSuite {
         Mart("a", Seq("b"), _ => df()), Mart("b", Seq("a"), _ => df())))
     }
   }
+
+  test("parquetSink returns the written schema and rows, with no job after the write") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
+    val root = java.nio.file.Files.createTempDirectory("graft-sinkread-").toString
+    // bus order: a job posted after the write's execution ended is a
+    // job between the write's completion and the frame's return
+    val events = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = events.add("job")
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionEnd => events.add("end")
+        case _ =>
+      }
+    }
+    val sink = MartRunner.parquetSink(spark, root)
+    val seen = scala.collection.mutable.Map.empty[String, Seq[String]]
+    val returned = scala.collection.mutable.Map.empty[String, org.apache.spark.sql.DataFrame]
+    spark.sparkContext.addSparkListener(listener)
+    val status = try MartRunner.run(MartRunner.spotifyDag(spark, sf), (name, df) => {
+      org.apache.spark.TestBus.drain(spark.sparkContext)
+      events.clear()
+      val out = sink(name, df)
+      org.apache.spark.TestBus.drain(spark.sparkContext)
+      seen(name) = events.toArray.toSeq.map(_.toString)
+      returned(name) = out
+      out
+    }) finally spark.sparkContext.removeSparkListener(listener)
+    assert(status.values.forall(_ == MartStatus.Built), s"not all built: $status")
+    assert(returned.keySet == status.keySet)
+    def shape(df: org.apache.spark.sql.DataFrame) =
+      df.schema.fields.toSeq.map(f => (f.name, f.dataType, f.nullable))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    for ((name, out) <- returned) {
+      val reread = spark.read.parquet(s"$root/$name")
+      assert(shape(out) == shape(reread), s"$name: schema differs from the files'")
+      assert(rows(out) == rows(reread), s"$name: rows differ from the files'")
+      val ev = seen(name)
+      assert(ev.contains("end"), s"$name: the write's execution end was not seen: $ev")
+      assert(!ev.drop(ev.lastIndexOf("end")).contains("job"),
+        s"$name: a job ran after the write completed: $ev")
+    }
+  }
+
+  test("a repeated DAG run in one session compiles (almost) no new generated code") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") ==
+      GraftSession.CodegenCacheEntries.toString)
+    val root = java.nio.file.Files.createTempDirectory("graft-codegen-").toString
+    val dag = MartRunner.spotifyDag(spark, sf)
+    def compiles(): Long = {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val status = MartRunner.run(dag, MartRunner.parquetSink(spark, root))
+      assert(status.values.forall(_ == MartStatus.Built), s"not all built: $status")
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+    }
+    val first = compiles()
+    val second = compiles()
+    // Spark's default 100-entry cache cannot hold the DAG's ~150
+    // classes at this SF: every run recompiled ~135 of them. A few
+    // aggregate classes still differ from run to run (their generated
+    // text follows the hash order of fresh expression ids): measured
+    // second runs compiled 12, later runs 0–8
+    assert(second <= 25, s"second run compiled $second classes (first: $first)")
+  }
 }

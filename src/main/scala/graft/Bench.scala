@@ -63,8 +63,11 @@ object Bench {
     // cost; the run-1 sum bounds what a cold single-query session
     // pays on its first pass. Both numbers are reported.
     val run1Total = if (results.nonEmpty) results.map(_._3).sum else 0.0
+    // the core count labels the run: the same keys measure differently
+    // on 8 and 32 cores, and bench_out.json alone does not say which
+    val cores = spark.sparkContext.defaultParallelism
     val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-      s""""run1_total":$run1Total,"failed":$failed,"sf":"$sfDir"}"""
+      s""""run1_total":$run1Total,"failed":$failed,"cores":$cores,"sf":"$sfDir"}"""
     println(json)
     // the stdout line at 224 keys overflows the driver's tail capture
     // (BENCH_r14 "parsed": null) — the same JSON lands in a file so
@@ -79,7 +82,7 @@ object Bench {
     // file stay.
     println(s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},""" +
       s""""run1_total":$run1Total,"failed":$failed,"codegen_compiles":$compiles,""" +
-      s""""codegen_compile_s":$compileS,"sf":"$sfDir"}""")
+      s""""codegen_compile_s":$compileS,"cores":$cores,"sf":"$sfDir"}""")
     spark.stop()
     if (bad.nonEmpty) sys.exit(1)
   }

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.SessionMemo
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFns
 
@@ -278,37 +278,6 @@ object Similarity {
   val PqCodebookK = 16
   val PqTopK = 10
 
-  /** c47: product-quantization ANN serving (Jégou et al. 2011) — the
-    * compressed-domain search family c7/c26 (IVF) and c14 (scalar
-    * quantization) don't cover: each vector is encoded as
-    * [[PqSubspaces]] codeword ids (argmin L2 per sub-slice against a
-    * 16-entry codebook), and a query scores the WHOLE corpus through
-    * an asymmetric-distance lookup table — per (query, subspace,
-    * codeword) distances computed once (|Q|·M·K rows, broadcast),
-    * then every corpus code row is a table lookup + an 8-term sum.
-    * Per-query work drops from |corpus|·64 multiplies (c6) to
-    * |corpus|·8 lookups — the PQ speedup, expressed as a broadcast
-    * join instead of a per-row kernel.
-    *
-    * Determinism contract: float dims are cast to double BEFORE
-    * arithmetic (exact), per-cell distances are ROUNDED (4dp) before
-    * the argmin and before the ADC sum — round-then-compare/
-    * round-then-sum keeps codes and scores hash-stable across
-    * engines (grid-valued cell sums are orders of magnitude above
-    * double noise). Ties: codeword → min k, rank → min vec_id.
-    *
-    * Scale shape: the codebook (K rows) and query set (|Q| rows,
-    * an explicit bounded input — c6/c7's contract) are collected,
-    * the |Q|·M·K lookup table is built driver-side, and ONE typed
-    * kernel pass streams the corpus: encode + ADC + a topK-bounded
-    * heap per query per partition, emitting ≤ partitions·|Q|·topK
-    * rows for the exact rank window. Zero corpus-grain shuffles.
-    * (The declarative join spelling — encode via a M·K broadcast
-    * join, score via a (m, code) lookup join — materializes
-    * |corpus|·M·K then |corpus|·|Q| intermediate rows and measured
-    * 3-4× slower; the in-register loop with k-bounded state is the
-    * mapPartitions escape hatch's textbook case, FAISS's own serving
-    * shape.) */
   /** HALF_UP 4-decimal rounding — Spark's Round-on-double semantics,
     * the ONE spelling c47's driver LUT and executor kernel share.
     * NaN passes through (BigDecimal.valueOf would throw): a
@@ -354,8 +323,40 @@ object Similarity {
       vecs(k).slice(m * PqSubDim, (m + 1) * PqSubDim))
   }
 
+  /** c47: product-quantization ANN serving (Jégou et al. 2011) — the
+    * compressed-domain search family c7/c26 (IVF) and c14 (scalar
+    * quantization) don't cover: each vector is encoded as
+    * [[PqSubspaces]] codeword ids (argmin L2 per sub-slice against a
+    * 16-entry codebook), and a query scores the WHOLE corpus through
+    * an asymmetric-distance lookup table — per (query, subspace,
+    * codeword) distances computed once (|Q|·M·K rows, broadcast),
+    * then every corpus code row is a table lookup + an 8-term sum.
+    * Per-query work drops from |corpus|·64 multiplies (c6) to
+    * |corpus|·8 lookups — the PQ speedup, expressed as a broadcast
+    * join instead of a per-row kernel.
+    *
+    * Determinism contract: float dims are cast to double BEFORE
+    * arithmetic (exact), per-cell distances are ROUNDED (4dp) before
+    * the argmin and before the ADC sum — round-then-compare/
+    * round-then-sum keeps codes and scores hash-stable across
+    * engines (grid-valued cell sums are orders of magnitude above
+    * double noise). Ties: codeword → min k, rank → min vec_id.
+    *
+    * Scale shape: one bounded collect ([[seedIndex]]), the |Q|·M·K
+    * lookup table built once before the scan, one [[adcScan]] corpus
+    * pass.
+    * (The declarative join spelling — encode via a M·K broadcast
+    * join, score via a (m, code) lookup join — materializes
+    * |corpus|·M·K then |corpus|·|Q| intermediate rows and measured
+    * 3-4× slower; the in-register loop with k-bounded state is the
+    * mapPartitions escape hatch's textbook case, FAISS's own serving
+    * shape.) */
   def c47PqAdc(emb: DataFrame, nQueries: Int = DefaultQueryCount,
-      topK: Int = PqTopK): DataFrame = pqAdcServe(emb, None, nQueries, topK)
+      topK: Int = PqTopK): DataFrame = {
+    val vecs = adcInput(emb, "c47: PQ")
+    val (ix, qs) = seedIndex(vecs, nQueries, coarse = false)
+    adcServe(ix, qs, 1, topK, vecs)
+  }
 
   /** c64: c47's ADC serving over TRAINED per-subspace codebooks —
     * the round-8 verdict's "the shipped operator is a stand-in for
@@ -368,8 +369,12 @@ object Similarity {
     * spec prices the payoff (trained recall ≥ seed recall on a
     * clustered corpus at equal code budget). */
   def c64PqTrained(emb: DataFrame, nQueries: Int = DefaultQueryCount,
-      topK: Int = PqTopK): DataFrame =
-    pqAdcServe(emb, Some(collectBooks(trainedBooksOver(doubleVecs(emb)))), nQueries, topK)
+      topK: Int = PqTopK): DataFrame = {
+    val trained = collectBooks(trainedBooksOver(doubleVecs(emb)))
+    val vecs = adcInput(emb, "c64: PQ")
+    val (seed, qs) = seedIndex(vecs, nQueries, coarse = false)
+    adcServe(seed.copy(books = trained), qs, 1, topK, vecs)
+  }
 
   /** (vec_id, v: array<double>) — the trainer's input projection. */
   private def doubleVecs(emb: DataFrame): DataFrame =
@@ -399,97 +404,6 @@ object Similarity {
     require(rows.size == PqSubspaces * PqCodebookK,
       s"trained codebook has ${rows.size} cells, expected ${PqSubspaces * PqCodebookK}")
     Array.tabulate(PqSubspaces, PqCodebookK)((m, k) => rows((m, k)))
-  }
-
-  private def pqAdcServe(emb: DataFrame, books: Option[Array[Array[Array[Double]]]],
-      nQueries: Int, topK: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val need = PqSubspaces * PqSubDim
-    val guarded = emb.filter(assert_true(size(col("embedding")) >= need,
-      concat(lit(s"c47: $PqSubspaces×$PqSubDim subspaces need ≥$need dims, embedding has "),
-        size(col("embedding")))).isNull)
-    // codebook and query embeddings collected — BOTH bounded by
-    // construction (K = 16 codebook rows, |Q| = an explicit bounded
-    // input; c7/c26's centroid contract), in ONE scan job since the
-    // codebook ids are a prefix of (or overlap) the query ids — and
-    // the |Q|·M·K lookup table built driver-side via the SAME
-    // [[pqCellD2]] the executor encode loop calls: per cell,
-    // float→double (exact), left-to-right 8-term sum, HALF_UP 4dp —
-    // exactly the oracle's list_sum + round spelling, one shared
-    // implementation so the two sides cannot drift
-    val bound = math.max(PqCodebookK, nQueries)
-    val all = guarded.filter(col("vec_id") < bound)
-      .select(col("vec_id"), col("embedding").cast("array<double>"))
-      .collect()
-      .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray)
-      .sortBy(_._1)
-    val seedVecs = all.filter(_._1 < PqCodebookK).map(_._2)
-    require(seedVecs.length == PqCodebookK,
-      s"c47: corpus has ${seedVecs.length} vectors below id $PqCodebookK — codebook incomplete")
-    val cbLocal = books.getOrElse(seedBooks(seedVecs))
-    val qVecs = all.filter(_._1 < nQueries)
-    val qArr = qVecs.map(_._1)
-    val lut3 = Array.tabulate(qArr.length, PqSubspaces, PqCodebookK)(
-      (qi, m, k) => pqCellD2(qVecs(qi)._2, cbLocal, k, m))
-    val spark0 = emb.sparkSession
-    val bc = spark0.sparkContext.broadcast((qArr, lut3, cbLocal))
-    import spark0.implicits._
-    val kLocal = topK
-    // ONE corpus pass: encode (argmin codeword per subspace, rounded
-    // d2, ties to min k) and ADC-score against every query through
-    // the lookup table, keeping a topK-bounded heap per query per
-    // partition — imperative by nature (FAISS's serving loop), the
-    // same mapPartitions justification as the posting-pair kernels
-    val topLocal = guarded
-      .select(col("vec_id"), col("embedding").cast("array<double>"))
-      .as[(Long, Array[Double])]
-      .mapPartitions { it =>
-        val (qs, lut, cb) = bc.value
-        val ord = Ordering.Tuple2[Double, Long]
-        val heaps = Array.fill(qs.length)(
-          scala.collection.mutable.PriorityQueue.empty[(Double, Long)](ord))
-        val codes = new Array[Int](PqSubspaces)
-        it.foreach { case (vec, v) =>
-          var m = 0
-          while (m < PqSubspaces) {
-            var bestK = 0
-            var bestD = Double.MaxValue
-            var k = 0
-            while (k < cb(m).length) {
-              val sr = pqCellD2(v, cb, k, m)
-              if (sr < bestD) { bestD = sr; bestK = k } // strict: ties keep min k
-              k += 1
-            }
-            codes(m) = bestK
-            m += 1
-          }
-          var qi = 0
-          while (qi < qs.length) {
-            if (qs(qi) != vec) {
-              var s = 0.0
-              var mm = 0
-              while (mm < PqSubspaces) { s += lut(qi)(mm)(codes(mm)); mm += 1 }
-              val cand = (pqRound4(s), vec)
-              val h = heaps(qi)
-              if (h.size < kLocal) h.enqueue(cand)
-              else if (ord.lt(cand, h.head)) { h.dequeue(); h.enqueue(cand) }
-            }
-            qi += 1
-          }
-        }
-        heaps.iterator.zipWithIndex.flatMap { case (h, qi) =>
-          h.iterator.map { case (d, v) => (qs(qi), v, d) }
-        }
-      }.toDF("q_id", "vec_id", "adist")
-    // the per-partition heaps keep a SUPERSET of the global top-k
-    // under the same (adist, vec_id) total order — the exact window
-    // below reads ≤ partitions·|Q|·topK rows
-    val wRank = Window.partitionBy(col("q_id")).orderBy(col("adist"), col("vec_id"))
-    topLocal
-      .withColumn("rank", row_number().over(wRank).cast("long"))
-      .filter(col("rank") <= topK)
-      .select(col("q_id"), col("rank"), col("vec_id"), col("adist"))
-      .orderBy(col("q_id"), col("rank"))
   }
 
   /** 64-dim left-to-right dot — the kernel spelling of the oracle's
@@ -522,6 +436,319 @@ object Similarity {
     }.sorted.take(n).map(_._2).toArray
   }
 
+  // ---- the IVFADC kernel: one index value, one encode, one scan ---------
+
+  /** An IVFADC index's in-memory artifacts (Jégou et al. 2011 §V),
+    * the one structure every PQ serve, grid, build and append runs:
+    * subquantizer `books` ([m][k][i]); the coarse quantizer `cent`
+    * (None = c47's flat scan, one implicit cluster 0, no assignment);
+    * whether codes encode the RESIDUAL v − centroid(assigned); and
+    * c123's `localBooks`, which replace `books` in the LUTs of the
+    * repaired clusters they name. Seed, trained and stored artifacts
+    * are its constructors ([[seedIndex]], [[residualIndex]],
+    * [[loadArtifacts]]), not separate kernels. */
+  private final case class PqIndex(
+      books: Array[Array[Array[Double]]],
+      cent: Option[Array[Array[Double]]] = None,
+      residual: Boolean = false,
+      localBooks: Map[Long, Array[Array[Array[Double]]]] = Map.empty) {
+    private val centNorm = cent.map(_.map(c => math.sqrt(dot64(c, c))))
+
+    def nCent: Int = cent.fold(1)(_.length)
+
+    /** The top-`n` clusters of `v` in probe order — [[ivfTopClusters]],
+      * one ranking for corpus assignment and query probes. */
+    def probes(v: Array[Double], n: Int): Array[Int] =
+      cent.fold(Array(0))(c => ivfTopClusters(v, c, centNorm.get, n))
+
+    /** `v` as the subquantizer sees it against cluster `c`: v itself,
+      * or its exact residual written into the 64-wide `buf`. */
+    private def input(v: Array[Double], c: Int, buf: Array[Double]): Array[Double] =
+      if (!residual) v
+      else {
+        val cw = cent.get(c)
+        var i = 0
+        while (i < buf.length) { buf(i) = v(i) - cw(i); i += 1 }
+        buf
+      }
+
+    /** ONE encode — assign, residual, code: returns `v`'s cluster and,
+      * unless `want` rules that cluster out (the scan's skip of
+      * clusters no query probes), fills `codes` with the argmin
+      * codeword per subspace over the rounded [[pqCellD2]] cell
+      * (strict `<`: ties keep min k). `buf` is the caller's 64-wide
+      * residual scratch (unused without `residual`). */
+    def encode(v: Array[Double], codes: Array[Int], buf: Array[Double],
+        want: Array[Boolean] = null): Int = {
+      val c = if (cent.isEmpty) 0 else probes(v, 1)(0)
+      if (want == null || want(c)) {
+        val x = input(v, c, buf)
+        var m = 0
+        while (m < PqSubspaces) {
+          var bestK = 0
+          var bestD = Double.MaxValue
+          var k = 0
+          while (k < books(m).length) {
+            val d = pqCellD2(x, books, k, m)
+            if (d < bestD) { bestD = d; bestK = k } // strict: ties keep min k
+            k += 1
+          }
+          codes(m) = bestK
+          m += 1
+        }
+      }
+      c
+    }
+
+    /** The decode side of [[encode]]: the rounded cells between `v`
+      * (or its residual to centroid `c`) and the codewords `codes`
+      * names, per subspace — c87's reconstruction error terms, c162's
+      * per-candidate ADC terms. */
+    def cells(v: Array[Double], c: Int, codes: Array[Int]): Array[Double] = {
+      val x = input(v, c, new Array[Double](PqSubspaces * PqSubDim))
+      val bks = localBooks.getOrElse(c.toLong, books)
+      Array.tabulate(PqSubspaces)(m => pqCellD2(x, bks, codes(m), m))
+    }
+
+    /** Query `q`'s lookup table against cluster `c` — [m][k] rounded
+      * cells of q, or of its residual to centroid c (the residual
+      * trick: the LUT absorbs the centroid subtraction), under c's
+      * books. Built before the scan through the SAME [[pqCellD2]] the
+      * executor encode calls, so the two sides cannot drift. */
+    def lut(q: Array[Double], c: Int): Array[Array[Double]] = {
+      val x = input(q, c, new Array[Double](PqSubspaces * PqSubDim))
+      val bks = localBooks.getOrElse(c.toLong, books)
+      Array.tabulate(PqSubspaces, PqCodebookK)((m, k) => pqCellD2(x, bks, k, m))
+    }
+  }
+
+  /** `emb` guarded to the PQ geometry's 64 dims — a narrower corpus
+    * fails loudly (`what` names the caller) instead of reading past a
+    * vector in the kernel. */
+  private def adcInput(emb: DataFrame, what: String): DataFrame = {
+    val dims = PqSubspaces * PqSubDim
+    emb.filter(assert_true(size(col("embedding")) >= dims,
+      concat(lit(s"$what needs ≥$dims dims, embedding has "),
+        size(col("embedding")))).isNull)
+  }
+
+  /** The rows of `vecs` passing `pred` as (vec_id, double vector),
+    * sorted by id — a BOUNDED collect (a query set, an id-prefix
+    * seed: c6/c7's explicit-bounded-input contract). */
+  private def pullVecs(vecs: DataFrame, pred: Column): Array[(Long, Array[Double])] =
+    vecs.filter(pred)
+      .select(col("vec_id"), col("embedding").cast("array<double>"))
+      .collect()
+      .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray)
+      .sortBy(_._1)
+
+  /** The SEED index and the default query set from ONE collect job:
+    * the seed books (ids < [[PqCodebookK]]), the seed centroids (ids <
+    * [[DefaultCentroidCount]], when `coarse`) and the queries (ids <
+    * `nQueries`) are all id prefixes of the same scan, and all
+    * bounded by construction (c7's deterministic-seed discipline,
+    * which the oracle pins). */
+  private def seedIndex(vecs: DataFrame, nQueries: Int,
+      coarse: Boolean): (PqIndex, Array[(Long, Array[Double])]) = {
+    val all = pullVecs(vecs,
+      col("vec_id") < Seq(PqCodebookK, DefaultCentroidCount, nQueries).max)
+    val cent = if (!coarse) None else {
+      val c = all.filter(_._1 < DefaultCentroidCount).map(_._2)
+      require(c.length == DefaultCentroidCount,
+        s"corpus has ${c.length} vectors below id $DefaultCentroidCount — centroids incomplete")
+      Some(c)
+    }
+    (PqIndex(seedBooks(all.filter(_._1 < PqCodebookK).map(_._2)), cent),
+      all.filter(_._1 < nQueries))
+  }
+
+  /** A centroid frame (c_id, c_emb, c_nrm) with double elements — the
+    * coarse quantizer the residual trainer, the kernel and the stored
+    * artifact all read. */
+  private def doubleCentroids(centFrame: DataFrame): DataFrame =
+    centFrame.select(col("c_id"), VectorFns.toDoubles(col("c_emb")).as("c_emb"), col("c_nrm"))
+
+  /** The RESIDUAL-trained index over a coarse centroid frame:
+    * subquantizer books trained on the residuals against those
+    * centroids (memoized per centroid plan), then the centroids — two
+    * bounded collects. */
+  private def residualIndex(emb: DataFrame, centFrame: DataFrame): PqIndex = {
+    val cf = doubleCentroids(centFrame)
+    PqIndex(collectBooks(trainedBooksOver(residualFrameOver(emb, cf))),
+      Some(denseCentroids(cf)), residual = true)
+  }
+
+  /** Collect a centroid frame's k rows in id order. The kernel indexes
+    * clusters by c_id, so the ids must be the dense prefix 0..k-1
+    * (the seed, the trainer and the stored artifact all keep it). */
+  private def denseCentroids(centFrame: DataFrame): Array[Array[Double]] = {
+    val rows = centFrame.select(col("c_id"), col("c_emb")).collect()
+      .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray)
+      .sortBy(_._1)
+    require(rows.map(_._1).sameElements(0L until rows.length),
+      s"centroid ids not the dense prefix: ${rows.map(_._1).mkString(",")}")
+    rows.map(_._2)
+  }
+
+  /** Per query, each cluster's probe rank (0 = nearest) when it is
+    * among the query's top `n`, else Int.MaxValue — level L probes the
+    * clusters ranked below L, so every nprobe level reads one
+    * ranking. */
+  private def probeRanks(ix: PqIndex, qs: Array[(Long, Array[Double])],
+      n: Int): Array[Array[Int]] =
+    qs.map { case (_, q) =>
+      val r = Array.fill(ix.nCent)(Int.MaxValue)
+      ix.probes(q, n).zipWithIndex.foreach { case (c, i) => r(c) = i }
+      r
+    }
+
+  /** The ONE IVFADC scan: the top-`k` of every (nprobe level × code
+    * budget × query) cell, as (nprobe, m_budget, q_id, vec_id, adist,
+    * rank). `corpus` is a stored codes table (it has a `codes` column)
+    * or raw vectors (vec_id, embedding), encoded in the kernel with
+    * the encode skipped for clusters no query probes.
+    *
+    * One typed kernel pass (FAISS's serving loop — imperative by
+    * nature): a candidate's cluster probe rank gates each query; its
+    * ADC distance is the LEFT-TO-RIGHT sum of LUT cells rounded at
+    * each budget point (c47's round-then-sum; the full budget is the
+    * serving distance), priced once and offered to every level that
+    * probes the cluster, into per-partition k-bounded heaps under the
+    * (adist, vec_id) order. The heaps keep a SUPERSET of each cell's
+    * top-k, so the one exact rank window reads ≤ partitions·cells·|Q|·k
+    * rows — zero corpus-grain shuffles. Residual codes get a LUT per
+    * probed (query, cluster) — |Q|·nprobe tables, not |Q|·k. */
+  private def adcScan(ix: PqIndex, qs: Array[(Long, Array[Double])], nprobes: Seq[Int],
+      budgets: Seq[Int], k: Int, corpus: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val spark0 = corpus.sparkSession
+    import spark0.implicits._
+    val npMax = nprobes.last
+    val rank = probeRanks(ix, qs, npMax)
+    val luts = qs.indices.map { qi =>
+      if (!ix.residual) Array(ix.lut(qs(qi)._2, 0))
+      else Array.tabulate(ix.nCent)(c =>
+        if (rank(qi)(c) < npMax) ix.lut(qs(qi)._2, c) else null)
+    }.toArray
+    val want = Array.tabulate(ix.nCent)(c => rank.exists(_(c) < npMax))
+    val bc = spark0.sparkContext.broadcast(
+      (ix, qs.map(_._1), luts, rank, want, nprobes.toArray, budgets.toArray))
+    val residual = ix.residual
+    val score = (rows: Iterator[(Long, Int, Array[Int])]) => {
+      val (_, qIds, lut, rk, _, nps, mbs) = bc.value
+      val ord = Ordering.Tuple2[Double, Long]
+      val nq = qIds.length
+      val heaps = Array.fill(nps.length * mbs.length * nq)(
+        scala.collection.mutable.PriorityQueue.empty[(Double, Long)](ord))
+      val sums = new Array[Double](mbs.length)
+      rows.foreach { case (vec, cluster, codes) =>
+        var qi = 0
+        while (qi < nq) {
+          val r = rk(qi)(cluster)
+          if (qIds(qi) != vec && r < npMax) {
+            val l = lut(qi)(if (residual) cluster else 0)
+            var s = 0.0
+            var mi = 0
+            var m = 0
+            while (m < PqSubspaces && mi < mbs.length) {
+              s += l(m)(codes(m))
+              m += 1
+              if (m == mbs(mi)) { sums(mi) = pqRound4(s); mi += 1 }
+            }
+            var npi = 0
+            while (npi < nps.length) {
+              if (r < nps(npi)) {
+                var mbi = 0
+                while (mbi < mbs.length) {
+                  val cand = (sums(mbi), vec)
+                  val h = heaps((npi * mbs.length + mbi) * nq + qi)
+                  if (h.size < k) h.enqueue(cand)
+                  else if (ord.lt(cand, h.head)) { h.dequeue(); h.enqueue(cand) }
+                  mbi += 1
+                }
+              }
+              npi += 1
+            }
+          }
+          qi += 1
+        }
+      }
+      heaps.iterator.zipWithIndex.flatMap { case (h, i) =>
+        val cell = i / nq
+        h.iterator.map { case (d, v) =>
+          (nps(cell / mbs.length), mbs(cell % mbs.length), qIds(i % nq), v, d)
+        }
+      }
+    }
+    val heapRows =
+      if (corpus.columns.contains("codes"))
+        corpus.select(col("vec_id"), col("cluster").cast("int"), col("codes"))
+          .as[(Long, Int, Array[Int])]
+          .mapPartitions(score)
+      else
+        corpus.select(col("vec_id"), col("embedding").cast("array<double>"))
+          .as[(Long, Array[Double])]
+          .mapPartitions { it =>
+            val (ix0, _, _, _, probed, _, _) = bc.value
+            val codes = new Array[Int](PqSubspaces)
+            val buf = new Array[Double](PqSubspaces * PqSubDim)
+            score(it.map { case (vec, v) => (vec, ix0.encode(v, codes, buf, probed), codes) }
+              .filter(r => probed(r._2)))
+          }
+    val w = Window.partitionBy(col("nprobe"), col("m_budget"), col("q_id"))
+      .orderBy(col("adist"), col("vec_id"))
+    heapRows.toDF("nprobe", "m_budget", "q_id", "vec_id", "adist")
+      .withColumn("rank", row_number().over(w).cast("long"))
+      .filter(col("rank") <= k)
+  }
+
+  /** A single-point serve — the scan's grid at `nprobe` × the full
+    * code budget — as (q_id, rank, vec_id, adist). */
+  private def adcServe(ix: PqIndex, qs: Array[(Long, Array[Double])], nprobe: Int,
+      topK: Int, corpus: DataFrame): DataFrame =
+    adcScan(ix, qs, Seq(nprobe), Seq(PqSubspaces), topK, corpus)
+      .select(col("q_id"), col("rank"), col("vec_id"), col("adist"))
+      .orderBy(col("q_id"), col("rank"))
+
+  /** The recall grid (c66/c73/c136): [[recallTable]] over every
+    * (nprobe, m_budget) cell of ONE [[adcScan]] pass. */
+  private def recallGrid(emb: DataFrame, nQueries: Int, k: Int, ix: PqIndex,
+      qs: Array[(Long, Array[Double])], corpus: DataFrame, nprobes: Seq[Int],
+      mBudgets: Seq[Int]): DataFrame = {
+    require(nprobes.nonEmpty && nprobes == nprobes.distinct.sorted,
+      s"nprobes must be strictly ascending: $nprobes")
+    require(mBudgets.nonEmpty && mBudgets == mBudgets.distinct.sorted
+        && mBudgets.last <= PqSubspaces,
+      s"m budgets must be strictly ascending and ≤ $PqSubspaces: $mBudgets")
+    val grid = emb.sparkSession.createDataFrame(
+      (for { np <- nprobes; mb <- mBudgets; (q, _) <- qs.toSeq } yield (np, mb, q)))
+      .toDF("nprobe", "m_budget", "q_id")
+    recallTable(emb, nQueries, k, adcScan(ix, qs, nprobes, mBudgets, k, corpus), grid,
+      "nprobe", "m_budget")
+  }
+
+  /** Mean recall@k per cell of a top-k frame `approx` (cell `keys`,
+    * q_id, vec_id) against the exact c6 baseline over the default
+    * queries (c55's measure-don't-guess pattern, one row per cell).
+    * `grid` holds every (cell, q_id) pair, so a query a cell surfaces
+    * nothing for reads recall 0 (the loss is real), not a missing
+    * row. */
+  private def recallTable(emb: DataFrame, nQueries: Int, k: Int, approx: DataFrame,
+      grid: DataFrame, keys: String*): DataFrame = {
+    val exact = c6AnnTopK(emb, Some(defaultQueries(emb, nQueries)), k)
+      .select(col("q_id"), col("vec_id")).withColumn("hit", lit(1L))
+    val perQ = approx.join(exact, Seq("q_id", "vec_id"), "left")
+      .groupBy((keys :+ "q_id").map(col): _*)
+      .agg(sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
+    grid.join(perQ, keys :+ "q_id", "left")
+      .withColumn("recall",
+        round(coalesce(col("n_hits"), lit(0L)).cast("double") / k, 4))
+      .groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("n_queries"),
+        round(avg(col("recall")), 4).as("mean_recall"))
+      .orderBy(keys.map(col): _*)
+  }
+
   /** c60: IVF + PQ composed serving — FAISS's IVFADC shape (Jégou et
     * al. 2011 §V): the coarse quantizer prunes WHERE to look (each
     * query scans only its `nprobe` clusters' members — c7's cost
@@ -534,109 +761,20 @@ object Similarity {
     * prices both).
     *
     * This is the NON-RESIDUAL variant (codes over raw vectors, the
-    * same codes c47 serves): residual encoding (v − centroid into
-    * the subquantizer) is the one-line kernel swap at [[pqCellD2]]'s
-    * call site plus per-cluster LUTs — mechanical, same determinism
-    * contract; the oracle'd contract here is the compose itself.
+    * same codes c47 serves); [[c65IvfPqResidual]] serves the residual
+    * one through the same scan.
     *
     * Determinism: assignment/probes use c7's exact ranking spelling
     * (rounded cosine desc, min c_id ties — [[ivfTopClusters]], one
     * shared implementation for corpus assignment and query probes);
     * encode/score inherit c47's round-then-argmin/round-then-sum
-    * cells. Scale shape: centroids (16), codebook (16), and the
-    * bounded query set collect in ONE scan job; the corpus pass is
-    * one kernel — assign, encode (skipped entirely for vectors in
-    * clusters no query probes), ADC against the probing queries
-    * only, per-partition topK heaps; ≤ partitions·|Q|·topK rows
-    * reach the exact rank window. Zero corpus-grain shuffles. */
+    * cells. Scale shape: centroids, codebook and queries in ONE
+    * collect job ([[seedIndex]]), then one [[adcScan]] pass. */
   def c60IvfPqAdc(emb: DataFrame, nQueries: Int = DefaultQueryCount,
       topK: Int = PqTopK, nprobe: Int = DefaultNProbe): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val dims = 64 // the oracle dot is fixed 64-wide; PQ needs 8×8
-    val guarded = emb.filter(assert_true(size(col("embedding")) >= dims,
-      concat(lit(s"c60: IVFADC needs ≥$dims dims, embedding has "),
-        size(col("embedding")))).isNull)
-    val bound = math.max(PqCodebookK, math.max(DefaultCentroidCount, nQueries))
-    val all = guarded.filter(col("vec_id") < bound)
-      .select(col("vec_id"), col("embedding").cast("array<double>"))
-      .collect()
-      .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray)
-      .sortBy(_._1)
-    val seedVecs = all.filter(_._1 < PqCodebookK).map(_._2)
-    require(seedVecs.length == PqCodebookK,
-      s"c60: corpus has ${seedVecs.length} vectors below id $PqCodebookK — codebook incomplete")
-    val cbLocal = seedBooks(seedVecs)
-    val centLocal = all.filter(_._1 < DefaultCentroidCount).map(_._2)
-    require(centLocal.length == DefaultCentroidCount,
-      s"c60: corpus has ${centLocal.length} vectors below id $DefaultCentroidCount — centroids incomplete")
-    val centNorm = centLocal.map(c => math.sqrt(dot64(c, c)))
-    val qVecs = all.filter(_._1 < nQueries)
-    val qArr = qVecs.map(_._1)
-    val lut3 = Array.tabulate(qArr.length, PqSubspaces, PqCodebookK)(
-      (qi, m, k) => pqCellD2(qVecs(qi)._2, cbLocal, k, m))
-    // per-query probe masks + the "any query probes this cluster"
-    // mask — vectors in never-probed clusters skip encode entirely
-    val probeSets = qVecs.map { case (_, qv) =>
-      val flags = new Array[Boolean](DefaultCentroidCount)
-      ivfTopClusters(qv, centLocal, centNorm, nprobe).foreach(flags(_) = true)
-      flags
-    }
-    val anyProbe = Array.tabulate(DefaultCentroidCount)(c => probeSets.exists(_(c)))
-    val spark0 = emb.sparkSession
-    val bc = spark0.sparkContext.broadcast(
-      (qArr, lut3, cbLocal, centLocal, centNorm, probeSets, anyProbe))
-    import spark0.implicits._
-    val kLocal = topK
-    val topLocal = guarded
-      .select(col("vec_id"), col("embedding").cast("array<double>"))
-      .as[(Long, Array[Double])]
-      .mapPartitions { it =>
-        val (qs, lut, cb, cent, cn, probes, anyP) = bc.value
-        val ord = Ordering.Tuple2[Double, Long]
-        val heaps = Array.fill(qs.length)(
-          scala.collection.mutable.PriorityQueue.empty[(Double, Long)](ord))
-        val codes = new Array[Int](PqSubspaces)
-        it.foreach { case (vec, v) =>
-          val cluster = ivfTopClusters(v, cent, cn, 1)(0)
-          if (anyP(cluster)) {
-            var m = 0
-            while (m < PqSubspaces) {
-              var bestK = 0
-              var bestD = Double.MaxValue
-              var k = 0
-              while (k < cb(m).length) {
-                val sr = pqCellD2(v, cb, k, m)
-                if (sr < bestD) { bestD = sr; bestK = k } // strict: ties keep min k
-                k += 1
-              }
-              codes(m) = bestK
-              m += 1
-            }
-            var qi = 0
-            while (qi < qs.length) {
-              if (qs(qi) != vec && probes(qi)(cluster)) {
-                var s = 0.0
-                var mm = 0
-                while (mm < PqSubspaces) { s += lut(qi)(mm)(codes(mm)); mm += 1 }
-                val cand = (pqRound4(s), vec)
-                val h = heaps(qi)
-                if (h.size < kLocal) h.enqueue(cand)
-                else if (ord.lt(cand, h.head)) { h.dequeue(); h.enqueue(cand) }
-              }
-              qi += 1
-            }
-          }
-        }
-        heaps.iterator.zipWithIndex.flatMap { case (h, qi) =>
-          h.iterator.map { case (d, v) => (qs(qi), v, d) }
-        }
-      }.toDF("q_id", "vec_id", "adist")
-    val wRank = Window.partitionBy(col("q_id")).orderBy(col("adist"), col("vec_id"))
-    topLocal
-      .withColumn("rank", row_number().over(wRank).cast("long"))
-      .filter(col("rank") <= topK)
-      .select(col("q_id"), col("rank"), col("vec_id"), col("adist"))
-      .orderBy(col("q_id"), col("rank"))
+    val vecs = adcInput(emb, "c60: IVFADC")
+    val (ix, qs) = seedIndex(vecs, nQueries, coarse = true)
+    adcServe(ix, qs, nprobe, topK, vecs)
   }
 
   /** Per-subspace L2 k-means — the PQ SUBQUANTIZER trainer (Jégou et
@@ -720,7 +858,7 @@ object Similarity {
     * swap" into a shipped, oracle-checked operator): each corpus
     * vector is encoded as its RESIDUAL v − centroid(assigned cluster)
     * under codebooks TRAINED ON RESIDUALS ([[trainPqCodebooks]] over
-    * [[residualFrame]] — Jégou trains the subquantizer on residuals,
+    * [[residualFrameOver]] — Jégou trains the subquantizer on residuals,
     * not raw vectors), and each query scores a probed cluster's
     * members through a PER-CLUSTER lookup table built from the
     * query's own residual against that cluster's centroid — the
@@ -733,13 +871,11 @@ object Similarity {
     * both engines; training and cells inherit the fixed-point /
     * round-then-argmin contract. Scale shape: centroids, codebooks
     * (M·K rows), query set, and the |Q|·nprobe·M·K per-cluster LUTs
-    * are all bounded by construction; the corpus pass is ONE kernel —
-    * assign, residual, encode (skipped for never-probed clusters),
-    * per-cluster-LUT ADC, per-partition topK heaps. Zero corpus-grain
-    * shuffles (the training job's two shuffles run offline, once). */
+    * are all bounded by construction; the corpus pass is one
+    * [[adcScan]] (the training job's two shuffles run offline, once). */
   def c65IvfPqResidual(emb: DataFrame, nQueries: Int = DefaultQueryCount,
       topK: Int = PqTopK, nprobe: Int = DefaultNProbe): DataFrame =
-    ivfPqResidualServe(emb, None, nQueries, topK, nprobe)
+    residualServe(emb, defaultCentroids(emb), nQueries, topK, nprobe)
 
   /** c71: the FULLY TRAINED IVFPQ index — what a production FAISS
     * build actually ships (every piece of c60's compose upgraded from
@@ -754,149 +890,40 @@ object Similarity {
     * inside one query). Same serving kernel and cost shape as c65. */
   def c71IvfPqTrained(emb: DataFrame, nQueries: Int = DefaultQueryCount,
       topK: Int = PqTopK, nprobe: Int = DefaultNProbe): DataFrame =
-    ivfPqResidualServe(emb, Some(trainedCentFrame(emb)), nQueries, topK, nprobe)
+    residualServe(emb, trainedCentFrame(emb), nQueries, topK, nprobe)
 
-  private def ivfPqResidualServe(emb: DataFrame, centroids: Option[DataFrame],
+  /** c65/c71 serving: the residual-trained index over `centFrame`,
+    * then the query set, one bounded collect each. */
+  private def residualServe(emb: DataFrame, centFrame: DataFrame,
       nQueries: Int, topK: Int, nprobe: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val dims = 64
-    val guarded = emb.filter(assert_true(size(col("embedding")) >= dims,
-      concat(lit(s"c65: residual IVFADC needs ≥$dims dims, embedding has "),
-        size(col("embedding")))).isNull)
-    val centFrame = centroids.getOrElse(defaultCentroids(emb))
-      .select(col("c_id"), VectorFns.toDoubles(col("c_emb")).as("c_emb"), col("c_nrm"))
-    val rBooks = collectBooks(trainedBooksOver(residualFrameOver(emb, centFrame)))
-    // centroid pull is a bounded k-row collect (c7's contract); the
-    // kernel indexes clusters by c_id, so the sorted ids must be the
-    // dense prefix 0..k-1 (defaultCentroids and the trainer both
-    // preserve them)
-    val centRows = centFrame.select(col("c_id"), col("c_emb")).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray)
-      .sortBy(_._1)
-    require(centRows.map(_._1).sameElements(0L until centRows.length),
-      s"c65/c71: centroid ids not the dense prefix: ${centRows.map(_._1).mkString(",")}")
-    val centLocal = centRows.map(_._2)
-    val centNorm = centLocal.map(c => math.sqrt(dot64(c, c)))
-    val qVecs = guarded.filter(col("vec_id") < nQueries)
-      .select(col("vec_id"), col("embedding").cast("array<double>"))
-      .collect()
-      .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray)
-      .sortBy(_._1)
-    val qArr = qVecs.map(_._1)
-    // per-query probe list + per-(query, probed-cluster) residual LUT:
-    // lut(qi)(c) is null for clusters qi never probes — the residual
-    // trick's cost is |Q|·nprobe LUTs, not |Q|·k
-    val nCent = centLocal.length
-    val probeSets = qVecs.map { case (_, qv) =>
-      val flags = new Array[Boolean](nCent)
-      ivfTopClusters(qv, centLocal, centNorm, nprobe).foreach(flags(_) = true)
-      flags
-    }
-    val anyProbe = Array.tabulate(nCent)(c => probeSets.exists(_(c)))
-    val lutR = Array.tabulate(qArr.length, nCent) { (qi, c) =>
-      if (!probeSets(qi)(c)) null
-      else {
-        val qres = new Array[Double](dims)
-        var i = 0
-        while (i < dims) { qres(i) = qVecs(qi)._2(i) - centLocal(c)(i); i += 1 }
-        Array.tabulate(PqSubspaces, PqCodebookK)((m, k) => pqCellD2(qres, rBooks, k, m))
-      }
-    }
-    val spark0 = emb.sparkSession
-    val bc = spark0.sparkContext.broadcast(
-      (qArr, lutR, rBooks, centLocal, centNorm, probeSets, anyProbe))
-    import spark0.implicits._
-    val kLocal = topK
-    val topLocal = guarded
-      .select(col("vec_id"), col("embedding").cast("array<double>"))
-      .as[(Long, Array[Double])]
-      .mapPartitions { it =>
-        val (qs, lut, cb, cent, cn, probes, anyP) = bc.value
-        val ord = Ordering.Tuple2[Double, Long]
-        val heaps = Array.fill(qs.length)(
-          scala.collection.mutable.PriorityQueue.empty[(Double, Long)](ord))
-        val codes = new Array[Int](PqSubspaces)
-        val res = new Array[Double](64)
-        it.foreach { case (vec, v) =>
-          val cluster = ivfTopClusters(v, cent, cn, 1)(0)
-          if (anyP(cluster)) {
-            var i = 0
-            while (i < 64) { res(i) = v(i) - cent(cluster)(i); i += 1 }
-            var m = 0
-            while (m < PqSubspaces) {
-              var bestK = 0
-              var bestD = Double.MaxValue
-              var k = 0
-              while (k < cb(m).length) {
-                val sr = pqCellD2(res, cb, k, m)
-                if (sr < bestD) { bestD = sr; bestK = k } // strict: ties keep min k
-                k += 1
-              }
-              codes(m) = bestK
-              m += 1
-            }
-            var qi = 0
-            while (qi < qs.length) {
-              if (qs(qi) != vec && probes(qi)(cluster)) {
-                val l = lut(qi)(cluster)
-                var s = 0.0
-                var mm = 0
-                while (mm < PqSubspaces) { s += l(mm)(codes(mm)); mm += 1 }
-                val cand = (pqRound4(s), vec)
-                val h = heaps(qi)
-                if (h.size < kLocal) h.enqueue(cand)
-                else if (ord.lt(cand, h.head)) { h.dequeue(); h.enqueue(cand) }
-              }
-              qi += 1
-            }
-          }
-        }
-        heaps.iterator.zipWithIndex.flatMap { case (h, qi) =>
-          h.iterator.map { case (d, v) => (qs(qi), v, d) }
-        }
-      }.toDF("q_id", "vec_id", "adist")
-    val wRank = Window.partitionBy(col("q_id")).orderBy(col("adist"), col("vec_id"))
-    topLocal
-      .withColumn("rank", row_number().over(wRank).cast("long"))
-      .filter(col("rank") <= topK)
-      .select(col("q_id"), col("rank"), col("vec_id"), col("adist"))
-      .orderBy(col("q_id"), col("rank"))
+    val vecs = adcInput(emb, "c65/c71: residual IVFADC")
+    val ix = residualIndex(emb, centFrame)
+    adcServe(ix, pullVecs(vecs, col("vec_id") < nQueries), nprobe, topK, vecs)
   }
 
   /** The seed codebooks of a corpus (first-16-vector slices) in the
     * serving layout — spec hook for trained-vs-seed comparisons. */
   private[graft] def seedBooksOf(emb: DataFrame): Array[Array[Array[Double]]] =
-    seedBooks(emb.filter(col("vec_id") < PqCodebookK)
-      .select(col("vec_id"), col("embedding").cast("array<double>"))
-      .collect()
-      .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray)
-      .sortBy(_._1).map(_._2))
+    seedBooks(pullVecs(emb, col("vec_id") < PqCodebookK).map(_._2))
 
   /** Mean PQ quantization distortion of a codebook over a corpus —
-    * mean over vectors of Σ_m min_k cell d2, the objective the
-    * per-subspace trainer descends (spec hook: trained ≤ seed). */
+    * mean over vectors of Σ_m min_k cell d2 (the cell of the code
+    * [[PqIndex.encode]] picks), the objective the per-subspace trainer
+    * descends (spec hook: trained ≤ seed). */
   private[graft] def pqDistortion(emb: DataFrame,
       books: Array[Array[Array[Double]]]): Double = {
     val spark0 = emb.sparkSession
-    val bc = spark0.sparkContext.broadcast(books)
+    val bc = spark0.sparkContext.broadcast(PqIndex(books))
     import spark0.implicits._
     emb.select(col("vec_id"), col("embedding").cast("array<double>"))
       .as[(Long, Array[Double])]
       .map { case (_, v) =>
-        val cb = bc.value
+        val ix = bc.value
+        val codes = new Array[Int](PqSubspaces)
+        ix.encode(v, codes, null)
         var tot = 0.0
         var m = 0
-        while (m < PqSubspaces) {
-          var best = Double.MaxValue
-          var k = 0
-          while (k < cb(m).length) {
-            val d = pqCellD2(v, cb, k, m)
-            if (d < best) best = d
-            k += 1
-          }
-          tot += best
-          m += 1
-        }
+        while (m < PqSubspaces) { tot += pqCellD2(v, ix.books, codes(m), m); m += 1 }
         tot
       }.agg(avg(col("value"))).head.getDouble(0)
   }
@@ -912,158 +939,15 @@ object Similarity {
     * over [[c60IvfPqAdc]]'s TWO-dimensional dial (the round-8
     * verdict: "the nprobe×code trade ships unmeasured"): for every
     * (nprobe, m_budget) cell, mean recall@k of IVFADC serving against
-    * the exact c6 baseline over the bounded query set. One corpus
-    * kernel pass serves EVERY cell — clusters are ranked once per
-    * query at max(nprobe) and a cell just reads a prefix; codes are
-    * encoded once and a budget reads a prefix of the running ADC sum
-    * (rounded at each budget point, c47's round-then-sum contract
-    * per cell). Queries with no surfaced neighbors in a cell count
-    * recall 0 (the loss is real), via the cell×query grid.
-    *
-    * Report grain: |cells| rows; the corpus is touched once by the
-    * kernel and once by the exact baseline. */
+    * the exact c6 baseline over the bounded query set — one
+    * [[recallGrid]]: the corpus is touched once by the kernel and
+    * once by the exact baseline. */
   def c66IvfPqRecall(emb: DataFrame, nQueries: Int = DefaultQueryCount,
       k: Int = PqTopK, nprobes: Seq[Int] = RecallNprobes,
       mBudgets: Seq[Int] = RecallMBudgets): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(nprobes.nonEmpty && nprobes == nprobes.distinct.sorted,
-      s"nprobes must be strictly ascending: $nprobes")
-    require(mBudgets.nonEmpty && mBudgets == mBudgets.distinct.sorted
-        && mBudgets.last <= PqSubspaces,
-      s"m budgets must be strictly ascending and ≤ $PqSubspaces: $mBudgets")
-    val dims = 64
-    val guarded = emb.filter(assert_true(size(col("embedding")) >= dims,
-      concat(lit(s"c66: IVFADC needs ≥$dims dims, embedding has "),
-        size(col("embedding")))).isNull)
-    val bound = math.max(PqCodebookK, math.max(DefaultCentroidCount, nQueries))
-    val all = guarded.filter(col("vec_id") < bound)
-      .select(col("vec_id"), col("embedding").cast("array<double>"))
-      .collect()
-      .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray)
-      .sortBy(_._1)
-    val seedVecs = all.filter(_._1 < PqCodebookK).map(_._2)
-    require(seedVecs.length == PqCodebookK,
-      s"c66: corpus has ${seedVecs.length} vectors below id $PqCodebookK — codebook incomplete")
-    val cbLocal = seedBooks(seedVecs)
-    val centLocal = all.filter(_._1 < DefaultCentroidCount).map(_._2)
-    require(centLocal.length == DefaultCentroidCount,
-      s"c66: corpus has ${centLocal.length} vectors below id $DefaultCentroidCount — centroids incomplete")
-    val centNorm = centLocal.map(c => math.sqrt(dot64(c, c)))
-    val qVecs = all.filter(_._1 < nQueries)
-    val qArr = qVecs.map(_._1)
-    val lut3 = Array.tabulate(qArr.length, PqSubspaces, PqCodebookK)(
-      (qi, m, k2) => pqCellD2(qVecs(qi)._2, cbLocal, k2, m))
-    val npMax = nprobes.max
-    // ranked probe PREFIX per query at the largest nprobe — cell np
-    // reads ranks [0, np)
-    val probesRanked = qVecs.map { case (_, qv) =>
-      ivfTopClusters(qv, centLocal, centNorm, npMax)
-    }
-    val anyProbe = Array.tabulate(DefaultCentroidCount)(c =>
-      probesRanked.exists(_.contains(c)))
-    val spark0 = emb.sparkSession
-    val npArr = nprobes.toArray
-    val mbArr = mBudgets.toArray
-    val bc = spark0.sparkContext.broadcast(
-      (qArr, lut3, cbLocal, centLocal, centNorm, probesRanked, anyProbe, npArr, mbArr))
-    import spark0.implicits._
-    val kLocal = k
-    val topLocal = guarded
-      .select(col("vec_id"), col("embedding").cast("array<double>"))
-      .as[(Long, Array[Double])]
-      .mapPartitions { it =>
-        val (qs, lut, cb, cent, cn, ranked, anyP, nps, mbs) = bc.value
-        val ord = Ordering.Tuple2[Double, Long]
-        // heap per (np, mb, query) cell
-        val heaps = Array.fill(nps.length * mbs.length * qs.length)(
-          scala.collection.mutable.PriorityQueue.empty[(Double, Long)](ord))
-        val codes = new Array[Int](PqSubspaces)
-        val sums = new Array[Double](mbs.length)
-        it.foreach { case (vec, v) =>
-          val cluster = ivfTopClusters(v, cent, cn, 1)(0)
-          if (anyP(cluster)) {
-            var m = 0
-            while (m < PqSubspaces) {
-              var bestK = 0
-              var bestD = Double.MaxValue
-              var k2 = 0
-              while (k2 < cb(m).length) {
-                val sr = pqCellD2(v, cb, k2, m)
-                if (sr < bestD) { bestD = sr; bestK = k2 } // strict: ties keep min k
-                k2 += 1
-              }
-              codes(m) = bestK
-              m += 1
-            }
-            var qi = 0
-            while (qi < qs.length) {
-              if (qs(qi) != vec) {
-                // probe rank of this vector's cluster for query qi
-                val pr = ranked(qi)
-                var r = -1
-                var t = 0
-                while (t < pr.length) { if (r < 0 && pr(t) == cluster) r = t; t += 1 }
-                if (r >= 0) {
-                  // running ADC sum, rounded at each budget point
-                  var s = 0.0
-                  var mi = 0
-                  var mm = 0
-                  while (mm < PqSubspaces && mi < mbs.length) {
-                    s += lut(qi)(mm)(codes(mm))
-                    mm += 1
-                    if (mm == mbs(mi)) { sums(mi) = pqRound4(s); mi += 1 }
-                  }
-                  var npi = 0
-                  while (npi < nps.length) {
-                    if (r < nps(npi)) {
-                      var mbi = 0
-                      while (mbi < mbs.length) {
-                        val cand = (sums(mbi), vec)
-                        val h = heaps((npi * mbs.length + mbi) * qs.length + qi)
-                        if (h.size < kLocal) h.enqueue(cand)
-                        else if (ord.lt(cand, h.head)) { h.dequeue(); h.enqueue(cand) }
-                        mbi += 1
-                      }
-                    }
-                    npi += 1
-                  }
-                }
-              }
-              qi += 1
-            }
-          }
-        }
-        heaps.iterator.zipWithIndex.flatMap { case (h, idx) =>
-          val qi = idx % qs.length
-          val cell = idx / qs.length
-          val npi = cell / mbs.length
-          val mbi = cell % mbs.length
-          h.iterator.map { case (d, v) => (nps(npi), mbs(mbi), qs(qi), v, d) }
-        }
-      }.toDF("nprobe", "m_budget", "q_id", "vec_id", "adist")
-    val wRank = Window.partitionBy(col("nprobe"), col("m_budget"), col("q_id"))
-      .orderBy(col("adist"), col("vec_id"))
-    val approx = topLocal
-      .withColumn("rank", row_number().over(wRank))
-      .filter(col("rank") <= k)
-      .select(col("nprobe"), col("m_budget"), col("q_id"), col("vec_id"))
-    val exact = c6AnnTopK(emb, Some(defaultQueries(emb, nQueries)), k)
-      .select(col("q_id"), col("vec_id")).withColumn("hit", lit(1L))
-    val perQ = approx.join(exact, Seq("q_id", "vec_id"), "left")
-      .groupBy("nprobe", "m_budget", "q_id")
-      .agg(sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-    // the cell×query grid: a query a cell surfaces nothing for reads
-    // recall 0, not a missing row
-    val grid = spark0.createDataFrame(
-      (for { np <- nprobes; mb <- mBudgets; q <- qArr } yield (np, mb, q)))
-      .toDF("nprobe", "m_budget", "q_id")
-    grid.join(perQ, Seq("nprobe", "m_budget", "q_id"), "left")
-      .withColumn("recall",
-        round(coalesce(col("n_hits"), lit(0L)).cast("double") / k, 4))
-      .groupBy("nprobe", "m_budget")
-      .agg(count(lit(1)).as("n_queries"),
-        round(avg(col("recall")), 4).as("mean_recall"))
-      .orderBy("nprobe", "m_budget")
+    val vecs = adcInput(emb, "c66: IVFADC")
+    val (ix, qs) = seedIndex(vecs, nQueries, coarse = true)
+    recallGrid(emb, nQueries, k, ix, qs, vecs, nprobes, mBudgets)
   }
 
   /** c73: the recall grid over the FULLY TRAINED index — c66's audit
@@ -1072,156 +956,14 @@ object Similarity {
     * parameterization away"): mean recall@k vs the exact baseline
     * per (nprobe × code budget) cell, served from trained coarse
     * centroids + residual-trained subquantizer with per-cluster
-    * LUTs. One corpus kernel pass for every cell: clusters ranked
-    * once per query at max nprobe, residual encoded once, budgets
-    * round prefixes of the running per-cluster-LUT sum. */
+    * LUTs — the same [[recallGrid]] as c66. */
   def c73TrainedRecallGrid(emb: DataFrame, nQueries: Int = DefaultQueryCount,
       k: Int = PqTopK, nprobes: Seq[Int] = RecallNprobes,
       mBudgets: Seq[Int] = RecallMBudgets): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(nprobes.nonEmpty && nprobes == nprobes.distinct.sorted,
-      s"nprobes must be strictly ascending: $nprobes")
-    require(mBudgets.nonEmpty && mBudgets == mBudgets.distinct.sorted
-        && mBudgets.last <= PqSubspaces,
-      s"m budgets must be strictly ascending and ≤ $PqSubspaces: $mBudgets")
-    val dims = 64
-    val guarded = emb.filter(assert_true(size(col("embedding")) >= dims,
-      concat(lit(s"c73: IVFADC needs ≥$dims dims, embedding has "),
-        size(col("embedding")))).isNull)
-    val centFrame = trainedCentFrame(emb)
-      .select(col("c_id"), VectorFns.toDoubles(col("c_emb")).as("c_emb"), col("c_nrm"))
-    val rBooks = collectBooks(trainedBooksOver(residualFrameOver(emb, centFrame)))
-    val centRows = centFrame.select(col("c_id"), col("c_emb")).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray)
-      .sortBy(_._1)
-    require(centRows.map(_._1).sameElements(0L until centRows.length),
-      s"c73: centroid ids not the dense prefix: ${centRows.map(_._1).mkString(",")}")
-    val centLocal = centRows.map(_._2)
-    val centNorm = centLocal.map(c => math.sqrt(dot64(c, c)))
-    val nCent = centLocal.length
-    val qVecs = guarded.filter(col("vec_id") < nQueries)
-      .select(col("vec_id"), col("embedding").cast("array<double>"))
-      .collect()
-      .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray)
-      .sortBy(_._1)
-    val qArr = qVecs.map(_._1)
-    val npMax = nprobes.max
-    val probesRanked = qVecs.map { case (_, qv) =>
-      ivfTopClusters(qv, centLocal, centNorm, npMax)
-    }
-    val anyProbe = Array.tabulate(nCent)(c => probesRanked.exists(_.contains(c)))
-    // per-(query, cluster-probed-at-npMax) residual LUT
-    val lutR = Array.tabulate(qArr.length, nCent) { (qi, c) =>
-      if (!probesRanked(qi).contains(c)) null
-      else {
-        val qres = new Array[Double](dims)
-        var i = 0
-        while (i < dims) { qres(i) = qVecs(qi)._2(i) - centLocal(c)(i); i += 1 }
-        Array.tabulate(PqSubspaces, PqCodebookK)((m, k2) => pqCellD2(qres, rBooks, k2, m))
-      }
-    }
-    val spark0 = emb.sparkSession
-    val npArr = nprobes.toArray
-    val mbArr = mBudgets.toArray
-    val bc = spark0.sparkContext.broadcast(
-      (qArr, lutR, rBooks, centLocal, centNorm, probesRanked, anyProbe, npArr, mbArr))
-    import spark0.implicits._
-    val kLocal = k
-    val topLocal = guarded
-      .select(col("vec_id"), col("embedding").cast("array<double>"))
-      .as[(Long, Array[Double])]
-      .mapPartitions { it =>
-        val (qs, lut, cb, cent, cn, ranked, anyP, nps, mbs) = bc.value
-        val ord = Ordering.Tuple2[Double, Long]
-        val heaps = Array.fill(nps.length * mbs.length * qs.length)(
-          scala.collection.mutable.PriorityQueue.empty[(Double, Long)](ord))
-        val codes = new Array[Int](PqSubspaces)
-        val sums = new Array[Double](mbs.length)
-        val res = new Array[Double](64)
-        it.foreach { case (vec, v) =>
-          val cluster = ivfTopClusters(v, cent, cn, 1)(0)
-          if (anyP(cluster)) {
-            var i = 0
-            while (i < 64) { res(i) = v(i) - cent(cluster)(i); i += 1 }
-            var m = 0
-            while (m < PqSubspaces) {
-              var bestK = 0
-              var bestD = Double.MaxValue
-              var k2 = 0
-              while (k2 < cb(m).length) {
-                val sr = pqCellD2(res, cb, k2, m)
-                if (sr < bestD) { bestD = sr; bestK = k2 } // strict: ties keep min k
-                k2 += 1
-              }
-              codes(m) = bestK
-              m += 1
-            }
-            var qi = 0
-            while (qi < qs.length) {
-              if (qs(qi) != vec) {
-                val pr = ranked(qi)
-                var r = -1
-                var t = 0
-                while (t < pr.length) { if (r < 0 && pr(t) == cluster) r = t; t += 1 }
-                if (r >= 0) {
-                  val l = lut(qi)(cluster)
-                  var s = 0.0
-                  var mi = 0
-                  var mm = 0
-                  while (mm < PqSubspaces && mi < mbs.length) {
-                    s += l(mm)(codes(mm))
-                    mm += 1
-                    if (mm == mbs(mi)) { sums(mi) = pqRound4(s); mi += 1 }
-                  }
-                  var npi = 0
-                  while (npi < nps.length) {
-                    if (r < nps(npi)) {
-                      var mbi = 0
-                      while (mbi < mbs.length) {
-                        val cand = (sums(mbi), vec)
-                        val h = heaps((npi * mbs.length + mbi) * qs.length + qi)
-                        if (h.size < kLocal) h.enqueue(cand)
-                        else if (ord.lt(cand, h.head)) { h.dequeue(); h.enqueue(cand) }
-                        mbi += 1
-                      }
-                    }
-                    npi += 1
-                  }
-                }
-              }
-              qi += 1
-            }
-          }
-        }
-        heaps.iterator.zipWithIndex.flatMap { case (h, idx) =>
-          val qi = idx % qs.length
-          val cell = idx / qs.length
-          val npi = cell / mbs.length
-          val mbi = cell % mbs.length
-          h.iterator.map { case (d, v) => (nps(npi), mbs(mbi), qs(qi), v, d) }
-        }
-      }.toDF("nprobe", "m_budget", "q_id", "vec_id", "adist")
-    val wRank = Window.partitionBy(col("nprobe"), col("m_budget"), col("q_id"))
-      .orderBy(col("adist"), col("vec_id"))
-    val approx = topLocal
-      .withColumn("rank", row_number().over(wRank))
-      .filter(col("rank") <= k)
-      .select(col("nprobe"), col("m_budget"), col("q_id"), col("vec_id"))
-    val exact = c6AnnTopK(emb, Some(defaultQueries(emb, nQueries)), k)
-      .select(col("q_id"), col("vec_id")).withColumn("hit", lit(1L))
-    val perQ = approx.join(exact, Seq("q_id", "vec_id"), "left")
-      .groupBy("nprobe", "m_budget", "q_id")
-      .agg(sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-    val grid = spark0.createDataFrame(
-      (for { np <- nprobes; mb <- mBudgets; q <- qArr } yield (np, mb, q)))
-      .toDF("nprobe", "m_budget", "q_id")
-    grid.join(perQ, Seq("nprobe", "m_budget", "q_id"), "left")
-      .withColumn("recall",
-        round(coalesce(col("n_hits"), lit(0L)).cast("double") / k, 4))
-      .groupBy("nprobe", "m_budget")
-      .agg(count(lit(1)).as("n_queries"),
-        round(avg(col("recall")), 4).as("mean_recall"))
-      .orderBy("nprobe", "m_budget")
+    val vecs = adcInput(emb, "c73: IVFADC")
+    val ix = residualIndex(emb, trainedCentFrame(emb))
+    recallGrid(emb, nQueries, k, ix, pullVecs(vecs, col("vec_id") < nQueries), vecs,
+      nprobes, mBudgets)
   }
 
   /** c70: residual-vs-plain IVFADC recall — the r11 spec proves the
@@ -1245,30 +987,17 @@ object Similarity {
     * lesson again). */
   def c70AdcVariants(emb: DataFrame, nQueries: Int = DefaultQueryCount,
       k: Int = PqTopK, nprobe: Int = DefaultNProbe): DataFrame = {
-    val spark0 = emb.sparkSession
-    val exact = c6AnnTopK(emb, Some(defaultQueries(emb, nQueries)), k)
-      .select(col("q_id"), col("vec_id")).withColumn("hit", lit(1L))
     val variants = Seq(
       "ivfadc" -> c60IvfPqAdc(emb, nQueries, k, nprobe),
       "ivfadc_residual" -> c65IvfPqResidual(emb, nQueries, k, nprobe))
-    val perQ = variants.map { case (label, approx) =>
-      approx.join(exact, Seq("q_id", "vec_id"), "left")
-        .groupBy("q_id")
-        .agg(sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-        .withColumn("variant", lit(label))
-    }.reduce(_ unionByName _)
     val qIds = emb.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id")).distinct()
-    val grid = variants.map { case (label, _) =>
-      qIds.withColumn("variant", lit(label))
-    }.reduce(_ unionByName _)
-    grid.join(perQ, Seq("variant", "q_id"), "left")
-      .withColumn("recall",
-        round(coalesce(col("n_hits"), lit(0L)).cast("double") / k, 4))
-      .groupBy("variant")
-      .agg(count(lit(1)).as("n_queries"),
-        round(avg(col("recall")), 4).as("mean_recall"))
-      .orderBy("variant")
+    recallTable(emb, nQueries, k,
+      variants.map { case (v, approx) => approx.withColumn("variant", lit(v)) }
+        .reduce(_ unionByName _),
+      variants.map { case (v, _) => qIds.withColumn("variant", lit(v)) }
+        .reduce(_ unionByName _),
+      "variant")
   }
 
   /** The deterministic CLUSTERED corpus derivation under c78 — the
@@ -1344,10 +1073,15 @@ object Similarity {
       nQueries: Int = DefaultQueryCount, topK: Int = PqTopK,
       nprobe: Int = DefaultNProbe): DataFrame = {
     val emb = graft.sources.Tables.embeddings(spark, dir)
-    val root = SessionMemo.store(spark, s"c79_index_$dir")(
-      buildIndexArtifacts(emb, _))
+    val root = c79Root(spark, emb, dir)
     serveStoredIndex(spark, emb, root, nQueries, topK, nprobe)
   }
+
+  /** The c79 index root of a corpus: ONE build per (session, corpus),
+    * shared by every stored-index consumer — a deployment maintains
+    * one index and runs many consumers on it. */
+  private def c79Root(spark: SparkSession, emb: DataFrame, dir: String): String =
+    SessionMemo.store(spark, s"c79_index_$dir")(buildIndexArtifacts(emb, _))
 
   /** c131's candidate predicate — a selective (~10%) metadata filter,
     * the regime where post-filtering a top-k collapses (most of an
@@ -1381,8 +1115,7 @@ object Similarity {
       nQueries: Int = DefaultQueryCount, topK: Int = PqTopK,
       nprobe: Int = DefaultNProbe, label: Long = FilterLabel): DataFrame = {
     val emb = graft.sources.Tables.embeddings(spark, dir)
-    val root = SessionMemo.store(spark, s"c79_index_$dir")(
-      buildIndexArtifacts(emb, _))
+    val root = c79Root(spark, emb, dir)
     val attrRoot = SessionMemo.store(spark, s"c131_attr_$dir") { r =>
       spark.read.parquet(s"$root/codes")
         .join(emb.select(col("vec_id"), col("label")), Seq("vec_id"))
@@ -1411,8 +1144,7 @@ object Similarity {
     * codes-scan projection, shared by c144 and its spec recount. */
   private[graft] def storedAssignment(spark: SparkSession, dir: String): DataFrame = {
     val emb = graft.sources.Tables.embeddings(spark, dir)
-    val root = SessionMemo.store(spark, s"c79_index_$dir")(
-      buildIndexArtifacts(emb, _))
+    val root = c79Root(spark, emb, dir)
     spark.read.parquet(s"$root/codes")
       .select(col("vec_id").as("doc_id"), col("cluster"))
   }
@@ -1770,33 +1502,24 @@ object Similarity {
       depth: Int = RerankDepth): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val emb = graft.sources.Tables.embeddings(spark, dir)
-    val idxRoot = SessionMemo.store(spark, s"c79_index_$dir")(
-      buildIndexArtifacts(emb, _))
+    val idxRoot = c79Root(spark, emb, dir)
     // stage 1 is c158's memoized candidate frame — the one sketch
     // scoring pass per session serves both rerank modes
     val cand = sketchCandidates(spark, dir, nQueries, depth)
-    val (rBooks, centLocal, _) = loadArtifacts(spark, idxRoot)
-    val qVecs = emb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id"), col("embedding").cast("array<double>")).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toMap
-    val bc = spark.sparkContext.broadcast((qVecs, rBooks, centLocal))
+    val ix = loadArtifacts(spark, idxRoot)
+    val qVecs = pullVecs(emb, col("vec_id") < nQueries).toMap
+    val bc = spark.sparkContext.broadcast((qVecs, ix))
     val codesCand = keyedRows(spark.read.parquet(s"$idxRoot/codes"),
       cand.select("vec_id").distinct())
     import spark.implicits._
-    val dims = PqSubspaces * PqSubDim
     val scored = cand
       .join(codesCand.select(col("vec_id"), col("cluster").cast("int"), col("codes")),
         Seq("vec_id"))
       .as[(Long, Long, Long, Int, Array[Int])]
       .map { case (vec, q, skRank, cluster, cs) =>
-        val (qv, books, cents) = bc.value
-        val qe = qv(q)
-        val qres = new Array[Double](dims)
-        var i = 0
-        while (i < dims) { qres(i) = qe(i) - cents(cluster)(i); i += 1 }
+        val (qv, ix0) = bc.value
         var s = 0.0
-        var m = 0
-        while (m < PqSubspaces) { s += pqCellD2(qres, books, cs(m), m); m += 1 }
+        ix0.cells(qv(q), cluster, cs).foreach(d => s += d)
         (q, vec, skRank, pqRound4(s))
       }.toDF("q_id", "vec_id", "sk_rank", "adist")
     val w2 = Window.partitionBy(col("q_id")).orderBy(col("adist"), col("vec_id"))
@@ -1889,127 +1612,43 @@ object Similarity {
     * a deployment picks its nprobe from, and the table c133's OOD
     * fallback rate is budgeted against.
     *
-    * One pass, not |levels| serves: the codes scan runs ONCE at full
-    * probe depth; each candidate's distance is computed once and
-    * offered to every level whose probe set contains its cluster
-    * (per-(level, query) bounded heaps — the sweep's working state is
-    * |levels|·|Q|·k rows, never the corpus). The probe ORDER per
-    * query is the centroid ranking serving already computes; level
-    * membership is rank < nprobe, so level L's top-k is exactly what
-    * a standalone serve at nprobe = L returns (spec-pinned against
-    * [[c79StoredIndexServe]]). Scan mass is priced analytically from
+    * One pass, not |levels| serves: [[recallGrid]] over the codes
+    * with the levels as its nprobe axis — each candidate priced once,
+    * level membership is probe rank < nprobe, so level L's top-k is
+    * exactly what a standalone serve at nprobe = L returns
+    * (spec-pinned against [[c79StoredIndexServe]]). Scan mass is priced analytically from
     * the ≤ nCent cluster sizes (bounded collect, documented), not by
     * re-scanning. Audit-class cost (the full-probe pass ≡ one
     * worst-case serve over the codes — M bytes/vector, never raw
     * embeddings); the exact leg is c6's one corpus pass. */
   def c136NprobeSweep(spark: SparkSession, dir: String,
       nQueries: Int = DefaultQueryCount, topK: Int = PqTopK): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val emb = graft.sources.Tables.embeddings(spark, dir)
-    val root = SessionMemo.store(spark, s"c79_index_$dir")(
-      buildIndexArtifacts(emb, _))
-    val dims = PqSubspaces * PqSubDim
-    val (rBooks, centLocal, centNorm) = loadArtifacts(spark, root)
-    val nCent = centLocal.length
-    val levels = NprobeLevels.filter(_ <= nCent).toArray
-    val qVecs = emb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id"), col("embedding").cast("array<double>"))
-      .collect()
-      .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray)
-      .sortBy(_._1)
-    val qArr = qVecs.map(_._1)
-    // full probe ORDER per query: ranks(qi)(c) = c's position in the
-    // centroid ranking (0 = nearest); level L probes rank < L
-    val ranks = qVecs.map { case (_, qv) =>
-      val order = ivfTopClusters(qv, centLocal, centNorm, nCent)
-      val r = new Array[Int](nCent)
-      var i = 0
-      while (i < order.length) { r(order(i)) = i; i += 1 }
-      r
-    }
-    val lutR = Array.tabulate(qArr.length, nCent) { (qi, c) =>
-      val qres = new Array[Double](dims)
-      var i = 0
-      while (i < dims) { qres(i) = qVecs(qi)._2(i) - centLocal(c)(i); i += 1 }
-      Array.tabulate(PqSubspaces, PqCodebookK)((m, k) => pqCellD2(qres, rBooks, k, m))
-    }
-    val bc = spark.sparkContext.broadcast((qArr, lutR, ranks, levels))
     import spark.implicits._
-    val kLocal = topK
-    val topPerLevel = spark.read.parquet(s"$root/codes")
-      .select(col("vec_id"), col("cluster").cast("int"), col("codes"))
-      .as[(Long, Int, Array[Int])]
-      .mapPartitions { it =>
-        val (qs, lut, rk, lv) = bc.value
-        val ord = Ordering.Tuple2[Double, Long]
-        val heaps = Array.fill(lv.length, qs.length)(
-          scala.collection.mutable.PriorityQueue.empty[(Double, Long)](ord))
-        it.foreach { case (vec, cluster, cs) =>
-          var qi = 0
-          while (qi < qs.length) {
-            if (qs(qi) != vec) {
-              val crank = rk(qi)(cluster)
-              var s = -1.0 // distance priced once per (query, candidate)
-              var li = 0
-              while (li < lv.length) {
-                if (crank < lv(li)) {
-                  if (s < 0) {
-                    val l = lut(qi)(cluster)
-                    var acc = 0.0
-                    var mm = 0
-                    while (mm < PqSubspaces) { acc += l(mm)(cs(mm)); mm += 1 }
-                    s = pqRound4(acc)
-                  }
-                  val cand = (s, vec)
-                  val h = heaps(li)(qi)
-                  if (h.size < kLocal) h.enqueue(cand)
-                  else if (ord.lt(cand, h.head)) { h.dequeue(); h.enqueue(cand) }
-                }
-                li += 1
-              }
-            }
-            qi += 1
-          }
-        }
-        heaps.iterator.zipWithIndex.flatMap { case (hs, li) =>
-          hs.iterator.zipWithIndex.flatMap { case (h, qi) =>
-            h.iterator.map { case (d, v) => (lv(li).toLong, qs(qi), v, d) }
-          }
-        }
-      }.toDF("nprobe", "q_id", "vec_id", "adist")
-    val wR = Window.partitionBy(col("nprobe"), col("q_id"))
-      .orderBy(col("adist"), col("vec_id"))
-    val topk = topPerLevel
-      .withColumn("rank", row_number().over(wR))
-      .filter(col("rank") <= topK)
-    val exact = c6AnnTopK(emb, Some(defaultQueries(emb, nQueries)), topK)
-      .select(col("q_id"), col("vec_id")).withColumn("hit", lit(1L))
-    val perQ = topk.join(exact, Seq("q_id", "vec_id"), "left")
-      .groupBy("nprobe", "q_id")
-      .agg(sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-    // complete (level, query) grid so a zero-hit query still counts
-    val grid = levels.map(_.toLong).toSeq.toDF("nprobe")
-      .crossJoin(qArr.toSeq.toDF("q_id"))
-    val rec = grid.join(perQ, Seq("nprobe", "q_id"), "left")
-      .na.fill(0L, Seq("n_hits"))
-      .groupBy("nprobe")
-      .agg(count(lit(1)).as("n_queries"),
-        round(avg(col("n_hits").cast("double") / topK), 4).as("mean_recall"))
+    val emb = graft.sources.Tables.embeddings(spark, dir)
+    val root = c79Root(spark, emb, dir)
+    val ix = loadArtifacts(spark, root)
+    val nCent = ix.nCent
+    val levels = NprobeLevels.filter(_ <= nCent)
+    val qs = pullVecs(emb, col("vec_id") < nQueries)
+    val rec = recallGrid(emb, nQueries, topK, ix, qs, storedCodes(spark, root, "codes"),
+      levels, Seq(PqSubspaces))
     // analytic scan mass off the ≤ nCent cluster sizes (bounded
-    // collect — the same class as the centroid pulls)
+    // collect — the same class as the centroid pulls); the full probe
+    // ORDER per query is the one the scan ranks with
+    val ranks = probeRanks(ix, qs, nCent)
     val sizes = spark.read.parquet(s"$root/codes")
       .groupBy("cluster").agg(count(lit(1)).as("sz")).collect()
       .map(r => r.getLong(0).toInt -> r.getLong(1)).toMap
     val scanned = levels.map { l =>
-      val total = qArr.indices.map { qi =>
+      val total = qs.indices.map { qi =>
         (0 until nCent).collect {
           case c if ranks(qi)(c) < l => sizes.getOrElse(c, 0L)
         }.sum - 1L // the query itself sits in its rank-0 cluster
       }.sum
-      (l.toLong, total)
-    }.toSeq.toDF("nprobe", "n_scanned")
+      (l, total)
+    }.toDF("nprobe", "n_scanned")
     rec.join(scanned, Seq("nprobe"))
-      .select(col("nprobe"), col("n_queries"), col("n_scanned"),
+      .select(col("nprobe").cast("long"), col("n_queries"), col("n_scanned"),
         col("mean_recall"))
       .orderBy("nprobe")
   }
@@ -2018,87 +1657,50 @@ object Similarity {
     * `root` (the upsert store's at-rest discipline applied to the
     * index): one corpus kernel pass assigns, residual-encodes, and
     * codes EVERY vector — an index stores the whole corpus, unlike
-    * the serving kernels' probed-cluster skip. */
+    * the serving scan's probed-cluster skip. */
   private[graft] def buildIndexArtifacts(emb: DataFrame, root: String): Unit = {
-    val dims = PqSubspaces * PqSubDim
-    val guarded = emb.filter(assert_true(size(col("embedding")) >= dims,
-      concat(lit(s"c79: the index needs ≥$dims dims, embedding has "),
-        size(col("embedding")))).isNull)
-    val centFrame = trainedCentFrame(emb)
-      .select(col("c_id"), VectorFns.toDoubles(col("c_emb")).as("c_emb"), col("c_nrm"))
-    val books = trainedBooksOver(residualFrameOver(emb, centFrame))
+    val centFrame = doubleCentroids(trainedCentFrame(emb))
     centFrame.write.mode("overwrite").parquet(s"$root/centroids")
-    books.select(col("m"), col("k"), col("csub"))
+    trainedBooksOver(residualFrameOver(emb, centFrame))
+      .select(col("m"), col("k"), col("csub"))
       .write.mode("overwrite").parquet(s"$root/codebooks")
-    val rBooks = collectBooks(books)
-    val centRows = centFrame.select(col("c_id"), col("c_emb")).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray)
-      .sortBy(_._1)
-    require(centRows.map(_._1).sameElements(0L until centRows.length),
-      s"c79: centroid ids not the dense prefix: ${centRows.map(_._1).mkString(",")}")
-    val centLocal = centRows.map(_._2)
-    val centNorm = centLocal.map(c => math.sqrt(dot64(c, c)))
-    encodeWithArtifacts(guarded, rBooks, centLocal, centNorm)
+    // the memoized trainers are hits here: the index is the one above
+    encodeFrame(residualIndex(emb, trainedCentFrame(emb)), adcInput(emb, "c79: the index"))
       .write.mode("overwrite").parquet(s"$root/codes")
   }
 
-  /** The index ENCODE kernel — assign, residual, code — over an
-    * arbitrary vector frame, against in-memory artifacts. One
-    * spelling shared by the initial build and the incremental append
-    * (c81), so the delta path cannot drift from the base path. */
-  private def encodeWithArtifacts(vecs: DataFrame,
-      rBooks: Array[Array[Array[Double]]], centLocal: Array[Array[Double]],
-      centNorm: Array[Double]): DataFrame = {
+  /** (vec_id, cluster, codes) for every vector of `vecs` under `ix` —
+    * [[PqIndex.encode]] with no skip. One spelling shared by the
+    * initial build, the incremental append (c81) and the churn
+    * re-encode (c82), so the delta paths cannot drift from the base
+    * path. */
+  private def encodeFrame(ix: PqIndex, vecs: DataFrame): DataFrame = {
     val spark0 = vecs.sparkSession
-    val bc = spark0.sparkContext.broadcast((rBooks, centLocal, centNorm))
+    val bc = spark0.sparkContext.broadcast(ix)
     import spark0.implicits._
     vecs
       .select(col("vec_id"), col("embedding").cast("array<double>"))
       .as[(Long, Array[Double])]
       .mapPartitions { it =>
-        val (cb, cent, cn) = bc.value
+        val ix0 = bc.value
+        val buf = new Array[Double](PqSubspaces * PqSubDim)
         it.map { case (vec, v) =>
-          val cluster = ivfTopClusters(v, cent, cn, 1)(0)
-          val res = new Array[Double](v.length)
-          var i = 0
-          while (i < res.length) { res(i) = v(i) - cent(cluster)(i); i += 1 }
           val cs = new Array[Int](PqSubspaces)
-          var m = 0
-          while (m < PqSubspaces) {
-            var bestK = 0
-            var bestD = Double.MaxValue
-            var k = 0
-            while (k < cb(m).length) {
-              val d = pqCellD2(res, cb, k, m)
-              if (d < bestD) { bestD = d; bestK = k } // strict: ties keep min k
-              k += 1
-            }
-            cs(m) = bestK
-            m += 1
-          }
-          (vec, cluster.toLong, cs)
+          (vec, ix0.encode(v, cs, buf).toLong, cs)
         }
       }.toDF("vec_id", "cluster", "codes")
   }
 
-  /** Load a stored index root's (codebooks, centroids, norms) — the
-    * bounded artifact pull the serve/append paths share. */
-  // collected artifacts are BOUNDED (K codebook cells, k centroids)
-  // and immutable for a store root's lifetime — memoized per
-  // (session, root) so the seven serving consumers pay the two
-  // collect jobs once per session, not once per query.
-  private def loadArtifacts(spark: SparkSession, root: String)
-      : (Array[Array[Array[Double]]], Array[Array[Double]], Array[Double]) =
+  /** Load a stored index root as its [[PqIndex]] (residual-trained
+    * books + dense centroids) — the bounded artifact pull (K codebook
+    * cells, k centroids) every stored-index consumer shares. The
+    * artifacts are immutable for a store root's lifetime, so they are
+    * memoized per (session, root): two collect jobs per session, not
+    * per query. */
+  private def loadArtifacts(spark: SparkSession, root: String): PqIndex =
     SessionMemo(spark, s"artifacts:$root") {
-      val rBooks = collectBooks(spark.read.parquet(s"$root/codebooks"))
-      val centRows = spark.read.parquet(s"$root/centroids")
-        .select(col("c_id"), col("c_emb")).collect()
-        .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray)
-        .sortBy(_._1)
-      require(centRows.map(_._1).sameElements(0L until centRows.length),
-        s"stored centroid ids not the dense prefix: ${centRows.map(_._1).mkString(",")}")
-      val centLocal = centRows.map(_._2)
-      (rBooks, centLocal, centLocal.map(c => math.sqrt(dot64(c, c))))
+      PqIndex(collectBooks(spark.read.parquet(s"$root/codebooks")),
+        Some(denseCentroids(spark.read.parquet(s"$root/centroids"))), residual = true)
     }
 
   /** The base/delta boundary for the incremental index (c81):
@@ -2117,7 +1719,7 @@ object Similarity {
     * production loop after c79's train-once: new vectors arrive and
     * the index must grow WITHOUT retraining): the base corpus trains
     * and encodes as c79 does; the delta is then encoded UNDER THE
-    * STORED centroids/codebooks ([[encodeWithArtifacts]] — the same
+    * STORED centroids/codebooks ([[encodeFrame]] — the same
     * kernel the build ran, fed from [[loadArtifacts]]) and APPENDED
     * to the codes table. Serving reads the unified codes store. The
     * oracle replays exactly that asymmetry in one query — both
@@ -2133,9 +1735,7 @@ object Similarity {
     val emb = graft.sources.Tables.embeddings(spark, dir)
     val root = SessionMemo.store(spark, s"c81_index_$dir") { r =>
       buildIndexArtifacts(emb.filter(isBaseVec(col("vec_id"))), r)
-      val (rBooks, centLocal, centNorm) = loadArtifacts(spark, r)
-      encodeWithArtifacts(emb.filter(!isBaseVec(col("vec_id"))),
-          rBooks, centLocal, centNorm)
+      encodeFrame(loadArtifacts(spark, r), emb.filter(!isBaseVec(col("vec_id"))))
         .write.mode("append").parquet(s"$r/codes")
     }
     serveStoredIndex(spark, emb, root, nQueries, topK, nprobe)
@@ -2190,12 +1790,10 @@ object Similarity {
       dir: String): String =
     SessionMemo.store(spark, s"c82_index_$dir") { r =>
       buildIndexArtifacts(emb, r) // v1: the pre-churn index
-      val (rBooks, centLocal, centNorm) = loadArtifacts(spark, r)
       val v1 = spark.read.parquet(s"$r/codes")
       val untouched = v1.filter(!isDroppedVec(col("vec_id")) && !isUpdatedVec(col("vec_id")))
-      val reencoded = encodeWithArtifacts(
-        churnedCorpus(emb).filter(isUpdatedVec(col("vec_id"))),
-        rBooks, centLocal, centNorm)
+      val reencoded = encodeFrame(loadArtifacts(spark, r),
+        churnedCorpus(emb).filter(isUpdatedVec(col("vec_id"))))
       untouched.unionByName(reencoded)
         .write.mode("overwrite").parquet(s"$r/codes_v2")
     }
@@ -2239,10 +1837,8 @@ object Similarity {
     // sides (vec_id is the join key), without a second kernel pass.
     val perVec = SessionMemo.frame("churned_pvec_err", emb)(Materialize.frame {
       val root = churnedIndexRoot(spark, emb, dir)
-      val (rBooks, centLocal, _) = loadArtifacts(spark, root)
-      val bc = spark.sparkContext.broadcast((rBooks, centLocal))
+      val bc = spark.sparkContext.broadcast(loadArtifacts(spark, root))
       import spark.implicits._
-      val dims = PqSubspaces * PqSubDim
       val live = churnedCorpus(emb)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       spark.read.parquet(s"$root/codes_v2")
@@ -2251,17 +1847,10 @@ object Similarity {
         .select(col("vec_id"), col("cluster"), col("codes"), col("v"))
         .as[(Long, Int, Array[Int], Array[Double])]
         .mapPartitions { it =>
-          val (cb, cent) = bc.value
+          val ix = bc.value
           it.map { case (vec, cluster, codes, v) =>
-            val res = new Array[Double](dims)
-            var i = 0
-            while (i < dims) { res(i) = v(i) - cent(cluster)(i); i += 1 }
             var e4 = 0L
-            var m = 0
-            while (m < PqSubspaces) {
-              e4 += math.round(pqCellD2(res, cb, codes(m), m) * 1e4)
-              m += 1
-            }
+            ix.cells(v, cluster, codes).foreach(d => e4 += math.round(d * 1e4))
             (vec, cluster.toLong, e4)
           }
         }.toDF("vec_id", "cluster", "qerr_e4")
@@ -2590,77 +2179,25 @@ object Similarity {
     * the repair root against the churned root's v1 geometry). */
   private def serveStoredIndex(spark: SparkSession, emb: DataFrame, root: String,
       nQueries: Int, topK: Int, nprobe: Int, codesDir: String = "codes",
-      queryFilter: Option[org.apache.spark.sql.Column] = None,
-      candFilter: Option[org.apache.spark.sql.Column] = None,
+      queryFilter: Option[Column] = None,
+      candFilter: Option[Column] = None,
       localBooks: Map[Long, Array[Array[Array[Double]]]] = Map.empty,
       codesRoot: Option[String] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val dims = PqSubspaces * PqSubDim
-    val (rBooks, centLocal, centNorm) = loadArtifacts(spark, root)
-    val nCent = centLocal.length
-    val qVecs = emb.filter(queryFilter.getOrElse(col("vec_id") < nQueries))
-      .select(col("vec_id"), col("embedding").cast("array<double>"))
-      .collect()
-      .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray)
-      .sortBy(_._1)
-    val qArr = qVecs.map(_._1)
-    val probeSets = qVecs.map { case (_, qv) =>
-      val flags = new Array[Boolean](nCent)
-      ivfTopClusters(qv, centLocal, centNorm, nprobe).foreach(flags(_) = true)
-      flags
-    }
-    val lutR = Array.tabulate(qArr.length, nCent) { (qi, c) =>
-      if (!probeSets(qi)(c)) null
-      else {
-        val bks = localBooks.getOrElse(c.toLong, rBooks)
-        val qres = new Array[Double](dims)
-        var i = 0
-        while (i < dims) { qres(i) = qVecs(qi)._2(i) - centLocal(c)(i); i += 1 }
-        Array.tabulate(PqSubspaces, PqCodebookK)((m, k) => pqCellD2(qres, bks, k, m))
-      }
-    }
-    val bc = spark.sparkContext.broadcast((qArr, lutR, probeSets))
-    import spark.implicits._
-    val kLocal = topK
-    // the codes artifact is a small single-file parquet: spread the
-    // scan so the ADC kernel below runs cores-wide (parallelKernelInput
-    // no-ops once the artifact carries >= cores splits)
-    val topLocal = graft.sources.Tables.parallelKernelInput(candFilter
-      .foldLeft(spark.read.parquet(s"${codesRoot.getOrElse(root)}/$codesDir"))(_ filter _))
-      .select(col("vec_id"), col("cluster").cast("int"), col("codes"))
-      .as[(Long, Int, Array[Int])]
-      .mapPartitions { it =>
-        val (qs, lut, probes) = bc.value
-        val ord = Ordering.Tuple2[Double, Long]
-        val heaps = Array.fill(qs.length)(
-          scala.collection.mutable.PriorityQueue.empty[(Double, Long)](ord))
-        it.foreach { case (vec, cluster, cs) =>
-          var qi = 0
-          while (qi < qs.length) {
-            if (qs(qi) != vec && probes(qi)(cluster)) {
-              val l = lut(qi)(cluster)
-              var s = 0.0
-              var mm = 0
-              while (mm < PqSubspaces) { s += l(mm)(cs(mm)); mm += 1 }
-              val cand = (pqRound4(s), vec)
-              val h = heaps(qi)
-              if (h.size < kLocal) h.enqueue(cand)
-              else if (ord.lt(cand, h.head)) { h.dequeue(); h.enqueue(cand) }
-            }
-            qi += 1
-          }
-        }
-        heaps.iterator.zipWithIndex.flatMap { case (h, qi) =>
-          h.iterator.map { case (d, v) => (qs(qi), v, d) }
-        }
-      }.toDF("q_id", "vec_id", "adist")
-    val wRank = Window.partitionBy(col("q_id")).orderBy(col("adist"), col("vec_id"))
-    topLocal
-      .withColumn("rank", row_number().over(wRank).cast("long"))
-      .filter(col("rank") <= topK)
-      .select(col("q_id"), col("rank"), col("vec_id"), col("adist"))
-      .orderBy(col("q_id"), col("rank"))
+    val ix = loadArtifacts(spark, root).copy(localBooks = localBooks)
+    val qs = pullVecs(emb, queryFilter.getOrElse(col("vec_id") < nQueries))
+    adcServe(ix, qs, nprobe, topK,
+      storedCodes(spark, codesRoot.getOrElse(root), codesDir, candFilter))
   }
+
+  /** A stored codes table (vec_id, cluster, codes[, payload]) as the
+    * scan's input, `candFilter` pushed into the parquet scan. The
+    * artifact is a small single-file parquet: the scan is spread so
+    * the ADC kernel runs cores-wide (parallelKernelInput no-ops once
+    * the artifact carries >= cores splits). */
+  private def storedCodes(spark: SparkSession, root: String, codesDir: String,
+      candFilter: Option[Column] = None): DataFrame =
+    graft.sources.Tables.parallelKernelInput(
+      candFilter.foldLeft(spark.read.parquet(s"$root/$codesDir"))(_ filter _))
 
   /** c55: PQ serving recall against the exact baseline — the
     * measure-don't-guess report for the compressed-domain path: per
@@ -3081,9 +2618,7 @@ object Similarity {
       depth: Int = RerankDepth, nprobe: Int = DefaultNProbe): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val emb = graft.sources.Tables.embeddings(spark, dir)
-    // ONE index per (session, corpus): c79's artifact, shared — a
-    // deployment maintains one index and runs many consumers on it
-    val root = SessionMemo.store(spark, s"c79_index_$dir")(buildIndexArtifacts(emb, _))
+    val root = c79Root(spark, emb, dir)
     val qPred = col("vec_id") % 101 === 0 && col("vec_id") < RrfQueryBound
     val cand = serveStoredIndex(spark, emb, root, nQueries = 0, topK = depth,
         nprobe = nprobe, queryFilter = Some(qPred),
@@ -3130,7 +2665,7 @@ object Similarity {
   def c113PqRerank(emb: DataFrame, nQueries: Int = DefaultQueryCount,
       depth: Int = RerankDepth, k: Int = PqTopK): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val cand = pqAdcServe(emb, None, nQueries, depth)
+    val cand = c47PqAdc(emb, nQueries, depth)
       .select(col("q_id"), col("vec_id"), col("rank").as("adc_rank"))
     val q = withQueryNorm(defaultQueries(emb, nQueries))
     val exact = withNorm(emb)

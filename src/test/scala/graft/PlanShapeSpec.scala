@@ -204,30 +204,17 @@ class PlanShapeSpec extends AnyFunSuite {
       s"c38 plans $exchanges hash exchanges (1 corpus partial-agg + 2 report-sized expected):\n$p")
   }
 
-  test("c47 is one corpus kernel pass + one report-sized rank window (no window sort, no join)") {
-    // scaladoc claims "zero corpus-grain shuffles": the only Window is
-    // the exact rank over ≤ partitions·|Q|·topK heap rows, and the only
-    // hash exchange is that window's q_id partitioning
-    val p = plan("c47_pq_adc")
-    assert("Window \\[".r.findAllIn(p).size == 1,
-      s"c47 plans more than the one report-sized rank window:\n$p")
-    assert(!p.contains("Join"), s"c47's serving path plans a join:\n$p")
-    val exchanges = "Exchange hashpartitioning".r.findAllIn(p).size
-    assert(exchanges <= 1,
-      s"c47 plans $exchanges hash exchanges (only the rank window's expected):\n$p")
-  }
-
   test("c60/c64/c65 serve through one corpus kernel pass + one rank window (zero corpus shuffles)") {
-    // the r8 verdict: c47's pin existed but c60's zero-corpus-shuffle
-    // claim was prose — pin the whole ADC serving family. c64's
-    // trained and c65's residual variants run their TRAINING jobs
-    // eagerly (bounded collects) before the serving plan is built, so
-    // the served plan must look exactly like c47's: one q_id rank
-    // window over heap rows, no join, at most that window's exchange.
-    // c79 serves the same contract off the STORED codes scan — the
-    // artifact read must not cost a plan shape the live compose
-    // doesn't pay
-    for (name <- Seq("c60_ivf_pq", "c64_pq_trained", "c65_ivfpq_residual",
+    // the whole ADC serving family runs one scan: c47's flat PQ and
+    // c60's IVF pruning keep assignment/probe/encode inside the
+    // kernel; c64's trained and c65's residual variants run their
+    // TRAINING jobs eagerly (bounded collects) before the serving plan
+    // is built. So every served plan is the same "zero corpus-grain
+    // shuffles" shape: one rank window over ≤ partitions·|Q|·topK heap
+    // rows, no join, at most that window's exchange. c79 serves the
+    // same contract off the STORED codes scan — the artifact read must
+    // not cost a plan shape the live compose doesn't pay
+    for (name <- Seq("c47_pq_adc", "c60_ivf_pq", "c64_pq_trained", "c65_ivfpq_residual",
         "c71_ivfpq_trained", "c79_stored_serving")) {
       val p = plan(name)
       assert("Window \\[".r.findAllIn(p).size == 1,
@@ -283,18 +270,6 @@ class PlanShapeSpec extends AnyFunSuite {
     val exchanges = "Exchange hashpartitioning".r.findAllIn(p).size
     assert(exchanges <= 1,
       s"c52 plans $exchanges hash exchanges (one doc-grain agg expected):\n$p")
-  }
-
-  test("c60 keeps c47's kernel shape: one rank window, no join, one hash exchange") {
-    // the IVF pruning must not reintroduce a corpus-grain join or
-    // window: assignment/probe/encode all live inside the kernel
-    val p = plan("c60_ivf_pq")
-    assert("Window \\[".r.findAllIn(p).size == 1,
-      s"c60 plans more than the one report-sized rank window:\n$p")
-    assert(!p.contains("Join"), s"c60's serving path plans a join:\n$p")
-    val exchanges = "Exchange hashpartitioning".r.findAllIn(p).size
-    assert(exchanges <= 1,
-      s"c60 plans $exchanges hash exchanges (only the rank window's expected):\n$p")
   }
 
   test("c7's centroid assignment is a map-side struct-max aggregate, not a corpus window") {

@@ -144,6 +144,29 @@ class Round12Spec extends AnyFunSuite {
     }
   }
 
+  test("c73's default cell equals an independent recall recomputation from c71's rows") {
+    // c66's proof pattern one tier up: the trained grid's
+    // (DefaultNProbe, full-code) cell IS c71's serve at the default
+    // dial, recomputed here from c71's own output vs the exact baseline
+    val real = graft.sources.Tables.embeddings(spark, sf)
+    val cells = Similarity.c73TrainedRecallGrid(real).collect()
+      .map(r => (r.getInt(0), r.getInt(1)) -> (r.getLong(2), r.getDouble(3))).toMap
+    val nQ = Similarity.DefaultQueryCount.toLong
+    val k = Similarity.PqTopK
+    val exact = Similarity.c6AnnTopK(real, Some(Similarity.defaultQueries(real)), k)
+      .select(col("q_id"), col("vec_id")).withColumn("hit", lit(1L))
+    val hits = Similarity.c71IvfPqTrained(real)
+      .join(exact, Seq("q_id", "vec_id"), "left")
+      .agg(sum(coalesce(col("hit"), lit(0L)))).head.getLong(0)
+    // mean over ALL queries, missing queries at 0 — the grid's stance
+    val (nCell, fromCell) = cells((Similarity.DefaultNProbe, Similarity.PqSubspaces))
+    assert(nCell == nQ, "the cell prices the full query set")
+    val recomputed = BigDecimal(hits.toDouble / (nQ * k))
+      .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+    assert(math.abs(fromCell - recomputed) <= 2e-4,
+      s"c73 cell $fromCell vs independent c71 recomputation $recomputed")
+  }
+
   test("c71 fully-trained IVFPQ keeps the serving contract and beats seed-residual on the plant") {
     val emb = clusteredCorpus
     val k = Similarity.PqTopK

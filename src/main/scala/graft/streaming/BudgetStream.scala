@@ -3,7 +3,6 @@ package graft.streaming
 import graft.SessionMemo
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import graft.operators.{Materialize, TextAnalysis}
 
 /** The TOKEN-BUDGET admission gate — the door a data-collection run
@@ -84,7 +83,11 @@ object BudgetStream {
 
   /** One micro-batch through the gate — ONE spelling shared by the
     * live stream and the store-grain audit. `batchId` orders the
-    * ledger (poll order = budget consumption order). */
+    * ledger (poll order = budget consumption order). `merges` = the
+    * stored tokenizer's rank-ordered list (the c83 artifact, loaded
+    * once and closed over). Arrival order is the contract being
+    * priced; the in-batch walk is the bucketed [[withArrivalCum]], so
+    * even a GB-sized door batch never funnels through one task. */
   private[graft] def processBatch(batch: DataFrame,
       merges: Array[(String, String)], decisionStore: String,
       ledgerStore: String, batchId: Long,
@@ -96,14 +99,9 @@ object BudgetStream {
     // Σ offered by batches strictly before this one — replay-safe:
     // the ledger row for THIS batch (if a replay already wrote it)
     // is excluded by the id bound, so re-pricing reads the same prior
-    val ledgerPath = new org.apache.hadoop.fs.Path(ledgerStore)
-    val prior =
-      if (ledgerPath.getFileSystem(spark0.sparkContext.hadoopConfiguration)
-          .exists(ledgerPath))
-        spark0.read.parquet(ledgerStore)
-          .filter(col("batch_id") < batchId)
-          .agg(coalesce(sum(col("offered_tok")), lit(0L))).head.getLong(0)
-      else 0L
+    val prior = EventsStream.readStore(spark0, ledgerStore, "batch_id long, offered_tok long")
+      .filter(col("batch_id") < batchId)
+      .agg(coalesce(sum(col("offered_tok")), lit(0L))).head.getLong(0)
     val decisions = withArrivalCum(priced, col("n_tok"), "cum0")
       .withColumn("cum", col("cum0") + prior)
       .select(col("doc_id"),
@@ -118,23 +116,12 @@ object BudgetStream {
       ledgerStore, "batch_id")
   }
 
-  /** Start the live budget gate over a streaming (doc_id, text)
-    * frame. `merges` = the stored tokenizer's rank-ordered list (the
-    * c83 artifact, loaded once and closed over). Arrival order is the
-    * contract being priced; the in-batch walk is the bucketed
-    * [[withArrivalCum]], so even a GB-sized door batch never funnels
-    * through one task. */
-  def budgetGate(docs: DataFrame, merges: Array[(String, String)],
-      decisionStore: String, ledgerStore: String,
-      budget: Long = BudgetTokens,
-      checkpoint: Option[String] = None): StreamingQuery =
-    checkpoint.foldLeft(docs.writeStream)((w, dir) => w.option("checkpointLocation", dir))
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, merges, decisionStore, ledgerStore, batchId, budget)
-        ()
-      }
-      .start()
+  /** The doors' arrival population: every document outside the
+    * `doc_id % 97` benchmark slice, as (doc_id, text, source). */
+  private def doorPop(spark: SparkSession, dir: String): DataFrame =
+    graft.sources.Tables.documents(spark, dir)
+      .select(col("doc_id"), col("text"), col("source"))
+      .filter(col("doc_id") % 97 =!= 0)
 
   /** ONE budget-gate store build per (session, corpus, batch count) —
     * the funnel audits' poll discipline: the population arrives as
@@ -142,14 +129,10 @@ object BudgetStream {
     * through [[processBatch]], the exact code the live stream runs. */
   private def budgetStores(spark: SparkSession, dir: String,
       nBatches: Int): String = {
-    val pop = graft.sources.Tables.documents(spark, dir)
-      .select(col("doc_id"), col("text"))
-      .filter(col("doc_id") % 97 =!= 0)
+    val pop = doorPop(spark, dir)
     val merges = TextAnalysis.storedMerges(spark, dir)
-    SessionMemo.store(spark, s"budget_${dir}_$nBatches") { scratch =>
-      for (i <- 0 until nBatches)
-        processBatch(pop.filter(pmod(col("doc_id"), lit(nBatches)) === i),
-          merges, s"$scratch/decisions", s"$scratch/ledger", i.toLong)
+    Door.replay(spark, s"budget_${dir}_$nBatches", pop, nBatches) { (b, root, i) =>
+      processBatch(b, merges, s"$root/decisions", s"$root/ledger", i)
     }
   }
 
@@ -218,15 +201,11 @@ object BudgetStream {
 
   private def noveltyQuotaStores(spark: SparkSession, dir: String,
       nBatches: Int): String = {
-    val pop = graft.sources.Tables.documents(spark, dir)
-      .select(col("doc_id"), col("text"), col("source"))
-      .filter(col("doc_id") % 97 =!= 0)
+    val pop = doorPop(spark, dir)
     val merges = TextAnalysis.storedMerges(spark, dir)
     val quotas = noveltyQuotas(spark, dir)
-    SessionMemo.store(spark, s"nquota_${dir}_$nBatches") { scratch =>
-      for (i <- 0 until nBatches)
-        processQuotaBatch(pop.filter(pmod(col("doc_id"), lit(nBatches)) === i),
-          merges, quotas, s"$scratch/decisions", s"$scratch/ledger", i.toLong)
+    Door.replay(spark, s"nquota_${dir}_$nBatches", pop, nBatches) { (b, root, i) =>
+      processQuotaBatch(b, merges, quotas, s"$root/decisions", s"$root/ledger", i)
     }
   }
 
@@ -258,15 +237,11 @@ object BudgetStream {
     val priced = Materialize.frame(
       TextAnalysis.bpeCountsDirect(batch.select(col("doc_id"), col("text")), merges)
         .join(batch.select(col("doc_id"), col("source")), Seq("doc_id")))
-    val ledgerPath = new org.apache.hadoop.fs.Path(ledgerStore)
-    val prior: Map[String, Long] =
-      if (ledgerPath.getFileSystem(spark0.sparkContext.hadoopConfiguration)
-          .exists(ledgerPath))
-        spark0.read.parquet(ledgerStore)
-          .filter(col("batch_id") < batchId)
-          .groupBy("source").agg(sum(col("offered_tok")).as("p"))
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      else Map.empty
+    val prior: Map[String, Long] = EventsStream.readStore(spark0, ledgerStore,
+        "source string, offered_tok long, batch_id long, bk string")
+      .filter(col("batch_id") < batchId)
+      .groupBy("source").agg(sum(col("offered_tok")).as("p"))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val qdf = broadcast(quotas.toSeq
       .map { case (s, q) => (s, q, prior.getOrElse(s, 0L)) }
       .toDF("source", "quota", "prior"))
@@ -290,30 +265,13 @@ object BudgetStream {
       ledgerStore, "bk")
   }
 
-  /** Start the live per-source quota gate over a streaming (doc_id,
-    * text, source) frame — the mixture plan enforced at the door. */
-  def quotaGate(docs: DataFrame, merges: Array[(String, String)],
-      quotas: Map[String, Long], decisionStore: String, ledgerStore: String,
-      checkpoint: Option[String] = None): StreamingQuery =
-    checkpoint.foldLeft(docs.writeStream)((w, dir) => w.option("checkpointLocation", dir))
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processQuotaBatch(batch, merges, quotas, decisionStore, ledgerStore, batchId)
-        ()
-      }
-      .start()
-
   private def quotaStores(spark: SparkSession, dir: String,
       nBatches: Int): String = {
-    val pop = graft.sources.Tables.documents(spark, dir)
-      .select(col("doc_id"), col("text"), col("source"))
-      .filter(col("doc_id") % 97 =!= 0)
+    val pop = doorPop(spark, dir)
     val merges = TextAnalysis.storedMerges(spark, dir)
     val quotas = sourceQuotas(spark, dir)
-    SessionMemo.store(spark, s"quota_${dir}_$nBatches") { scratch =>
-      for (i <- 0 until nBatches)
-        processQuotaBatch(pop.filter(pmod(col("doc_id"), lit(nBatches)) === i),
-          merges, quotas, s"$scratch/decisions", s"$scratch/ledger", i.toLong)
+    Door.replay(spark, s"quota_${dir}_$nBatches", pop, nBatches) { (b, root, i) =>
+      processQuotaBatch(b, merges, quotas, s"$root/decisions", s"$root/ledger", i)
     }
   }
 
@@ -343,16 +301,12 @@ object BudgetStream {
     val priced = Materialize.frame(
       TextAnalysis.bpeCountsDirect(batch.select(col("doc_id"), col("text")), merges)
         .join(batch.select(col("doc_id"), col("source")), Seq("doc_id")))
-    val ledgerPath = new org.apache.hadoop.fs.Path(ledgerStore)
-    val (priorS, priorG): (Map[String, Long], Long) =
-      if (ledgerPath.getFileSystem(spark0.sparkContext.hadoopConfiguration)
-          .exists(ledgerPath)) {
-        val prev = spark0.read.parquet(ledgerStore)
-          .filter(col("batch_id") < batchId)
-        (prev.groupBy("source").agg(sum(col("offered_tok")).as("p"))
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap,
-          prev.agg(coalesce(sum(col("survivor_tok")), lit(0L))).head.getLong(0))
-      } else (Map.empty, 0L)
+    val prev = EventsStream.readStore(spark0, ledgerStore,
+        "source string, offered_tok long, survivor_tok long, batch_id long, bk string")
+      .filter(col("batch_id") < batchId)
+    val priorS = prev.groupBy("source").agg(sum(col("offered_tok")).as("p"))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val priorG = prev.agg(coalesce(sum(col("survivor_tok")), lit(0L))).head.getLong(0)
     val qdf = broadcast(quotas.toSeq
       .map { case (s, q) => (s, q, priorS.getOrElse(s, 0L)) }
       .toDF("source", "quota", "prior"))
@@ -406,16 +360,13 @@ object BudgetStream {
       TextAnalysis.bpeCountsDirect(batch.select(col("doc_id"), col("text")), merges)
         .join(batch.select(col("doc_id"), col("source"),
           TextAnalysis.curationReasonOf(col("text")).as("qreason")), Seq("doc_id")))
-    val ledgerPath = new org.apache.hadoop.fs.Path(ledgerStore)
-    val (priorQ, priorG): (Map[String, Long], Long) =
-      if (ledgerPath.getFileSystem(spark0.sparkContext.hadoopConfiguration)
-          .exists(ledgerPath)) {
-        val prev = spark0.read.parquet(ledgerStore)
-          .filter(col("batch_id") < batchId)
-        (prev.groupBy("source").agg(sum(col("quality_tok")).as("p"))
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap,
-          prev.agg(coalesce(sum(col("survivor_tok")), lit(0L))).head.getLong(0))
-      } else (Map.empty, 0L)
+    val prev = EventsStream.readStore(spark0, ledgerStore,
+        "source string, offered_tok long, quality_tok long, survivor_tok long, " +
+          "batch_id long, bk string")
+      .filter(col("batch_id") < batchId)
+    val priorQ = prev.groupBy("source").agg(sum(col("quality_tok")).as("p"))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val priorG = prev.agg(coalesce(sum(col("survivor_tok")), lit(0L))).head.getLong(0)
     val qdf = broadcast(quotas.toSeq
       .map { case (s, q) => (s, q, priorQ.getOrElse(s, 0L)) }
       .toDF("source", "quota", "prior"))
@@ -452,32 +403,13 @@ object BudgetStream {
       ledgerStore, "bk")
   }
 
-  /** Start the live novelty-composed (quality → novelty quota →
-    * budget) door. */
-  def noveltyDoorGate(docs: DataFrame, merges: Array[(String, String)],
-      quotas: Map[String, Long], decisionStore: String, ledgerStore: String,
-      budget: Long = ComposedBudget,
-      checkpoint: Option[String] = None): StreamingQuery =
-    checkpoint.foldLeft(docs.writeStream)((w, dir) => w.option("checkpointLocation", dir))
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processNoveltyDoorBatch(batch, merges, quotas, decisionStore,
-          ledgerStore, batchId, budget)
-        ()
-      }
-      .start()
-
   private[graft] def noveltyDoorStores(spark: SparkSession, dir: String,
       nBatches: Int): String = {
-    val pop = graft.sources.Tables.documents(spark, dir)
-      .select(col("doc_id"), col("text"), col("source"))
-      .filter(col("doc_id") % 97 =!= 0)
+    val pop = doorPop(spark, dir)
     val merges = TextAnalysis.storedMerges(spark, dir)
     val quotas = noveltyQuotas(spark, dir)
-    SessionMemo.store(spark, s"ndoor_${dir}_$nBatches") { scratch =>
-      for (i <- 0 until nBatches)
-        processNoveltyDoorBatch(pop.filter(pmod(col("doc_id"), lit(nBatches)) === i),
-          merges, quotas, s"$scratch/decisions", s"$scratch/ledger", i.toLong)
+    Door.replay(spark, s"ndoor_${dir}_$nBatches", pop, nBatches) { (b, root, i) =>
+      processNoveltyDoorBatch(b, merges, quotas, s"$root/decisions", s"$root/ledger", i)
     }
   }
 
@@ -497,31 +429,13 @@ object BudgetStream {
       .select("doc_id", "source", "stage", "n_tok")
       .orderBy("doc_id")
 
-  /** Start the live composed (quota → budget) gate. */
-  def composedGate(docs: DataFrame, merges: Array[(String, String)],
-      quotas: Map[String, Long], decisionStore: String, ledgerStore: String,
-      budget: Long = ComposedBudget,
-      checkpoint: Option[String] = None): StreamingQuery =
-    checkpoint.foldLeft(docs.writeStream)((w, dir) => w.option("checkpointLocation", dir))
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processComposedBatch(batch, merges, quotas, decisionStore, ledgerStore,
-          batchId, budget)
-        ()
-      }
-      .start()
-
   private def composedStores(spark: SparkSession, dir: String,
       nBatches: Int): String = {
-    val pop = graft.sources.Tables.documents(spark, dir)
-      .select(col("doc_id"), col("text"), col("source"))
-      .filter(col("doc_id") % 97 =!= 0)
+    val pop = doorPop(spark, dir)
     val merges = TextAnalysis.storedMerges(spark, dir)
     val quotas = sourceQuotas(spark, dir)
-    SessionMemo.store(spark, s"composed_${dir}_$nBatches") { scratch =>
-      for (i <- 0 until nBatches)
-        processComposedBatch(pop.filter(pmod(col("doc_id"), lit(nBatches)) === i),
-          merges, quotas, s"$scratch/decisions", s"$scratch/ledger", i.toLong)
+    Door.replay(spark, s"composed_${dir}_$nBatches", pop, nBatches) { (b, root, i) =>
+      processComposedBatch(b, merges, quotas, s"$root/decisions", s"$root/ledger", i)
     }
   }
 
@@ -597,20 +511,19 @@ object BudgetStream {
     // this batch's admitted docs: the decision store cut to the batch
     // (the join carries the batch's text for quality scoring); n_tok
     // rides along so the schedule row is loader-complete
-    val keeps = spark0.read.parquet(s"$stores/decisions")
+    val keeps = EventsStream.readStore(spark0, s"$stores/decisions",
+        "doc_id long, source string, stage string, n_tok long")
       .filter(col("stage") === "keep").select(col("doc_id"), col("n_tok"))
       .join(batch.select(col("doc_id"), col("text"), col("source")), Seq("doc_id"))
     val scored = keeps.select(col("source"), col("doc_id"),
       TextAnalysis.qualityOf(col("text")).as("quality"))
-    val schedPath = new org.apache.hadoop.fs.Path(s"$stores/schedule")
+    val schedSchema = "doc_id long, source string, bin long, shard long, pos long, " +
+      "batch_id long, n_tok long, eval_hit boolean"
     val priorPos: Map[Long, Long] =
-      if (schedPath.getFileSystem(spark0.sparkContext.hadoopConfiguration)
-          .exists(schedPath))
-        spark0.read.parquet(s"$stores/schedule")
-          .filter(col("batch_id") < batchId)
-          .groupBy("shard").agg(count(lit(1)).as("n"))
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      else Map.empty
+      EventsStream.readStore(spark0, s"$stores/schedule", schedSchema)
+        .filter(col("batch_id") < batchId)
+        .groupBy("shard").agg(count(lit(1)).as("n"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val pdf = broadcast(
       (0L until shards.toLong).map(s => (s, priorPos.getOrElse(s, 0L)))
         .toDF("shard", "prior_pos"))
@@ -643,19 +556,15 @@ object BudgetStream {
     // polls (a boundary doc straddles two batches' sequences exactly
     // as the at-rest pack would place it), and a replayed batch
     // recomputes identical rows into the keyed no-op merge.
-    val schedRows = spark0.read.parquet(s"$stores/schedule")
-      .drop(EventsStream.KeyBucketCol)
+    val schedRows = EventsStream.readStore(spark0, s"$stores/schedule", schedSchema)
       .filter(col("batch_id") === batchId)
     val packStore = s"$stores/packed"
     val priorTok: Map[Long, Long] =
-      if (new org.apache.hadoop.fs.Path(packStore)
-          .getFileSystem(spark0.sparkContext.hadoopConfiguration)
-          .exists(new org.apache.hadoop.fs.Path(packStore)))
-        spark0.read.parquet(packStore)
-          .filter(col("batch_id") < batchId)
-          .groupBy("shard").agg(sum(col("n_tok")).as("t"))
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      else Map.empty
+      EventsStream.readStore(spark0, packStore,
+          "doc_id long, shard long, batch_id long, n_tok long")
+        .filter(col("batch_id") < batchId)
+        .groupBy("shard").agg(sum(col("n_tok")).as("t"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val ptf = broadcast(
       (0L until shards.toLong).map(s => (s, priorTok.getOrElse(s, 0L)))
         .toDF("shard", "prior_tok"))
@@ -670,33 +579,14 @@ object BudgetStream {
     EventsStream.upsertSink(packed, packStore, "doc_id")
   }
 
-  /** Start the live door→schedule hand-off over a streaming (doc_id,
-    * text, source) frame — the composed ingest door feeding the
-    * pinned curriculum incrementally, no full re-pack per poll. */
-  def handoffGate(docs: DataFrame, merges: Array[(String, String)],
-      quotas: Map[String, Long], cuts: DataFrame, stores: String,
-      budget: Long = ComposedBudget,
-      checkpoint: Option[String] = None): StreamingQuery =
-    checkpoint.foldLeft(docs.writeStream)((w, dir) => w.option("checkpointLocation", dir))
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processHandoffBatch(batch, merges, quotas, cuts, stores, batchId, budget)
-        ()
-      }
-      .start()
-
   private[graft] def handoffStores(spark: SparkSession, dir: String,
       nBatches: Int): String = {
-    val pop = graft.sources.Tables.documents(spark, dir)
-      .select(col("doc_id"), col("text"), col("source"))
-      .filter(col("doc_id") % 97 =!= 0)
+    val pop = doorPop(spark, dir)
     val merges = TextAnalysis.storedMerges(spark, dir)
     val quotas = sourceQuotas(spark, dir)
     val cuts = graft.operators.Sampling.pinnedCuts(spark, dir)
-    SessionMemo.store(spark, s"handoff_${dir}_$nBatches") { scratch =>
-      for (i <- 0 until nBatches)
-        processHandoffBatch(pop.filter(pmod(col("doc_id"), lit(nBatches)) === i),
-          merges, quotas, cuts, scratch, i.toLong)
+    Door.replay(spark, s"handoff_${dir}_$nBatches", pop, nBatches) { (b, root, i) =>
+      processHandoffBatch(b, merges, quotas, cuts, root, i)
     }
   }
 
@@ -819,29 +709,11 @@ object BudgetStream {
     EventsStream.upsertSink(regs, store, "rk")
   }
 
-  /** Start the live register door over a streaming (doc_id, text,
-    * source) frame — the per-vintage register artifact (what c156's
-    * novelty and c166's drift diff) maintained AT the door instead of
-    * by an at-rest re-read. */
-  def registerDoorGate(docs: DataFrame, store: String,
-      checkpoint: Option[String] = None): StreamingQuery =
-    checkpoint.foldLeft(docs.writeStream)((w, dir) => w.option("checkpointLocation", dir))
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processRegisterBatch(batch, store, batchId)
-        ()
-      }
-      .start()
-
   private[graft] def registerDoorStores(spark: SparkSession, dir: String,
       nBatches: Int): String = {
-    val pop = graft.sources.Tables.documents(spark, dir)
-      .select(col("doc_id"), col("text"), col("source"))
-      .filter(col("doc_id") % 97 =!= 0)
-    SessionMemo.store(spark, s"regdoor_${dir}_$nBatches") { scratch =>
-      for (i <- 0 until nBatches)
-        processRegisterBatch(pop.filter(pmod(col("doc_id"), lit(nBatches)) === i),
-          scratch + "/registers", i.toLong)
+    val pop = doorPop(spark, dir)
+    Door.replay(spark, s"regdoor_${dir}_$nBatches", pop, nBatches) { (b, root, i) =>
+      processRegisterBatch(b, root + "/registers", i)
     }
   }
 
@@ -920,15 +792,11 @@ object BudgetStream {
 
   private def logNoveltyStores(spark: SparkSession, dir: String,
       nBatches: Int): String = {
-    val pop = graft.sources.Tables.documents(spark, dir)
-      .select(col("doc_id"), col("text"), col("source"))
-      .filter(col("doc_id") % 97 =!= 0)
+    val pop = doorPop(spark, dir)
     val merges = TextAnalysis.storedMerges(spark, dir)
     val quotas = logNoveltyQuotas(spark, dir, nBatches)
-    SessionMemo.store(spark, s"lnquota_${dir}_$nBatches") { scratch =>
-      for (i <- 0 until nBatches)
-        processQuotaBatch(pop.filter(pmod(col("doc_id"), lit(nBatches)) === i),
-          merges, quotas, s"$scratch/decisions", s"$scratch/ledger", i.toLong)
+    Door.replay(spark, s"lnquota_${dir}_$nBatches", pop, nBatches) { (b, root, i) =>
+      processQuotaBatch(b, merges, quotas, s"$root/decisions", s"$root/ledger", i)
     }
   }
 
@@ -1049,13 +917,9 @@ object BudgetStream {
 
   private[graft] def chunkRegisterStores(spark: SparkSession, dir: String,
       nBatches: Int): String = {
-    val pop = graft.sources.Tables.documents(spark, dir)
-      .select(col("doc_id"), col("text"), col("source"))
-      .filter(col("doc_id") % 97 =!= 0)
-    SessionMemo.store(spark, s"cregdoor_${dir}_$nBatches") { scratch =>
-      for (i <- 0 until nBatches)
-        processChunkRegisterBatch(pop.filter(pmod(col("doc_id"), lit(nBatches)) === i),
-          scratch + "/registers", i.toLong)
+    val pop = doorPop(spark, dir)
+    Door.replay(spark, s"cregdoor_${dir}_$nBatches", pop, nBatches) { (b, root, i) =>
+      processChunkRegisterBatch(b, root + "/registers", i)
     }
   }
 
@@ -1164,29 +1028,11 @@ object BudgetStream {
     EventsStream.upsertSink(bins, store, "hk")
   }
 
-  /** Start the live histogram door over a streaming (doc_id, text,
-    * source) frame — the per-vintage length-distribution artifact
-    * (what c142 quantile-serves and c150 drift-diffs) maintained AT
-    * the door instead of by an at-rest re-read. */
-  def histDoorGate(docs: DataFrame, store: String,
-      checkpoint: Option[String] = None): StreamingQuery =
-    checkpoint.foldLeft(docs.writeStream)((w, dir) => w.option("checkpointLocation", dir))
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processHistBatch(batch, store, batchId)
-        ()
-      }
-      .start()
-
   private[graft] def histDoorStores(spark: SparkSession, dir: String,
       nBatches: Int): String = {
-    val pop = graft.sources.Tables.documents(spark, dir)
-      .select(col("doc_id"), col("text"), col("source"))
-      .filter(col("doc_id") % 97 =!= 0)
-    SessionMemo.store(spark, s"histdoor_${dir}_$nBatches") { scratch =>
-      for (i <- 0 until nBatches)
-        processHistBatch(pop.filter(pmod(col("doc_id"), lit(nBatches)) === i),
-          scratch + "/bins", i.toLong)
+    val pop = doorPop(spark, dir)
+    Door.replay(spark, s"histdoor_${dir}_$nBatches", pop, nBatches) { (b, root, i) =>
+      processHistBatch(b, root + "/bins", i)
     }
   }
 
@@ -1301,28 +1147,11 @@ object BudgetStream {
     EventsStream.upsertSink(top, store, "sk")
   }
 
-  /** Start the live sample door over a streaming (doc_id, text,
-    * source) frame — the per-source quality-weighted spot-check
-    * sample maintained AT the door instead of by an at-rest re-draw. */
-  def sampleDoorGate(docs: DataFrame, store: String,
-      checkpoint: Option[String] = None): StreamingQuery =
-    checkpoint.foldLeft(docs.writeStream)((w, dir) => w.option("checkpointLocation", dir))
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processSampleBatch(batch, store, batchId)
-        ()
-      }
-      .start()
-
   private[graft] def sampleDoorStores(spark: SparkSession, dir: String,
       nBatches: Int): String = {
-    val pop = graft.sources.Tables.documents(spark, dir)
-      .select(col("doc_id"), col("text"), col("source"))
-      .filter(col("doc_id") % 97 =!= 0)
-    SessionMemo.store(spark, s"sampledoor_${dir}_$nBatches") { scratch =>
-      for (i <- 0 until nBatches)
-        processSampleBatch(pop.filter(pmod(col("doc_id"), lit(nBatches)) === i),
-          scratch + "/sample", i.toLong)
+    val pop = doorPop(spark, dir)
+    Door.replay(spark, s"sampledoor_${dir}_$nBatches", pop, nBatches) { (b, root, i) =>
+      processSampleBatch(b, root + "/sample", i)
     }
   }
 

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import graft.operators.TextAnalysis
 
 /** The LLM curation gate as a LIVE pipeline stage: documents arrive
@@ -17,12 +16,13 @@ import graft.operators.TextAnalysis
   * byte-equal reports (Round7Spec pins this across a micro-batch
   * boundary).
   *
-  * Exactly-once without a state store: foreachBatch is at-least-once,
-  * so BOTH sinks are EventsStream.upsertSink keep-first merges keyed
-  * by doc_id — a replayed micro-batch re-offers rows the store
-  * already holds and changes nothing. The report is derived from the
-  * decision STORE, never from incrementally-maintained counters
-  * (counters double-count on replay; the keyed store cannot).
+  * Exactly-once without a state store: a micro-batch is delivered
+  * at-least-once ([[Door]]), so BOTH sinks are
+  * EventsStream.upsertSink keep-first merges keyed by doc_id — a
+  * replayed micro-batch re-offers rows the store already holds and
+  * changes nothing. The report is derived from the decision STORE,
+  * never from incrementally-maintained counters (counters
+  * double-count on replay; the keyed store cannot).
   *
   * Scale shape: the cascade is a narrow per-row projection (no
   * shuffle), and each upsert merge touches only the hash-buckets the
@@ -31,32 +31,23 @@ import graft.operators.TextAnalysis
   * rides. */
 object CurationStream {
 
-  /** Start the gate over a streaming `docs` frame (doc_id, text).
-    * `reasonStore` accumulates (doc_id, reason); `keepStore`
-    * accumulates the admitted (doc_id, text). `checkpoint` (durable
-    * storage in production) lets a restarted gate resume source
-    * progress instead of re-offering the whole history — correctness
-    * never depends on it (the keyed stores absorb full replays,
-    * spec-pinned), it only bounds restart COST. */
-  def curationGate(docs: DataFrame, reasonStore: String,
-      keepStore: String, checkpoint: Option[String] = None): StreamingQuery =
-    checkpoint.foldLeft(docs.writeStream)((w, dir) => w.option("checkpointLocation", dir))
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // decide once per micro-batch, feed both sinks from the one
-        // decided frame (localCheckpoint: the cascade's regexes run
-        // once, not once per sink)
-        val decided = graft.operators.Materialize.frame(
-          batch.select(col("doc_id"), col("text"),
-            TextAnalysis.curationReasonOf(col("text")).as("reason")))
-        EventsStream.upsertSink(
-          decided.select(col("doc_id"), col("reason")), reasonStore, "doc_id")
-        EventsStream.upsertSink(
-          decided.filter(col("reason") === "keep").select(col("doc_id"), col("text")),
-          keepStore, "doc_id")
-        ()
-      }
-      .start()
+  /** One micro-batch of (doc_id, text) through the gate — the live
+    * door's step ([[Door.live]]). `reasonStore` accumulates (doc_id,
+    * reason); `keepStore` accumulates the admitted (doc_id, text). */
+  private[graft] def processBatch(batch: DataFrame, reasonStore: String,
+      keepStore: String): Unit = {
+    // decide once per micro-batch, feed both sinks from the one
+    // decided frame (localCheckpoint: the cascade's regexes run once,
+    // not once per sink)
+    val decided = graft.operators.Materialize.frame(
+      batch.select(col("doc_id"), col("text"),
+        TextAnalysis.curationReasonOf(col("text")).as("reason")))
+    EventsStream.upsertSink(
+      decided.select(col("doc_id"), col("reason")), reasonStore, "doc_id")
+    EventsStream.upsertSink(
+      decided.filter(col("reason") === "keep").select(col("doc_id"), col("text")),
+      keepStore, "doc_id")
+  }
 
   /** The c23 report over everything the gate has ingested — same
     * rows batch c23 produces over the same corpus at rest. */

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import graft.operators.TextAnalysis
 
 /** Benchmark decontamination as a LIVE ingest stage — c35's Bloom
@@ -16,8 +15,8 @@ import graft.operators.TextAnalysis
   * ingest — together they are the two gates a live training-data
   * funnel runs in front of the store.
   *
-  * Same exactly-once shape as CurationStream: foreachBatch is
-  * at-least-once, both sinks are keep-first keyed merges
+  * Same exactly-once shape as CurationStream: a micro-batch is
+  * delivered at-least-once, both sinks are keep-first keyed merges
   * (EventsStream.upsertSink), so replayed micro-batches re-offer
   * rows the stores already hold and change nothing; the decision
   * log — not counters — is the reporting source.
@@ -40,39 +39,33 @@ object DecontamStream {
     * branch taken is engine-exact. */
   val MaxFlaggedFrac = 0.1
 
-  /** Start the gate over a streaming `docs` frame (doc_id, text).
-    * `bits` is the STATIC benchmark bit table
-    * (TextAnalysis.bloomBitsFromKeys — built once, outside the
+  /** One micro-batch of (doc_id, text) through the gate — the live
+    * door's step ([[Door.live]]). `bits` is the STATIC benchmark bit
+    * table (TextAnalysis.bloomBitsFromKeys — built once, outside the
     * stream); `decisionStore` accumulates the per-doc probe rows +
     * verdict; `keepStore` accumulates admitted (doc_id, text). */
-  def decontamGate(docs: DataFrame, bits: DataFrame, decisionStore: String,
-      keepStore: String, maxFrac: Double = MaxFlaggedFrac,
-      checkpoint: Option[String] = None): StreamingQuery =
-    checkpoint.foldLeft(docs.writeStream)((w, dir) => w.option("checkpointLocation", dir))
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // probe once per micro-batch, feed both sinks from the one
-        // scored frame; docs without shingles rejoin with n_sh = 0
-        val scored = graft.operators.Materialize.frame(
-          batch.select(col("doc_id"), col("text"))
-            .join(TextAnalysis.bloomProbeRows(
-                TextAnalysis.docShingles8Direct(batch), bits),
-              Seq("doc_id"), "left")
-            .select(col("doc_id"), col("text"),
-              coalesce(col("n_sh"), lit(0L)).as("n_sh"),
-              coalesce(col("n_flagged"), lit(0L)).as("n_flagged"),
-              coalesce(col("flagged_frac"), lit(0.0)).as("flagged_frac"))
-            .withColumn("admitted", col("flagged_frac") <= maxFrac))
-        EventsStream.upsertSink(
-          scored.select(col("doc_id"), col("n_sh"), col("n_flagged"),
-            col("flagged_frac"), col("admitted")),
-          decisionStore, "doc_id")
-        EventsStream.upsertSink(
-          scored.filter(col("admitted")).select(col("doc_id"), col("text")),
-          keepStore, "doc_id")
-        ()
-      }
-      .start()
+  private[graft] def processBatch(batch: DataFrame, bits: DataFrame,
+      decisionStore: String, keepStore: String, maxFrac: Double = MaxFlaggedFrac): Unit = {
+    // probe once per micro-batch, feed both sinks from the one scored
+    // frame; docs without shingles rejoin with n_sh = 0
+    val scored = graft.operators.Materialize.frame(
+      batch.select(col("doc_id"), col("text"))
+        .join(TextAnalysis.bloomProbeRows(
+            TextAnalysis.docShingles8Direct(batch), bits),
+          Seq("doc_id"), "left")
+        .select(col("doc_id"), col("text"),
+          coalesce(col("n_sh"), lit(0L)).as("n_sh"),
+          coalesce(col("n_flagged"), lit(0L)).as("n_flagged"),
+          coalesce(col("flagged_frac"), lit(0.0)).as("flagged_frac"))
+        .withColumn("admitted", col("flagged_frac") <= maxFrac))
+    EventsStream.upsertSink(
+      scored.select(col("doc_id"), col("n_sh"), col("n_flagged"),
+        col("flagged_frac"), col("admitted")),
+      decisionStore, "doc_id")
+    EventsStream.upsertSink(
+      scored.filter(col("admitted")).select(col("doc_id"), col("text")),
+      keepStore, "doc_id")
+  }
 
   /** Every decision the gate has taken, batch-c35-shaped (plus the
     * verdict column) — derived from the decision STORE, so replays

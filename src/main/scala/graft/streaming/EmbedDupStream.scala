@@ -1,9 +1,7 @@
 package graft.streaming
 
-import graft.SessionMemo
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import graft.functions.VectorFns
 import graft.operators.{Dedup, Materialize, Similarity}
 
@@ -40,21 +38,20 @@ object EmbedDupStream {
   /** c5's oracle geometry: one 8-bit sign table at offset 0. */
   val SignBits: Int = Similarity.DefaultSignBits
 
-  def embedDupGate(vecs: DataFrame, decisionStore: String, keepStore: String,
-      bucketStore: String, threshold: Double = CosThreshold,
-      checkpoint: Option[String] = None): StreamingQuery =
-    checkpoint.foldLeft(vecs.writeStream)((w, dir) => w.option("checkpointLocation", dir))
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val b = Materialize.frame(batch.select(col("vec_id"), col("embedding")))
-        val (decisions, bucketsB) = batchDecisions(b, bucketStore, keepStore, threshold)
-        EventsStream.upsertSink(decisions, decisionStore, "vec_id")
-        val kept = decisions.filter(col("admitted")).select("vec_id")
-        EventsStream.upsertSink(b.join(kept, Seq("vec_id")), keepStore, "vec_id")
-        EventsStream.upsertSink(keptBucketRows(bucketsB, kept), bucketStore, "bk_vec")
-        ()
-      }
-      .start()
+  /** One micro-batch of (vec_id, embedding) through the gate — ONE
+    * spelling shared by the live door ([[Door.live]]) and the
+    * store-grain audit ([[c84EmbedGateAudit]]): decide the batch
+    * ([[batchDecisions]]), then merge the decision, keep and bucket
+    * stores keep-first. */
+  private[graft] def processBatch(batch: DataFrame, decisionStore: String,
+      keepStore: String, bucketStore: String, threshold: Double = CosThreshold): Unit = {
+    val b = Materialize.frame(batch.select(col("vec_id"), col("embedding")))
+    val (decisions, bucketsB) = batchDecisions(b, bucketStore, keepStore, threshold)
+    EventsStream.upsertSink(decisions, decisionStore, "vec_id")
+    val kept = decisions.filter(col("admitted")).select("vec_id")
+    EventsStream.upsertSink(b.join(kept, Seq("vec_id")), keepStore, "vec_id")
+    EventsStream.upsertSink(keptBucketRows(bucketsB, kept), bucketStore, "bk_vec")
+  }
 
   /** The kept vectors' bucket rows, keyed for the store's keep-first
     * merge. */
@@ -64,7 +61,7 @@ object EmbedDupStream {
         col("bucket"), col("vec_id"))
 
   /** The per-batch admission decision — ONE spelling shared by the
-    * live gate and the store-grain audit ([[c84EmbedGateAudit]]).
+    * live gate and the store-grain audit, both via [[processBatch]].
     * Input `b` must be a materialized (vec_id, embedding) frame;
     * returns (decisions (vec_id, admitted, dup_of) — materialized,
     * and the batch's bucket rows for the store sink). */
@@ -85,14 +82,14 @@ object EmbedDupStream {
     // batch-resident keepers are replay echoes of our own writes —
     // excluded so replays re-derive the original decisions
     val crossCand = bucketsB
-      .join(readOrEmpty(spark, bucketStore, "bucket bigint, vec_id bigint")
+      .join(EventsStream.readStore(spark, bucketStore, "bucket bigint, vec_id bigint")
         .withColumnRenamed("vec_id", "keeper_id"), Seq("bucket"))
       .select(col("vec_id"), col("keeper_id")).distinct()
       .join(b.select(col("vec_id").as("keeper_id")), Seq("keeper_id"), "left_anti")
     // verify against matched keepers only: keyed join into the keep
     // store for their embeddings, never a store scan
     val keeperVecs = Similarity.withNorm(
-      readOrEmpty(spark, keepStore, "vec_id bigint, embedding array<float>")
+      EventsStream.readStore(spark, keepStore, "vec_id bigint, embedding array<float>")
         .join(crossCand.select(col("keeper_id").as("vec_id")).distinct(), Seq("vec_id")))
     val crossPairs = crossCand
       .join(nb.select(col("vec_id"), col("embedding").as("emb_a"), col("nrm").as("nrm_a")),
@@ -136,39 +133,27 @@ object EmbedDupStream {
   /** c84: the embedding gate's STORE-GRAIN audit — c67's discipline
     * at vector grain: the embeddings corpus arrives as
     * [[EmbedAuditBatches]] disjoint polls in batch order, each driven
-    * through [[batchDecisions]] + the gate's own store merges (the
-    * EXACT code the live stream runs), and the keyed result reads the
-    * DECISION STORE back. The oracle replays the whole admission
+    * through [[processBatch]] (the EXACT code the live door runs), and
+    * the keyed result reads the DECISION STORE back. The oracle replays the whole admission
     * history at rest — per batch: capped within-batch bucket
     * candidates + uncapped cross probes against exactly the keepers
     * earlier batches admitted, verified rounded cosine, per-batch
     * connected components, keepers-win-clusters — so every (vec_id,
     * admitted, dup_of) row in the store is hash-checked against an
     * independent derivation of what the live gate SHOULD have
-    * accumulated. SessionMemo.store: one store build per (session, corpus,
-    * geometry). */
+    * accumulated. [[Door.replay]]: one store build per (session,
+    * corpus, geometry). */
   def c84EmbedGateAudit(spark: SparkSession, dir: String,
       nBatches: Int = EmbedAuditBatches,
       threshold: Double = CosThreshold): DataFrame = {
     val vecs = graft.sources.Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"))
-    val scratch = SessionMemo.store(spark, s"c84_embedgate_${dir}_$nBatches") { root =>
-      for (i <- 0 until nBatches) {
-        val b = Materialize.frame(vecs.filter(pmod(col("vec_id"), lit(nBatches)) === i))
-        val (decisions, bucketsB) = batchDecisions(b, s"$root/buckets", s"$root/keep", threshold)
-        EventsStream.upsertSink(decisions, s"$root/decisions", "vec_id")
-        val kept = decisions.filter(col("admitted")).select("vec_id")
-        EventsStream.upsertSink(b.join(kept, Seq("vec_id")), s"$root/keep", "vec_id")
-        EventsStream.upsertSink(keptBucketRows(bucketsB, kept), s"$root/buckets", "bk_vec")
-      }
+    val scratch = Door.replay(spark, s"c84_embedgate_${dir}_$nBatches", vecs, nBatches,
+        key = "vec_id") { (b, root, _) =>
+      processBatch(b, s"$root/decisions", s"$root/keep", s"$root/buckets", threshold)
     }
     decisions(spark, s"$scratch/decisions").orderBy("vec_id")
   }
-
-  // test-only entry (the round spec lives outside this package)
-  private[graft] def testBatchDecisions(b: DataFrame, bucketStore: String,
-      keepStore: String, threshold: Double): (DataFrame, DataFrame) =
-    batchDecisions(b, bucketStore, keepStore, threshold)
 
   /** Every admission decision the gate has taken — from the decision
     * STORE (decisions, not counters: replays cannot double-count). */
@@ -176,15 +161,6 @@ object EmbedDupStream {
     spark.read.parquet(decisionStore)
       .drop(EventsStream.KeyBucketCol)
       .select("vec_id", "admitted", "dup_of")
-
-  private def readOrEmpty(spark: SparkSession, store: String, schema: String): DataFrame =
-    // committed-data check, not bare existence (SpanStream's r12
-    // lesson: an all-empty-merge store directory breaks inference)
-    if (EventsStream.hasCommittedData(spark, store))
-      spark.read.parquet(store).drop(EventsStream.KeyBucketCol)
-    else
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(schema))
 
   // ---------------------------------------------------------------
   // c157: the SKETCH-SERVED live gate — c84's admission policy with
@@ -258,13 +234,13 @@ object EmbedDupStream {
       VectorFns.signBucket(col("p"), SignBits).as("bucket")))
 
     val crossCand = bucketsB
-      .join(readOrEmpty(spark, bucketStore, "bucket bigint, vec_id bigint")
+      .join(EventsStream.readStore(spark, bucketStore, "bucket bigint, vec_id bigint")
         .withColumnRenamed("vec_id", "keeper_id"), Seq("bucket"))
       .select(col("vec_id"), col("keeper_id")).distinct()
       .join(b.select(col("vec_id").as("keeper_id")), Seq("keeper_id"), "left_anti")
     // sketch-grain verification frame: keeper sketches are the ONLY
     // per-probe store read (16 doubles/vector)
-    val keeperSk = readOrEmpty(spark, keepSketchStore,
+    val keeperSk = EventsStream.readStore(spark, keepSketchStore,
         "vec_id bigint, p array<double>")
       .join(crossCand.select(col("keeper_id").as("vec_id")).distinct(), Seq("vec_id"))
       .withColumn("pnrm", VectorFns.norm(col("p")))
@@ -299,7 +275,7 @@ object EmbedDupStream {
     // batch × matched); pushed into the full-store scan so the
     // 64-dim read prunes (Similarity.keyedRows' In/semi-join split)
     val escKeepers = Similarity.keyedRows(
-      readOrEmpty(spark, keepFullStore, "vec_id bigint, embedding array<double>"),
+      EventsStream.readStore(spark, keepFullStore, "vec_id bigint, embedding array<double>"),
       esc.select(col("doc_b").as("vec_id")).distinct()
         .join(b.select(col("vec_id")), Seq("vec_id"), "left_anti"))
     val fullSide = nb.select(col("vec_id"), col("embedding"), col("nrm"))
@@ -316,37 +292,35 @@ object EmbedDupStream {
     (decisions, bucketsB, nb.select(col("vec_id"), col("p")))
   }
 
-  /** Start the live sketch-served gate over a streaming (vec_id,
-    * embedding) frame. `band` ships like the c96 classifier weights:
-    * computed once from the audit artifact, closed over. */
-  def sketchGate(vecs: DataFrame, stores: String, band: Double,
-      threshold: Double = CosThreshold,
-      checkpoint: Option[String] = None): StreamingQuery =
-    checkpoint.foldLeft(vecs.writeStream)((w, dir) => w.option("checkpointLocation", dir))
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val b = Materialize.frame(batch.select(col("vec_id"), col("embedding")))
-        val (decisions, bucketsB, sketches) = batchDecisions157(
-          b, s"$stores/buckets", s"$stores/keep_sketch", s"$stores/keep_full",
-          band, threshold)
-        EventsStream.upsertSink(decisions, s"$stores/decisions", "vec_id")
-        val kept = decisions.filter(col("admitted")).select("vec_id")
-        EventsStream.upsertSink(sketches.join(kept, Seq("vec_id")),
-          s"$stores/keep_sketch", "vec_id")
-        EventsStream.upsertSink(
-          b.select(col("vec_id"), col("embedding").cast("array<double>"))
-            .join(kept, Seq("vec_id")),
-          s"$stores/keep_full", "vec_id")
-        EventsStream.upsertSink(keptBucketRows(bucketsB, kept),
-          s"$stores/buckets", "bk_vec")
-        ()
-      }
-      .start()
+  /** One micro-batch of (vec_id, embedding) through the
+    * sketch-served gate — ONE spelling shared by the live door
+    * ([[Door.live]]) and the store-grain audit
+    * ([[c157SketchGateAudit]]): decide ([[batchDecisions157]]), then
+    * merge the decision, keep_sketch, keep_full and bucket stores
+    * under `stores` keep-first. `band` ships like the c96 classifier
+    * weights: computed once from the audit artifact, closed over. */
+  private[graft] def processSketchBatch(batch: DataFrame, stores: String, band: Double,
+      threshold: Double = CosThreshold): Unit = {
+    val b = Materialize.frame(batch.select(col("vec_id"), col("embedding")))
+    val (decisions, bucketsB, sketches) = batchDecisions157(
+      b, s"$stores/buckets", s"$stores/keep_sketch", s"$stores/keep_full",
+      band, threshold)
+    EventsStream.upsertSink(decisions, s"$stores/decisions", "vec_id")
+    val kept = decisions.filter(col("admitted")).select("vec_id")
+    EventsStream.upsertSink(sketches.join(kept, Seq("vec_id")),
+      s"$stores/keep_sketch", "vec_id")
+    EventsStream.upsertSink(
+      b.select(col("vec_id"), col("embedding").cast("array<double>"))
+        .join(kept, Seq("vec_id")),
+      s"$stores/keep_full", "vec_id")
+    EventsStream.upsertSink(keptBucketRows(bucketsB, kept),
+      s"$stores/buckets", "bk_vec")
+  }
 
   /** c157: the sketch-served gate's STORE-GRAIN audit — c84's
     * discipline with the two-tier evidence: [[EmbedAuditBatches]]
-    * polls through [[batchDecisions157]] + the gate's own store
-    * merges, keyed result = the decision store. The oracle replays
+    * polls through [[processSketchBatch]] (the exact code the live
+    * door runs), keyed result = the decision store. The oracle replays
     * the admission history with the same two-tier rule (sketch
     * cosine against threshold ± the c145-audit band, full cosine for
     * the escalation sliver), so every decision — including which
@@ -357,23 +331,9 @@ object EmbedDupStream {
     val vecs = graft.sources.Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"))
     val band = Similarity.storedBand(spark, dir)
-    val scratch = SessionMemo.store(spark, s"c157_sketchgate_${dir}_$nBatches") { root =>
-      for (i <- 0 until nBatches) {
-        val b = Materialize.frame(vecs.filter(pmod(col("vec_id"), lit(nBatches)) === i))
-        val (decisions, bucketsB, sketches) = batchDecisions157(
-          b, s"$root/buckets", s"$root/keep_sketch", s"$root/keep_full",
-          band, threshold)
-        EventsStream.upsertSink(decisions, s"$root/decisions", "vec_id")
-        val kept = decisions.filter(col("admitted")).select("vec_id")
-        EventsStream.upsertSink(sketches.join(kept, Seq("vec_id")),
-          s"$root/keep_sketch", "vec_id")
-        EventsStream.upsertSink(
-          b.select(col("vec_id"), col("embedding").cast("array<double>"))
-            .join(kept, Seq("vec_id")),
-          s"$root/keep_full", "vec_id")
-        EventsStream.upsertSink(keptBucketRows(bucketsB, kept),
-          s"$root/buckets", "bk_vec")
-      }
+    val scratch = Door.replay(spark, s"c157_sketchgate_${dir}_$nBatches", vecs, nBatches,
+        key = "vec_id") { (b, root, _) =>
+      processSketchBatch(b, root, band, threshold)
     }
     decisions(spark, s"$scratch/decisions").orderBy("vec_id")
   }

@@ -395,6 +395,21 @@ object EventsStream {
       fs.listStatus(path).exists(_.getPath.getName.startsWith(s"$KeyBucketCol="))
   }
 
+  /** A store's rows without the bucket column, or an empty frame of
+    * the DDL `schema` while the store holds no committed data — before
+    * its first write, and after merges that were all EMPTY: an empty
+    * micro-batch (every arrival filtered upstream) leaves meta and
+    * `_SUCCESS` but no bucket partition, and a bare read of that
+    * directory dies on schema inference. Every door's prior-state and
+    * keeper-store read goes through here. */
+  private[graft] def readStore(spark: org.apache.spark.sql.SparkSession, storePath: String,
+      schema: String): DataFrame =
+    if (hasCommittedData(spark, storePath))
+      spark.read.parquet(storePath).drop(KeyBucketCol)
+    else
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        org.apache.spark.sql.types.StructType.fromDDL(schema))
+
   /** Pruned store scan: schema pinned (no inference pass over the
     * store) and filtered to the micro-batch's key buckets — the filter
     * is on the partition column, so the scan lists/reads ONLY those

@@ -3,7 +3,6 @@ package graft.streaming
 import graft.SessionMemo
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import graft.operators.{Materialize, TextAnalysis}
 
 /** The THREE live gates composed into ONE ingest funnel — quality
@@ -21,11 +20,11 @@ import graft.operators.{Materialize, TextAnalysis}
   * near-dup stage to last and refuses NEAR-duplicates, which
   * subsumes exact ones.)
   *
-  * Exactly-once shape (the house pattern): foreachBatch is
-  * at-least-once; decision, keep, and band stores are all keep-first
-  * keyed merges; the near-dup stage re-derives identical decisions
-  * on replay because batch-resident keepers are excluded from the
-  * probe (NearDupStream's guard — ONE shared spelling via
+  * Exactly-once shape (the house pattern, [[Door]]): a micro-batch
+  * is delivered at-least-once; decision, keep, and band stores are
+  * all keep-first keyed merges; the near-dup stage re-derives
+  * identical decisions on replay because batch-resident keepers are
+  * excluded from the probe (NearDupStream's guard — ONE shared spelling via
   * [[NearDupStream.batchDecisions]], so the standalone gate and the
   * funnel cannot drift).
   *
@@ -36,41 +35,24 @@ import graft.operators.{Materialize, TextAnalysis}
   * into it. */
 object FunnelStream {
 
-  /** Start the composed FOUR-gate funnel over a streaming `docs`
-    * frame (doc_id, text). `bits` is the static benchmark bit table
-    * (TextAnalysis.bloomBitsFromKeys, built once outside the
-    * stream); `decisionStore` accumulates (doc_id, stage, dup_of),
-    * `keepStore` the admitted corpus, `bandStore` the admitted docs'
-    * LSH band keys for the novelty probe; `spanStore`/`postingStore`
-    * are the span gate's state ([[SpanStream]]) — each micro-batch's
-    * ADMITTED docs flow through the span gate after admission, so
-    * refused docs never enter the posting index (c77's deployment
-    * shape, now the live stream's own wiring rather than an
-    * audit-only compose). */
-  def funnelGate(docs: DataFrame, bits: DataFrame, decisionStore: String,
-      keepStore: String, bandStore: String,
-      spanStore: String, postingStore: String,
-      maxFrac: Double = DecontamStream.MaxFlaggedFrac,
-      threshold: Double = NearDupStream.JaccardThreshold,
-      checkpoint: Option[String] = None): StreamingQuery =
-    checkpoint.foldLeft(docs.writeStream)((w, dir) => w.option("checkpointLocation", dir))
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch4(batch, bits, decisionStore, keepStore, bandStore,
-          spanStore, postingStore, batchId, maxFrac, threshold)
-        ()
-      }
-      .start()
-
   /** One micro-batch through all FOUR gates — ONE spelling shared by
-    * the live foreachBatch above and the store-grain pipeline audit
+    * the live door ([[Door.live]]) and the store-grain pipeline audit
     * ([[c77GatePipeline]]): the three-gate funnel decides, then the
-    * batch's admitted docs flow through the span gate. The kept set
-    * is read from the batch's own decision frame — for this batch's
-    * docs that IS the store's content (keep-first merges preserve the
-    * first decision, and an at-least-once replay re-derives the
-    * identical decisions via the batch-resident-keeper guard), so no
-    * per-batch store read-back is needed. */
+    * batch's admitted docs flow through the span gate. `bits` is the
+    * static benchmark bit table (TextAnalysis.bloomBitsFromKeys,
+    * built once outside the stream); `decisionStore` accumulates
+    * (doc_id, stage, dup_of), `keepStore` the admitted corpus,
+    * `bandStore` the admitted docs' LSH band keys for the novelty
+    * probe; `spanStore`/`postingStore` are the span gate's state
+    * ([[SpanStream]]). Only ADMITTED docs flow through the span gate,
+    * so refused docs never enter the posting index (c77's deployment
+    * shape, the live door's own wiring rather than an audit-only
+    * compose). The kept set is read from the batch's own decision
+    * frame — for this batch's docs that IS the store's content
+    * (keep-first merges preserve the first decision, and an
+    * at-least-once replay re-derives the identical decisions via the
+    * batch-resident-keeper guard), so no per-batch store read-back is
+    * needed. */
   private[graft] def processBatch4(batch: DataFrame, bits: DataFrame,
       decisionStore: String, keepStore: String, bandStore: String,
       spanStore: String, postingStore: String, batchId: Long,
@@ -79,10 +61,9 @@ object FunnelStream {
     val b = Materialize.frame(batch.select(col("doc_id"), col("text")))
     val decisions = processBatch(b, bits, decisionStore, keepStore, bandStore,
       maxFrac, threshold)
-    val keptBatch = Materialize.frame(b.join(
-      decisions.filter(col("stage") === "keep").select("doc_id"), Seq("doc_id")))
-    SpanStream.processBatch(keptBatch, spanStore, postingStore, batchId)
-    ()
+    SpanStream.processBatch(
+      b.join(decisions.filter(col("stage") === "keep").select("doc_id"), Seq("doc_id")),
+      spanStore, postingStore, batchId)
   }
 
   /** The three-gate funnel's complete per-batch work — ONE spelling
@@ -107,6 +88,16 @@ object FunnelStream {
     decisions
   }
 
+  /** Stage 1's default reasons provider — the c23 quality cascade as
+    * a narrow per-row projection. The live STUDENT gate (c96) swaps
+    * in [[TextAnalysis.studentQualityReasons]] (`wE6` = the c88
+    * artifact's weights, loaded once and closed over; a deployment
+    * broadcasts them for the life of the stream); both produce
+    * (doc_id, text, qreason) with `keep` meaning pass. */
+  private[graft] def teacherReasons(batch: DataFrame): DataFrame =
+    batch.select(col("doc_id"), col("text"),
+      TextAnalysis.curationReasonOf(col("text")).as("qreason"))
+
   /** The three text gates' per-batch DECISION derivation, with no
     * store writes — factored out of [[processBatch]] so the five-gate
     * funnel ([[processBatch5]]) can interpose the semantic gate
@@ -116,14 +107,6 @@ object FunnelStream {
     * batch's band rows for the band-store sink, and the
     * double-survivor (doc_id, text) frame the keep store merges
     * from). */
-  /** Stage 1's default reasons provider — the c23 quality cascade as
-    * a narrow per-row projection. The live STUDENT gate (c96) swaps
-    * in [[TextAnalysis.studentQualityReasons]]; both produce
-    * (doc_id, text, qreason) with `keep` meaning pass. */
-  private[graft] def teacherReasons(batch: DataFrame): DataFrame =
-    batch.select(col("doc_id"), col("text"),
-      TextAnalysis.curationReasonOf(col("text")).as("qreason"))
-
   private[graft] def funnelDecisions(batch: DataFrame, bits: DataFrame,
       bandStore: String, keepStore: String,
       maxFrac: Double, threshold: Double,
@@ -159,44 +142,27 @@ object FunnelStream {
     (decisions, bandsB, s2)
   }
 
-  /** Start the composed FIVE-gate funnel — [[funnelGate]]'s four
-    * gates with the SEMANTIC near-dup gate ([[EmbedDupStream]])
+  /** One micro-batch through all FIVE gates — [[processBatch4]]'s
+    * four gates with the SEMANTIC near-dup gate ([[EmbedDupStream]])
     * interposed between Jaccard novelty and the span gate: quality →
     * leakage → lexical near-dup → embedding near-dup → span index.
-    * The streaming frame carries (doc_id, text, embedding) — a real
-    * ingest door embeds at (or before) arrival, so the vector rides
-    * the row. `vecStore`/`bucketStore` are the semantic gate's state
-    * (kept vectors + their sign-LSH bucket keys). */
-  def funnelGate5(docs: DataFrame, bits: DataFrame, decisionStore: String,
-      keepStore: String, bandStore: String,
-      vecStore: String, bucketStore: String,
-      spanStore: String, postingStore: String,
-      maxFrac: Double = DecontamStream.MaxFlaggedFrac,
-      threshold: Double = NearDupStream.JaccardThreshold,
-      cosThreshold: Double = EmbedDupStream.CosThreshold,
-      checkpoint: Option[String] = None): StreamingQuery =
-    checkpoint.foldLeft(docs.writeStream)((w, dir) => w.option("checkpointLocation", dir))
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch5(batch, bits, decisionStore, keepStore, bandStore,
-          vecStore, bucketStore, spanStore, postingStore, batchId,
-          maxFrac, threshold, cosThreshold)
-        ()
-      }
-      .start()
-
-  /** One micro-batch through all FIVE gates — ONE spelling shared by
-    * the live foreachBatch above and the store-grain audit
-    * ([[c85Gate5Pipeline]]). Admission policy: a doc enters a keeper
-    * store (band, keep, vector, bucket, posting) ONLY if it survives
-    * EVERY gate — a semantically refused doc must not later win a
-    * lexical novelty contest (refused docs are not corpus). One
-    * consequence, documented rather than papered over: a
-    * within-batch 'duplicate' citation can point at a batch anchor
-    * that the SEMANTIC gate then refused — the chain still terminates
-    * in the corpus (the anchor's own `dup_of` cites an ADMITTED
-    * keeper), which is the transitive-evidence property online dedup
-    * guarantees (NearDupStream's straddle caveat, one gate deeper).
+    * ONE spelling shared by the live door ([[Door.live]]) and the
+    * store-grain audit ([[c85Gate5Pipeline]]). The batch carries
+    * (doc_id, text, embedding) — a real ingest door embeds at (or
+    * before) arrival, so the vector rides the row.
+    * `vecStore`/`bucketStore` are the semantic gate's state (kept
+    * vectors + their sign-LSH bucket keys).
+    *
+    * Admission policy: a doc enters a keeper store (band, keep,
+    * vector, bucket, posting) ONLY if it survives EVERY gate — a
+    * semantically refused doc must not later win a lexical novelty
+    * contest (refused docs are not corpus). One consequence,
+    * documented rather than papered over: a within-batch 'duplicate'
+    * citation can point at a batch anchor that the SEMANTIC gate then
+    * refused — the chain still terminates in the corpus (the anchor's
+    * own `dup_of` cites an ADMITTED keeper), which is the
+    * transitive-evidence property online dedup guarantees
+    * (NearDupStream's straddle caveat, one gate deeper).
     *
     * Replay safety is inherited clause-for-clause: both novelty
     * gates exclude batch-resident keepers from their probes, and
@@ -239,10 +205,8 @@ object FunnelStream {
       EmbedDupStream.keptBucketRows(bucketsB, finalVec), bucketStore, "bk_vec")
     // gate 5 — the admitted docs enter the span index
     SpanStream.processBatch(
-      Materialize.frame(b.select(col("doc_id"), col("text"))
-        .join(finalKeep, Seq("doc_id"))),
+      b.select(col("doc_id"), col("text")).join(finalKeep, Seq("doc_id")),
       spanStore, postingStore, batchId)
-    ()
   }
 
   /** How many polls the store-grain audits split the corpus into —
@@ -252,6 +216,16 @@ object FunnelStream {
     * fires) at ~2/3 the keyed-merge count of three — the r9 verdict's
     * audit-cost dial. */
   val AuditBatches = 2
+
+  /** The static benchmark bit table over the `doc_id % 97` slice —
+    * c35's build; session-memoized (a deployment builds it once and
+    * broadcasts it for the life of the stream — rebuilding it per
+    * audit invocation would charge the audit for the gate's setup
+    * cost on every run). `docs` is the (doc_id, text) corpus. */
+  private def c67Bits(docs: DataFrame): DataFrame =
+    SessionMemo.frame("c67_bits", docs)(
+      TextAnalysis.bloomBitsFromKeys(
+        TextAnalysis.docShingles8Direct(docs.filter(col("doc_id") % 97 === 0))))
 
   /** ONE four-gate store build per (session, corpus, batch count) —
     * [[c77GatePipeline]]'s replay, shared: c77 reads BOTH stores, and
@@ -264,18 +238,10 @@ object FunnelStream {
     val docs = graft.sources.Tables.documents(spark, dir)
       .select(col("doc_id"), col("text"))
     val pop = docs.filter(col("doc_id") % 97 =!= 0)
-    // the static benchmark bit table — c35's build; session-memoized
-    // (a deployment builds it once and broadcasts it for the life of
-    // the stream — rebuilding it per audit invocation would charge
-    // the audit for the gate's setup cost on every run)
-    val bits = SessionMemo.frame("c67_bits", docs)(
-      TextAnalysis.bloomBitsFromKeys(
-        TextAnalysis.docShingles8Direct(docs.filter(col("doc_id") % 97 === 0))))
-    SessionMemo.store(spark, s"gate4_${dir}_$nBatches") { scratch =>
-      for (i <- 0 until nBatches)
-        processBatch4(pop.filter(pmod(col("doc_id"), lit(nBatches)) === i), bits,
-          s"$scratch/decisions", s"$scratch/keep", s"$scratch/bands",
-          s"$scratch/spans", s"$scratch/postings", i.toLong)
+    val bits = c67Bits(docs)
+    Door.replay(spark, s"gate4_${dir}_$nBatches", pop, nBatches) { (b, root, i) =>
+      processBatch4(b, bits, s"$root/decisions", s"$root/keep", s"$root/bands",
+        s"$root/spans", s"$root/postings", i)
     }
   }
 
@@ -340,39 +306,13 @@ object FunnelStream {
     val docs = graft.sources.Tables.documents(spark, dir)
       .select(col("doc_id"), col("text"))
     val pop = docs.filter(col("doc_id") % 97 =!= 0)
-    val bits = SessionMemo.frame("c67_bits", docs)(
-      TextAnalysis.bloomBitsFromKeys(
-        TextAnalysis.docShingles8Direct(docs.filter(col("doc_id") % 97 === 0))))
+    val bits = c67Bits(docs)
     val wE6 = TextAnalysis.storedClassifierWeights(spark, dir)
-    SessionMemo.store(spark, s"gateq_${dir}_$nBatches") { scratch =>
-      for (i <- 0 until nBatches)
-        processBatch(pop.filter(pmod(col("doc_id"), lit(nBatches)) === i), bits,
-          s"$scratch/decisions", s"$scratch/keep", s"$scratch/bands",
-          reasonsOf = b => TextAnalysis.studentQualityReasons(b, wE6))
+    Door.replay(spark, s"gateq_${dir}_$nBatches", pop, nBatches) { (b, root, _) =>
+      processBatch(b, bits, s"$root/decisions", s"$root/keep", s"$root/bands",
+        reasonsOf = TextAnalysis.studentQualityReasons(_, wE6))
     }
   }
-
-  /** Start the STUDENT-gated three-gate funnel as a real streaming
-    * query — [[funnelGate]]'s wiring with the stored classifier
-    * deciding stage 1 (`wE6` = the c88 artifact's weights, loaded
-    * once and closed over; a deployment broadcasts them for the life
-    * of the stream). The per-batch work is [[processBatch]] with
-    * [[TextAnalysis.studentQualityReasons]] — the same spelling the
-    * c96 audit polls, so live and audit cannot drift. */
-  def funnelGateStudent(docs: DataFrame, bits: DataFrame, decisionStore: String,
-      keepStore: String, bandStore: String, wE6: Array[Long],
-      maxFrac: Double = DecontamStream.MaxFlaggedFrac,
-      threshold: Double = NearDupStream.JaccardThreshold,
-      checkpoint: Option[String] = None): StreamingQuery =
-    checkpoint.foldLeft(docs.writeStream)((w, dir) => w.option("checkpointLocation", dir))
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        processBatch(batch, bits, decisionStore, keepStore, bandStore,
-          maxFrac, threshold,
-          reasonsOf = b => TextAnalysis.studentQualityReasons(b, wE6))
-        ()
-      }
-      .start()
 
   /** c96: the live STUDENT-gated funnel at STORE grain — c90's gate
     * swap running where a deployment actually runs it, in the
@@ -405,15 +345,10 @@ object FunnelStream {
     val vecs = graft.sources.Tables.embeddings(spark, dir)
       .select(col("vec_id").as("doc_id"), col("embedding"))
     val pop = docs.filter(col("doc_id") % 97 =!= 0).join(vecs, Seq("doc_id"))
-    val bits = SessionMemo.frame("c67_bits", docs)(
-      TextAnalysis.bloomBitsFromKeys(
-        TextAnalysis.docShingles8Direct(docs.filter(col("doc_id") % 97 === 0))))
-    SessionMemo.store(spark, s"gate5_${dir}_$nBatches") { scratch =>
-      for (i <- 0 until nBatches)
-        processBatch5(pop.filter(pmod(col("doc_id"), lit(nBatches)) === i), bits,
-          s"$scratch/decisions", s"$scratch/keep", s"$scratch/bands",
-          s"$scratch/vecs", s"$scratch/buckets",
-          s"$scratch/spans", s"$scratch/postings", i.toLong)
+    val bits = c67Bits(docs)
+    Door.replay(spark, s"gate5_${dir}_$nBatches", pop, nBatches) { (b, root, i) =>
+      processBatch5(b, bits, s"$root/decisions", s"$root/keep", s"$root/bands",
+        s"$root/vecs", s"$root/buckets", s"$root/spans", s"$root/postings", i)
     }
   }
 
@@ -431,45 +366,14 @@ object FunnelStream {
     val vecs = graft.sources.Tables.embeddings(spark, dir)
       .select(col("vec_id").as("doc_id"), col("embedding"))
     val pop = docs.filter(col("doc_id") % 97 =!= 0).join(vecs, Seq("doc_id"))
-    val bits = SessionMemo.frame("c67_bits", docs)(
-      TextAnalysis.bloomBitsFromKeys(
-        TextAnalysis.docShingles8Direct(docs.filter(col("doc_id") % 97 === 0))))
+    val bits = c67Bits(docs)
     val wE6 = TextAnalysis.storedClassifierWeights(spark, dir)
-    SessionMemo.store(spark, s"gate5q_${dir}_$nBatches") { scratch =>
-      for (i <- 0 until nBatches)
-        processBatch5(pop.filter(pmod(col("doc_id"), lit(nBatches)) === i), bits,
-          s"$scratch/decisions", s"$scratch/keep", s"$scratch/bands",
-          s"$scratch/vecs", s"$scratch/buckets",
-          s"$scratch/spans", s"$scratch/postings", i.toLong,
-          reasonsOf = b => TextAnalysis.studentQualityReasons(b, wE6))
+    Door.replay(spark, s"gate5q_${dir}_$nBatches", pop, nBatches) { (b, root, i) =>
+      processBatch5(b, bits, s"$root/decisions", s"$root/keep", s"$root/bands",
+        s"$root/vecs", s"$root/buckets", s"$root/spans", s"$root/postings", i,
+        reasonsOf = TextAnalysis.studentQualityReasons(_, wE6))
     }
   }
-
-  /** Start the STUDENT-gated FIVE-gate funnel as a real streaming
-    * query — [[funnelGate5]]'s wiring with the stored classifier
-    * deciding stage 1 (`wE6` = the c88 artifact's weights, loaded
-    * once and closed over — [[funnelGateStudent]]'s contract at five
-    * gates). The per-batch work is [[processBatch5]] with
-    * [[TextAnalysis.studentQualityReasons]] — the same spelling the
-    * c121 audit polls, so live and audit cannot drift. */
-  def funnelGate5Student(docs: DataFrame, bits: DataFrame, decisionStore: String,
-      keepStore: String, bandStore: String,
-      vecStore: String, bucketStore: String,
-      spanStore: String, postingStore: String, wE6: Array[Long],
-      maxFrac: Double = DecontamStream.MaxFlaggedFrac,
-      threshold: Double = NearDupStream.JaccardThreshold,
-      cosThreshold: Double = EmbedDupStream.CosThreshold,
-      checkpoint: Option[String] = None): StreamingQuery =
-    checkpoint.foldLeft(docs.writeStream)((w, dir) => w.option("checkpointLocation", dir))
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch5(batch, bits, decisionStore, keepStore, bandStore,
-          vecStore, bucketStore, spanStore, postingStore, batchId,
-          maxFrac, threshold, cosThreshold,
-          reasonsOf = b => TextAnalysis.studentQualityReasons(b, wE6))
-        ()
-      }
-      .start()
 
   /** c121: the five-gate pipeline under the STUDENT quality gate, at
     * STORE grain — the deployed compose the r11 verdict named (c96
@@ -541,11 +445,8 @@ object FunnelStream {
     keyOf.map { case (s, k) =>
       // a store a tiny corpus never wrote (empty-write fast path, no
       // footer to infer) audits as the empty inventory row
-      val df =
-        if (EventsStream.hasCommittedData(spark, s"$root/$s"))
-          spark.read.parquet(s"$root/$s")
-        else spark.range(0).select(lit("").as(k))
-      df.agg(count(lit(1)).as("n_rows"),
+      EventsStream.readStore(spark, s"$root/$s", s"$k string")
+        .agg(count(lit(1)).as("n_rows"),
           expr(s"bit_xor(cast(conv(substring(md5(cast($k as string)), 1, 15), 16, 10) as bigint))")
             .as("key_checksum"))
         .select(lit(s).as("store"), col("n_rows"), col("key_checksum"))

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import graft.operators.{Dedup, Materialize}
 
 /** Near-duplicate admission as a LIVE ingest stage — the THIRD gate
@@ -31,12 +30,12 @@ import graft.operators.{Dedup, Materialize}
   * kept (no false drops), and every admitted doc was verified
   * against every kept doc LSH surfaced.
   *
-  * Exactly-once shape (the house pattern): foreachBatch is
-  * at-least-once, all three sinks are keep-first keyed merges, and a
-  * replayed batch re-derives the SAME decisions because keepers that
-  * came from the batch itself are excluded from the probe (on replay
-  * the band store already holds them — without the exclusion every
-  * doc would "duplicate" its own stored bands).
+  * Exactly-once shape (the house pattern, [[Door]]): a micro-batch
+  * is delivered at-least-once, all three sinks are keep-first keyed
+  * merges, and a replayed batch re-derives the SAME decisions because
+  * keepers that came from the batch itself are excluded from the
+  * probe (on replay the band store already holds them — without the
+  * exclusion every doc would "duplicate" its own stored bands).
   *
   * Scale shape: the probe joins batch band keys against the band
   * store on band_key — batch-sized × matched, never store-sized.
@@ -51,21 +50,19 @@ object NearDupStream {
     * the 4-rounded value so the branch taken is engine-exact. */
   val JaccardThreshold = 0.5
 
-  def nearDupGate(docs: DataFrame, decisionStore: String, keepStore: String,
-      bandStore: String, threshold: Double = JaccardThreshold,
-      checkpoint: Option[String] = None): StreamingQuery =
-    checkpoint.foldLeft(docs.writeStream)((w, dir) => w.option("checkpointLocation", dir))
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val b = Materialize.frame(batch.select(col("doc_id"), col("text")))
-        val (decisions, bandsB) = batchDecisions(b, bandStore, keepStore, threshold)
-        EventsStream.upsertSink(decisions, decisionStore, "doc_id")
-        val kept = decisions.filter(col("admitted")).select("doc_id")
-        EventsStream.upsertSink(b.join(kept, Seq("doc_id")), keepStore, "doc_id")
-        EventsStream.upsertSink(keptBandRows(bandsB, kept), bandStore, "bk_doc")
-        ()
-      }
-      .start()
+  /** One micro-batch of (doc_id, text) through the standalone gate —
+    * the live door's step ([[Door.live]]): decide the batch
+    * ([[batchDecisions]]), then merge the decision, keep and band
+    * stores keep-first. */
+  private[graft] def processBatch(batch: DataFrame, decisionStore: String,
+      keepStore: String, bandStore: String, threshold: Double = JaccardThreshold): Unit = {
+    val b = Materialize.frame(batch.select(col("doc_id"), col("text")))
+    val (decisions, bandsB) = batchDecisions(b, bandStore, keepStore, threshold)
+    EventsStream.upsertSink(decisions, decisionStore, "doc_id")
+    val kept = decisions.filter(col("admitted")).select("doc_id")
+    EventsStream.upsertSink(b.join(kept, Seq("doc_id")), keepStore, "doc_id")
+    EventsStream.upsertSink(keptBandRows(bandsB, kept), bandStore, "bk_doc")
+  }
 
   /** The kept docs' band rows, keyed for the band store's keep-first
     * merge — shared by this gate and the composed funnel gate. */
@@ -91,14 +88,14 @@ object NearDupStream {
     // own writes — excluded so replays re-derive the original
     // decisions
     val crossCand = bandsB
-      .join(readOrEmpty(spark, bandStore, "band_key string, doc_id long")
+      .join(EventsStream.readStore(spark, bandStore, "band_key string, doc_id long")
         .withColumnRenamed("doc_id", "keeper_id"), Seq("band_key"))
       .select(col("doc_id"), col("keeper_id")).distinct()
       .join(b.select(col("doc_id").as("keeper_id")), Seq("keeper_id"), "left_anti")
     // verify against the matched keepers only: keyed join into the
     // keep store for their texts, one shingle pass over that slice
     val keeperSets = Dedup.directShingleSets(
-      readOrEmpty(spark, keepStore, "doc_id long, text string")
+      EventsStream.readStore(spark, keepStore, "doc_id long, text string")
         .join(crossCand.select(col("keeper_id").as("doc_id")).distinct(), Seq("doc_id")))
     val crossPairs = crossCand
       .join(sets.select(col("doc_id"), col("sh").as("sh_a")), Seq("doc_id"))
@@ -143,16 +140,4 @@ object NearDupStream {
     spark.read.parquet(decisionStore)
       .drop(EventsStream.KeyBucketCol)
       .select("doc_id", "admitted", "dup_of")
-
-  /** A keyed store's rows, or an empty frame with the given schema
-    * before the store's first write (the first micro-batch probes a
-    * world with no keepers yet). */
-  private def readOrEmpty(spark: SparkSession, store: String, schema: String): DataFrame =
-    // committed-data check, not bare existence (SpanStream's r12
-    // lesson: an all-empty-merge store directory breaks inference)
-    if (EventsStream.hasCommittedData(spark, store))
-      spark.read.parquet(store).drop(EventsStream.KeyBucketCol)
-    else
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(schema))
 }

@@ -3,7 +3,6 @@ package graft.streaming
 import graft.SessionMemo
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import graft.operators.{Dedup, Materialize}
 
 /** Substring-SPAN dedup as a LIVE ingest stage — the streaming twin
@@ -38,27 +37,15 @@ import graft.operators.{Dedup, Materialize}
   * evidence-sized rows. */
 object SpanStream {
 
-  def spanGate(docs: DataFrame, spanStore: String, postingStore: String,
-      w: Int = Dedup.SpanShingleW, minSpan: Int = Dedup.SpanMinTokens,
-      occCap: Int = Dedup.SpanOccCap,
-      checkpoint: Option[String] = None): StreamingQuery =
-    checkpoint.foldLeft(docs.writeStream)((wr, dir) => wr.option("checkpointLocation", dir))
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(Materialize.frame(batch.select(col("doc_id"), col("text"))),
-          spanStore, postingStore, batchId, w, minSpan, occCap)
-        ()
-      }
-      .start()
-
-  /** The gate's complete per-batch work (derive spans + merge both
-    * stores) — ONE spelling shared by the live foreachBatch above and
-    * the store-backed batch audit ([[c68SpanStoreAudit]]), so the
-    * store the audit reads is built by exactly the code the stream
-    * runs. */
-  private[graft] def processBatch(b: DataFrame, spanStore: String, postingStore: String,
+  /** The gate's complete per-batch work over a (doc_id, text) batch
+    * (derive spans + merge both stores) — ONE spelling shared by the
+    * live door ([[Door.live]]), the funnel doors, and the store-backed
+    * audits ([[c68SpanStoreAudit]], [[c72SpanExec]]), so the store an
+    * audit reads is built by exactly the code the stream runs. */
+  private[graft] def processBatch(batch: DataFrame, spanStore: String, postingStore: String,
       batchId: Long, w: Int = Dedup.SpanShingleW, minSpan: Int = Dedup.SpanMinTokens,
-      occCap: Int = Dedup.SpanOccCap): DataFrame = {
+      occCap: Int = Dedup.SpanOccCap): Unit = {
+    val b = Materialize.frame(batch.select(col("doc_id"), col("text")))
     val (spans, postB) = batchSpans(b, postingStore, batchId, w, minSpan, occCap)
     // span_key needs all four coordinates: one cut position can
     // match several keep positions (distinct diagonals)
@@ -70,7 +57,6 @@ object SpanStream {
       postB.withColumn("batch_id", lit(batchId))
         .withColumn("kdp", concat_ws(":", col("key"), col("doc_id"), col("pos"))),
       postingStore, "kdp")
-    spans
   }
 
   /** c68: STORE-BACKED incremental span dedup — c56 with the live
@@ -103,9 +89,9 @@ object SpanStream {
       val base = docs.filter(Dedup.isBaseDoc(col("doc_id")))
       // the base corpus lands as two overlapping-free polls in arrival
       // order — the store accumulates batch by batch
-      processBatch(Materialize.frame(base.filter(col("doc_id") % 2 === 0)),
+      processBatch(base.filter(col("doc_id") % 2 === 0),
         s"$root/spans", s"$root/postings", 0L, w, minSpan, occCap)
-      processBatch(Materialize.frame(base.filter(col("doc_id") % 2 =!= 0)),
+      processBatch(base.filter(col("doc_id") % 2 =!= 0),
         s"$root/spans", s"$root/postings", 1L, w, minSpan, occCap)
     }
     val postingStore = scratch + "/postings"
@@ -118,14 +104,14 @@ object SpanStream {
     * testable directly (the house batchDecisions pattern). Input `b`
     * must be a materialized (doc_id, text) frame; returns the cut
     * instructions and the batch's posting rows for the store sink. */
-  private[streaming] def batchSpans(b: DataFrame, postingStore: String, batchId: Long,
+  private[graft] def batchSpans(b: DataFrame, postingStore: String, batchId: Long,
       w: Int, minSpan: Int, occCap: Int): (DataFrame, DataFrame) = {
     import org.apache.spark.sql.expressions.Window
     val spark = b.sparkSession
     val postB = Materialize.frame(Dedup.posShingleRows(b, w))
     // only postings admitted by EARLIER batches: temporal keep-first
     // orientation AND the replay guard in one predicate
-    val stored = readOrEmpty(spark, postingStore,
+    val stored = EventsStream.readStore(spark, postingStore,
         "kdp string, doc_id long, pos long, key string, batch_id long")
       .filter(col("batch_id") < batchId)
     // combined-occurrence cap before any pairing (the stored index's
@@ -189,11 +175,9 @@ object SpanStream {
     // session-memo discipline: the accumulated span store is the gate's
     // state, built once; this query's own cost is executing the
     // stored cut instructions (island merge + token pricing)
-    val scratch = SessionMemo.store(spark,
-        s"c72_exec_${dir}_${nBatches}_${w}_${minSpan}_$occCap") { root =>
-      for (i <- 0 until nBatches)
-        processBatch(Materialize.frame(docs.filter(pmod(col("doc_id"), lit(nBatches)) === i)),
-          s"$root/spans", s"$root/postings", i.toLong, w, minSpan, occCap)
+    val scratch = Door.replay(spark, s"c72_exec_${dir}_${nBatches}_${w}_${minSpan}_$occCap",
+        docs, nBatches) { (b, root, i) =>
+      processBatch(b, s"$root/spans", s"$root/postings", i, w, minSpan, occCap)
     }
     val spanStore = s"$scratch/spans"
     val iv = cuts(spark, spanStore)
@@ -209,12 +193,6 @@ object SpanStream {
       .orderBy("doc_id")
   }
 
-  // test-only entry (the round spec lives outside this package)
-  private[graft] def testBatchSpans(b: DataFrame, postingStore: String, batchId: Long,
-      w: Int = Dedup.SpanShingleW, minSpan: Int = Dedup.SpanMinTokens,
-      occCap: Int = Dedup.SpanOccCap): (DataFrame, DataFrame) =
-    batchSpans(b, postingStore, batchId, w, minSpan, occCap)
-
   /** Every cut instruction the gate has emitted — from the span STORE
     * (decisions, not counters: replays cannot double-count). Routed
     * through the same existence guard as the posting-store read: a
@@ -222,19 +200,7 @@ object SpanStream {
     * store directory yet, and the query must read as "no cuts", not
     * throw (r8 ADVICE). */
   def cuts(spark: SparkSession, spanStore: String): DataFrame =
-    readOrEmpty(spark, spanStore,
+    EventsStream.readStore(spark, spanStore,
         "span_key string, doc_cut long, doc_keep long, cut_start long, keep_start long, n_tokens long")
       .select("doc_cut", "doc_keep", "cut_start", "keep_start", "n_tokens")
-
-  private def readOrEmpty(spark: SparkSession, store: String, schema: String): DataFrame =
-    // COMMITTED-data check, not bare existence: a gate that merged
-    // only EMPTY batches (e.g. admitted docs with no spans) leaves a
-    // store directory with no bucket partitions, and a bare
-    // spark.read.parquet on it dies on schema inference (r12: the
-    // four-gate pipeline's span store at small SF)
-    if (EventsStream.hasCommittedData(spark, store))
-      spark.read.parquet(store).drop(EventsStream.KeyBucketCol)
-    else
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(schema))
 }

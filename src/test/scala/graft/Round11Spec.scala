@@ -337,7 +337,8 @@ class Round11Spec extends AnyFunSuite {
   // ---- SpanStream: the live span-dedup gate ---------------------------
 
   test("streaming span gate: cross-batch cuts emitted, within-batch deferred, replay-safe") {
-    import graft.streaming.{EventsStream, SpanStream}
+    import graft.streaming.{Door, EventsStream, SpanStream}
+    import graft.operators.Dedup
     import spark.implicits._
     val span = toks("sp", 24)
     val batch1 = Seq(
@@ -355,7 +356,7 @@ class Round11Spec extends AnyFunSuite {
     val src = spark.readStream
       .schema(org.apache.spark.sql.types.StructType.fromDDL("doc_id long, text string"))
       .option("maxFilesPerTrigger", "1").parquet(in)
-    val q = SpanStream.spanGate(src, spanStore, postStore)
+    val q = Door.live(src)(SpanStream.processBatch(_, spanStore, postStore, _))
     try q.processAllAvailable() finally q.stop()
     def gotCuts() = SpanStream.cuts(spark, spanStore).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toSet
@@ -367,7 +368,8 @@ class Round11Spec extends AnyFunSuite {
     // echoed postings sit at batch_id 1 and are ignored — the same
     // single span re-derives and the keep-first stores absorb it
     val b2 = graft.operators.Materialize.frame(batch2.toDF("doc_id", "text"))
-    val (respans, _) = SpanStream.testBatchSpans(b2, postStore, 1L)
+    val (respans, _) = SpanStream.batchSpans(b2, postStore, 1L,
+      Dedup.SpanShingleW, Dedup.SpanMinTokens, Dedup.SpanOccCap)
     assert(respans.collect().map(r =>
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toSet ==
       Set((3L, 1L, 3L, 5L, 24L)))

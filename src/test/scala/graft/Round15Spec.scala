@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.streaming.EmbedDupStream
+import graft.streaming.{Door, EmbedDupStream}
 import graft.operators.Similarity
 
 /** Round-15 contracts: the live EMBEDDING near-dup gate (c84) — the
@@ -29,7 +29,7 @@ class Round15Spec extends AnyFunSuite {
     val emb = graft.sources.Tables.embeddings(spark, sf)
       .select(col("vec_id"), col("embedding"))
     val scratch = java.nio.file.Files.createTempDirectory("graft-c84-one-").toString
-    val (decisions, _) = EmbedDupStream.testBatchDecisions(
+    val (decisions, _) = EmbedDupStream.batchDecisions(
       graft.operators.Materialize.frame(emb),
       s"$scratch/buckets", s"$scratch/keep", EmbedDupStream.CosThreshold)
     val got = decisions.collect()
@@ -72,7 +72,7 @@ class Round15Spec extends AnyFunSuite {
     val src = spark.readStream
       .schema(vecs.schema)
       .option("maxFilesPerTrigger", "1").parquet(in)
-    val q = EmbedDupStream.embedDupGate(src, dS, kS, bS)
+    val q = Door.live(src)((b, _) => EmbedDupStream.processBatch(b, dS, kS, bS))
     try q.processAllAvailable() finally q.stop()
     val live = EmbedDupStream.decisions(spark, dS).orderBy("vec_id").collect()
     val audit = EmbedDupStream.c84EmbedGateAudit(spark, sf).collect()
@@ -83,8 +83,7 @@ class Round15Spec extends AnyFunSuite {
     val src2 = spark.readStream
       .schema(vecs.schema)
       .option("maxFilesPerTrigger", "1").parquet(in)
-    val q2 = EmbedDupStream.embedDupGate(src2, dS, kS, bS,
-      checkpoint = None)
+    val q2 = Door.live(src2)((b, _) => EmbedDupStream.processBatch(b, dS, kS, bS))
     try q2.processAllAvailable() finally q2.stop()
     val replayed = EmbedDupStream.decisions(spark, dS).orderBy("vec_id").collect()
     assert(replayed.sameElements(audit), "replay changed admission decisions")

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.streaming.FunnelStream
+import graft.streaming.{Door, FunnelStream}
 import graft.operators.{Materialize, TextAnalysis}
 
 /** Round-16 contracts: the FIVE-gate live pipeline (c85) — c77's
@@ -107,9 +107,9 @@ class Round16Spec extends AnyFunSuite {
     val root = java.nio.file.Files.createTempDirectory("graft-g5-st-").toString
     val src = spark.readStream.schema(pop.schema)
       .option("maxFilesPerTrigger", "1").parquet(in)
-    val q = FunnelStream.funnelGate5(src, bits,
+    val q = Door.live(src)(FunnelStream.processBatch5(_, bits,
       s"$root/decisions", s"$root/keep", s"$root/bands",
-      s"$root/vecs", s"$root/buckets", s"$root/spans", s"$root/postings")
+      s"$root/vecs", s"$root/buckets", s"$root/spans", s"$root/postings", _))
     try q.processAllAvailable() finally q.stop()
     val live = FunnelStream.gate5Result(spark, root).collect()
     val audit = FunnelStream.c85Gate5Pipeline(spark, sf).collect()
@@ -118,9 +118,9 @@ class Round16Spec extends AnyFunSuite {
     // at-least-once replay: re-offering every file changes nothing
     val src2 = spark.readStream.schema(pop.schema)
       .option("maxFilesPerTrigger", "1").parquet(in)
-    val q2 = FunnelStream.funnelGate5(src2, bits,
+    val q2 = Door.live(src2)(FunnelStream.processBatch5(_, bits,
       s"$root/decisions", s"$root/keep", s"$root/bands",
-      s"$root/vecs", s"$root/buckets", s"$root/spans", s"$root/postings")
+      s"$root/vecs", s"$root/buckets", s"$root/spans", s"$root/postings", _))
     try q2.processAllAvailable() finally q2.stop()
     val replayed = FunnelStream.gate5Result(spark, root).collect()
     assert(replayed.sameElements(audit), "replay changed five-gate decisions")

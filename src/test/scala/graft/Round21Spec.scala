@@ -157,7 +157,7 @@ class Round21Spec extends AnyFunSuite {
 
   test("c128: quota gate enforces c112's mixture at the door, live ≡ audit, per-source cutoffs") {
     import org.apache.spark.sql.functions._
-    import graft.streaming.{BudgetStream, FunnelStream}
+    import graft.streaming.{BudgetStream, Door, FunnelStream}
     val n = FunnelStream.AuditBatches
     val audit = graft.streaming.BudgetStream.c128QuotaGateAudit(spark, sf).collect()
     assert(audit.nonEmpty)
@@ -194,8 +194,8 @@ class Round21Spec extends AnyFunSuite {
     val root = java.nio.file.Files.createTempDirectory("graft-qg-st-").toString
     val src0 = spark.readStream.schema(pop.schema)
       .option("maxFilesPerTrigger", "1").parquet(in)
-    val q = BudgetStream.quotaGate(src0, merges, quotas,
-      s"$root/decisions", s"$root/ledger")
+    val q = Door.live(src0)(BudgetStream.processQuotaBatch(_, merges, quotas,
+      s"$root/decisions", s"$root/ledger", _))
     try q.processAllAvailable() finally q.stop()
     val live = spark.read.parquet(s"$root/decisions")
       .drop(graft.streaming.EventsStream.KeyBucketCol)
@@ -229,7 +229,7 @@ class Round21Spec extends AnyFunSuite {
 
   test("c126: live budget gate ≡ audit, cutoff is a single arrival-order point, budget honored") {
     import org.apache.spark.sql.functions._
-    import graft.streaming.{BudgetStream, FunnelStream}
+    import graft.streaming.{BudgetStream, Door, FunnelStream}
     val budget = BudgetStream.BudgetTokens
     val n = FunnelStream.AuditBatches
     val audit = BudgetStream.c126BudgetGateAudit(spark, sf).collect()
@@ -262,7 +262,8 @@ class Round21Spec extends AnyFunSuite {
     val root = java.nio.file.Files.createTempDirectory("graft-bg-st-").toString
     val src = spark.readStream.schema(pop.schema)
       .option("maxFilesPerTrigger", "1").parquet(in)
-    val q = BudgetStream.budgetGate(src, merges, s"$root/decisions", s"$root/ledger")
+    val q = Door.live(src)(
+      BudgetStream.processBatch(_, merges, s"$root/decisions", s"$root/ledger", _))
     try q.processAllAvailable() finally q.stop()
     val live = spark.read.parquet(s"$root/decisions")
       .drop(graft.streaming.EventsStream.KeyBucketCol)
@@ -272,7 +273,8 @@ class Round21Spec extends AnyFunSuite {
     // at-least-once replay: re-offering every file changes nothing
     val src2 = spark.readStream.schema(pop.schema)
       .option("maxFilesPerTrigger", "1").parquet(in)
-    val q2 = BudgetStream.budgetGate(src2, merges, s"$root/decisions", s"$root/ledger")
+    val q2 = Door.live(src2)(
+      BudgetStream.processBatch(_, merges, s"$root/decisions", s"$root/ledger", _))
     try q2.processAllAvailable() finally q2.stop()
     val replayed = spark.read.parquet(s"$root/decisions")
       .drop(graft.streaming.EventsStream.KeyBucketCol)
@@ -400,7 +402,7 @@ class Round21Spec extends AnyFunSuite {
 
   test("c121: live five-gate student stream accumulates the same stores as the audit replay") {
     import org.apache.spark.sql.functions._
-    import graft.streaming.FunnelStream
+    import graft.streaming.{Door, FunnelStream}
     import graft.operators.TextAnalysis
     val docs = graft.sources.Tables.documents(spark, sf)
       .select(col("doc_id"), col("text"))
@@ -421,9 +423,10 @@ class Round21Spec extends AnyFunSuite {
     val root = java.nio.file.Files.createTempDirectory("graft-g5q-st-").toString
     val src = spark.readStream.schema(pop.schema)
       .option("maxFilesPerTrigger", "1").parquet(in)
-    val q = FunnelStream.funnelGate5Student(src, bits,
+    val q = Door.live(src)((b, id) => FunnelStream.processBatch5(b, bits,
       s"$root/decisions", s"$root/keep", s"$root/bands",
-      s"$root/vecs", s"$root/buckets", s"$root/spans", s"$root/postings", wE6)
+      s"$root/vecs", s"$root/buckets", s"$root/spans", s"$root/postings", id,
+      reasonsOf = d => TextAnalysis.studentQualityReasons(d, wE6)))
     try q.processAllAvailable() finally q.stop()
     val live = FunnelStream.gate5Result(spark, root).collect()
     val audit = FunnelStream.c121Gate5Student(spark, sf).collect()

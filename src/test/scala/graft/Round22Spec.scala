@@ -408,7 +408,7 @@ class Round22Spec extends AnyFunSuite {
   }
 
   test("c143: composed gate — quota stage ≡ c128, budget stage binds only on survivors, live ≡ audit") {
-    import graft.streaming.{BudgetStream, FunnelStream}
+    import graft.streaming.{BudgetStream, Door, FunnelStream}
     val n = FunnelStream.AuditBatches
     val audit = BudgetStream.c143ComposedGateAudit(spark, sf).collect()
     assert(audit.nonEmpty)
@@ -445,8 +445,8 @@ class Round22Spec extends AnyFunSuite {
     val root = java.nio.file.Files.createTempDirectory("graft-cg-st-").toString
     val src0 = spark.readStream.schema(pop.schema)
       .option("maxFilesPerTrigger", "1").parquet(in)
-    val q = BudgetStream.composedGate(src0, merges, quotas,
-      s"$root/decisions", s"$root/ledger")
+    val q = Door.live(src0)(BudgetStream.processComposedBatch(_, merges, quotas,
+      s"$root/decisions", s"$root/ledger", _))
     try q.processAllAvailable() finally q.stop()
     val live = spark.read.parquet(s"$root/decisions")
       .drop(graft.streaming.EventsStream.KeyBucketCol)

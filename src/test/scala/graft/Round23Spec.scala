@@ -87,6 +87,38 @@ class Round23Spec extends AnyFunSuite {
       .select("doc_id", "stage").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(dec2 == Map(1L -> "keep", 2L -> "quota_full"))
+    // an EMPTY first batch (every arrival filtered upstream, e.g. by
+    // the doc_id % 97 slice) leaves meta-only stores behind; the next
+    // batch must read them as "no prior state" and decide exactly as
+    // it did alone above (decisions do not depend on the batch id)
+    import graft.streaming.{BudgetStream, EventsStream}
+    type Step = (org.apache.spark.sql.DataFrame, String, Long) => Unit
+    val quotas = Map("known" -> 1000000L)
+    def afterEmpty(step: Step): String = {
+      val root = java.nio.file.Files.createTempDirectory("r23empty").toString
+      step(batch.filter(col("doc_id") < 0), root, 0L)
+      step(batch, root, 1L)
+      root
+    }
+    def decided(root: String) = spark.read.parquet(s"$root/decisions")
+      .drop(EventsStream.KeyBucketCol).collect().toSet
+    assert(decided(afterEmpty((b, root, i) => BudgetStream.processQuotaBatch(
+      b, Array.empty, quotas, s"$root/decisions", s"$root/ledger", i))) == decided(tmp))
+    assert(decided(afterEmpty((b, root, i) => BudgetStream.processComposedBatch(
+      b, Array.empty, quotas, s"$root/decisions", s"$root/ledger", i,
+      budget = 1000000L))) == decided(tmp2))
+    val novelty: Step = (b, root, i) => BudgetStream.processNoveltyDoorBatch(
+      b, Array.empty, quotas, s"$root/decisions", s"$root/ledger", i, budget = 1000000L)
+    val alone = java.nio.file.Files.createTempDirectory("r23alone").toString
+    novelty(batch, alone, 1L)
+    assert(decided(afterEmpty(novelty)) == decided(alone))
+    // the hand-off door also reads its schedule and pack stores back
+    val cuts = Seq(("known", 1L, 0.99)).toDF("source", "bin", "cut")
+    val handoff = afterEmpty((b, root, i) => BudgetStream.processHandoffBatch(
+      b, Array.empty, quotas, cuts, root, i, budget = 1000000L))
+    assert(decided(handoff) == decided(tmp2))
+    assert(spark.read.parquet(s"$handoff/schedule").select("doc_id", "pos", "batch_id")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet == Set((1L, 1L, 1L)))
   }
 
   test("c147: two-tier partition of the band, and proj decisions match the full gate within it") {
@@ -323,7 +355,7 @@ class Round23Spec extends AnyFunSuite {
   }
 
   test("c148: the LIVE hand-off stream accumulates exactly the audit's schedule") {
-    import graft.streaming.BudgetStream
+    import graft.streaming.{BudgetStream, Door}
     val n = graft.streaming.FunnelStream.AuditBatches
     val pop = graft.sources.Tables.documents(spark, sf)
       .select(col("doc_id"), col("text"), col("source"))
@@ -340,7 +372,7 @@ class Round23Spec extends AnyFunSuite {
     val root = java.nio.file.Files.createTempDirectory("graft-ho-st-").toString
     val src = spark.readStream.schema(pop.schema)
       .option("maxFilesPerTrigger", "1").parquet(in)
-    val q = BudgetStream.handoffGate(src, merges, quotas, cuts, root)
+    val q = Door.live(src)(BudgetStream.processHandoffBatch(_, merges, quotas, cuts, root, _))
     try q.processAllAvailable() finally q.stop()
     val live = spark.read.parquet(s"$root/schedule")
       .drop(graft.streaming.EventsStream.KeyBucketCol)
@@ -374,7 +406,7 @@ class Round23Spec extends AnyFunSuite {
   }
 
   test("c157: the sketch gate's audit is a valid admission history, and the LIVE stream matches it") {
-    import graft.streaming.EmbedDupStream
+    import graft.streaming.{Door, EmbedDupStream}
     val audit = EmbedDupStream.c157SketchGateAudit(spark, sf).collect()
     assert(audit.nonEmpty)
     val admitted = audit.filter(_.getAs[Boolean]("admitted"))
@@ -402,7 +434,7 @@ class Round23Spec extends AnyFunSuite {
     val root = java.nio.file.Files.createTempDirectory("graft-sg-st-").toString
     val src = spark.readStream.schema(vecs.schema)
       .option("maxFilesPerTrigger", "1").parquet(in)
-    val q = EmbedDupStream.sketchGate(src, root, band)
+    val q = Door.live(src)((b, _) => EmbedDupStream.processSketchBatch(b, root, band))
     try q.processAllAvailable() finally q.stop()
     val live = EmbedDupStream.decisions(spark, s"$root/decisions")
       .orderBy("vec_id").collect()

@@ -115,7 +115,7 @@ class Round25Spec extends AnyFunSuite {
   }
 
   test("five-gate door: a mid-poll crash (stores committed, checkpoint not) resumes from ledgered state to the uninterrupted run's stores") {
-    import graft.streaming.{EventsStream, FunnelStream}
+    import graft.streaming.{Door, EventsStream, FunnelStream}
     import graft.operators.TextAnalysis
     val docs = graft.sources.Tables.documents(spark, sf)
       .select(col("doc_id"), col("text"))
@@ -131,10 +131,9 @@ class Round25Spec extends AnyFunSuite {
     def gate(root: String, in: String, ckpt: String) = {
       val src = spark.readStream.schema(pop.schema)
         .option("maxFilesPerTrigger", "1").parquet(in)
-      FunnelStream.funnelGate5(src, bits,
+      Door.live(src, Some(ckpt))(FunnelStream.processBatch5(_, bits,
         s"$root/decisions", s"$root/keep", s"$root/bands",
-        s"$root/vecs", s"$root/buckets", s"$root/spans", s"$root/postings",
-        checkpoint = Some(ckpt))
+        s"$root/vecs", s"$root/buckets", s"$root/spans", s"$root/postings", _))
     }
     def stores(root: String): Map[String, Set[Seq[Any]]] =
       storeNames.map { s =>

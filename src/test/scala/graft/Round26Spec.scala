@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * gate (c175/c176). */
 class Round26Spec extends AnyFunSuite {
   import TestSpark._
-  import graft.streaming.{BudgetStream, EventsStream, FunnelStream}
+  import graft.streaming.{BudgetStream, Door, EventsStream, FunnelStream}
   import graft.operators.TextAnalysis
 
   test("c174: recompaction is idempotent and preserves every store row") {
@@ -104,8 +104,8 @@ class Round26Spec extends AnyFunSuite {
     val store = java.nio.file.Files.createTempDirectory("graft-histdoor-s-")
       .toString + "/bins"
     val ms = MemoryStream[(Long, String, String)]
-    val gate = BudgetStream.histDoorGate(
-      ms.toDF().toDF("doc_id", "text", "source"), store)
+    val gate = Door.live(ms.toDF().toDF("doc_id", "text", "source"))(
+      BudgetStream.processHistBatch(_, store, _))
     try {
       // the audit's exact arrival order: poll i = doc_id ≡ i (mod n)
       for (i <- 0 until n) {
@@ -242,8 +242,8 @@ class Round26Spec extends AnyFunSuite {
     val store = java.nio.file.Files.createTempDirectory("graft-sampledoor-s-")
       .toString + "/sample"
     val ms = MemoryStream[(Long, String, String)]
-    val gate = BudgetStream.sampleDoorGate(
-      ms.toDF().toDF("doc_id", "text", "source"), store)
+    val gate = Door.live(ms.toDF().toDF("doc_id", "text", "source"))(
+      BudgetStream.processSampleBatch(_, store, _))
     try {
       for (i <- 0 until n) {
         ms.addData(docs.filter(_._1 % n == i): _*)

@@ -207,7 +207,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming curation gate equals batch c23 across a micro-batch boundary") {
-    import graft.streaming.CurationStream
+    import graft.streaming.{CurationStream, Door}
     val docs = graft.sources.Tables.documents(spark, sf)
     // stage the corpus as TWO files → two micro-batches, so the gate
     // provably composes across a trigger boundary
@@ -219,7 +219,7 @@ class StreamingSpec extends AnyFunSuite {
     def runGate(): Unit = {
       val src = spark.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", "1").parquet(in)
-      val q = CurationStream.curationGate(src, reasonStore, keepStore)
+      val q = Door.live(src)((b, _) => CurationStream.processBatch(b, reasonStore, keepStore))
       try q.processAllAvailable() finally q.stop()
     }
     runGate()
@@ -243,7 +243,8 @@ class StreamingSpec extends AnyFunSuite {
     def runCheckpointed(): Unit = {
       val src = spark.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", "1").parquet(in)
-      val q = CurationStream.curationGate(src, reasonStore, keepStore, Some(ckpt))
+      val q = Door.live(src, Some(ckpt))(
+        (b, _) => CurationStream.processBatch(b, reasonStore, keepStore))
       try q.processAllAvailable() finally q.stop()
     }
     runCheckpointed()
@@ -252,7 +253,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming decontamination gate equals the batch Bloom probe + replay-safe") {
-    import graft.streaming.DecontamStream
+    import graft.streaming.{DecontamStream, Door}
     import graft.operators.TextAnalysis
     val docs = graft.sources.Tables.documents(spark, sf)
     // static benchmark = c35's slice of the same corpus; stream = the
@@ -268,7 +269,8 @@ class StreamingSpec extends AnyFunSuite {
     def runGate(): Unit = {
       val src = spark.readStream.schema(raw.schema)
         .option("maxFilesPerTrigger", "1").parquet(in)
-      val q = DecontamStream.decontamGate(src, bits, decisionStore, keepStore)
+      val q = Door.live(src)(
+        (b, _) => DecontamStream.processBatch(b, bits, decisionStore, keepStore))
       try q.processAllAvailable() finally q.stop()
     }
     runGate()
@@ -297,7 +299,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming near-dup gate: keep-one per cluster, cross-batch drop, replay-safe") {
-    import graft.streaming.NearDupStream
+    import graft.streaming.{Door, NearDupStream}
     import org.apache.spark.sql.Row
     // two staged micro-batches; exact copies make the verified
     // jaccard 1.0, so every planted dup is above any sane bar
@@ -317,7 +319,8 @@ class StreamingSpec extends AnyFunSuite {
       val src = spark.readStream
         .schema(org.apache.spark.sql.types.StructType.fromDDL("doc_id long, text string"))
         .option("maxFilesPerTrigger", "1").parquet(in)
-      val q = NearDupStream.nearDupGate(src, decisionStore, keepStore, bandStore)
+      val q = Door.live(src)(
+        (b, _) => NearDupStream.processBatch(b, decisionStore, keepStore, bandStore))
       try q.processAllAvailable() finally q.stop()
     }
     runGate()
@@ -347,7 +350,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("near-dup gate on ONE batch equals c12's keep-one-per-cluster decision") {
-    import graft.streaming.NearDupStream
+    import graft.streaming.{Door, NearDupStream}
     import graft.operators.Dedup
     val docs = graft.sources.Tables.documents(spark, sf)
     val in = java.nio.file.Files.createTempDirectory("graft-nd1-in-").toString
@@ -358,7 +361,8 @@ class StreamingSpec extends AnyFunSuite {
     val src = spark.readStream
       .schema(org.apache.spark.sql.types.StructType.fromDDL("doc_id long, text string"))
       .parquet(in)
-    val q = NearDupStream.nearDupGate(src, decisionStore, keepStore, bandStore)
+    val q = Door.live(src)(
+      (b, _) => NearDupStream.processBatch(b, decisionStore, keepStore, bandStore))
     try q.processAllAvailable() finally q.stop()
     // batch twin: the same pair evidence → the same labeler → keep the
     // component minimum (c12/c32's keep-one decision)
@@ -378,7 +382,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("composed funnel gate: first-fail stages, cross-batch novelty, replay-safe") {
-    import graft.streaming.FunnelStream
+    import graft.streaming.{Door, FunnelStream}
     import graft.operators.TextAnalysis
     import spark.implicits._
     // static benchmark = one doc the funnel must refuse copies of
@@ -409,7 +413,7 @@ class StreamingSpec extends AnyFunSuite {
       val src = spark.readStream
         .schema(org.apache.spark.sql.types.StructType.fromDDL("doc_id long, text string"))
         .option("maxFilesPerTrigger", "1").parquet(in)
-      val q = FunnelStream.funnelGate(src, bits, dS, kS, bS, sS, pS)
+      val q = Door.live(src)(FunnelStream.processBatch4(_, bits, dS, kS, bS, sS, pS, _))
       try q.processAllAvailable() finally q.stop()
     }
     runGate()
@@ -447,7 +451,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("four-gate live stream accumulates the same stores as the c77 audit replay") {
-    import graft.streaming.{FunnelStream, SpanStream}
+    import graft.streaming.{Door, FunnelStream, SpanStream}
     import graft.operators.{Dedup, TextAnalysis}
     // the audit's exact population and batch geometry, driven through
     // the REAL streaming query (foreachBatch over a file source, one
@@ -472,7 +476,7 @@ class StreamingSpec extends AnyFunSuite {
     val src = spark.readStream
       .schema(org.apache.spark.sql.types.StructType.fromDDL("doc_id long, text string"))
       .option("maxFilesPerTrigger", "1").parquet(in)
-    val q = FunnelStream.funnelGate(src, bits, dS, kS, bS, sS, pS)
+    val q = Door.live(src)(FunnelStream.processBatch4(_, bits, dS, kS, bS, sS, pS, _))
     try q.processAllAvailable() finally q.stop()
     // read the LIVE stores back in c77's own report shape
     val cut = Dedup.islandCuts(SpanStream.cuts(spark, sS)
@@ -490,7 +494,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("student-gated live stream accumulates the same store as the c96 audit replay") {
-    import graft.streaming.FunnelStream
+    import graft.streaming.{Door, FunnelStream}
     import graft.operators.TextAnalysis
     // the c96 audit's population and batch geometry driven through the
     // REAL streaming query with the stored classifier as stage 1 —
@@ -514,7 +518,8 @@ class StreamingSpec extends AnyFunSuite {
     val src = spark.readStream
       .schema(org.apache.spark.sql.types.StructType.fromDDL("doc_id long, text string"))
       .option("maxFilesPerTrigger", "1").parquet(in)
-    val q = FunnelStream.funnelGateStudent(src, bits, dS, kS, bS, wE6)
+    val q = Door.live(src)((b, _) => FunnelStream.processBatch(b, bits, dS, kS, bS,
+      reasonsOf = d => TextAnalysis.studentQualityReasons(d, wE6)))
     try q.processAllAvailable() finally q.stop()
     val live = FunnelStream.decisions(spark, dS).orderBy("doc_id").collect()
     val audit = graft.streaming.FunnelStream.c96StudentGateAudit(spark, sf).collect()
@@ -752,8 +757,8 @@ class StreamingSpec extends AnyFunSuite {
     val (b0, b1) = docs.partition(_._1 % 2 == 0)
     val store = java.nio.file.Files.createTempDirectory("graft-regdoor-").toString + "/registers"
     val ms = MemoryStream[(Long, String, String)]
-    val gate = graft.streaming.BudgetStream.registerDoorGate(
-      ms.toDF().toDF("doc_id", "text", "source"), store)
+    val gate = graft.streaming.Door.live(ms.toDF().toDF("doc_id", "text", "source"))(
+      graft.streaming.BudgetStream.processRegisterBatch(_, store, _))
     try {
       ms.addData(b0: _*); gate.processAllAvailable()
       ms.addData(b1: _*); gate.processAllAvailable()

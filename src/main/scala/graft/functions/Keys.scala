@@ -27,4 +27,17 @@ object Keys {
     * and raw timestamp→string casts are banned from key material
     * (formatting differs across engines); int64 micros are exact. */
   def tsKey(ts: Column): Column = unix_micros(ts).cast("string")
+
+  /** The content-independent id bucket every split, sample and
+    * snapshot cut reads: the first 7 hex digits of md5(id as string)
+    * as a long, mod `n` — the oracles spell it
+    * `('0x' || substr(md5(id::varchar), 1, 7))::bigint % n`. */
+  def idBucket(id: Column, n: Int): Column =
+    conv(substring(md5(id.cast("string")), 1, 7), 16, 10).cast("long") % n
+
+  /** Order-free membership checksum of a set of ids: bit_xor of the
+    * first 15 hex digits (60 bits) of md5(id as string) — equal sets
+    * give equal checksums under any partitioning. */
+  def idChecksum(id: Column): Column =
+    bit_xor(conv(substring(md5(id.cast("string")), 1, 15), 16, 10).cast("bigint"))
 }

@@ -3,7 +3,7 @@ package graft.operators
 import graft.SessionMemo
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.functions.TextFns
+import graft.functions.{Keys, TextFns}
 
 /** Deduplication operators for the LLM-training-data tier (SURVEY §2
   * tier C, c1–c4). None of these is O(n²): every near-dup variant
@@ -96,11 +96,12 @@ object Dedup {
     * geometry's rows), so c2 and c42 share one checkpointed build. */
   private def ngramPostings(docs: DataFrame, dfCap: Int): DataFrame = {
     // consumers: pair generation + per-doc sizes, for two queries;
-    // ~|distinct shingles| rows. localCheckpoint (not persist):
-    // blocks are freed by the ContextCleaner when the result frame
-    // is dropped, instead of accumulating in the CacheManager for
-    // the life of a shared session.
-    def build = ngramPostingsPlan(docs, dfCap).localCheckpoint()
+    // ~|distinct shingles| rows. Materialized, not persisted: the
+    // default local checkpoint's blocks are freed by the
+    // ContextCleaner when the result frame is dropped, instead of
+    // accumulating in the CacheManager for the life of a shared
+    // session.
+    def build = Materialize.frame(ngramPostingsPlan(docs, dfCap))
     if (dfCap == DfCap) SessionMemo.frame("ngram_postings", docs)(build) else build
   }
 
@@ -321,8 +322,7 @@ object Dedup {
     * accumulated BASE corpus; content-independent (c13's
     * reproducibility spelling), so every engine cuts identically. */
   private[graft] def isBaseDoc(id: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    (conv(substring(md5(id.cast("string")), 1, 7), 16, 10)
-      .cast("long") % 100) < DeltaBasePct
+    Keys.idBucket(id, 100) < DeltaBasePct
 
   def c45DeltaDedup(docs: DataFrame, dfCap: Int = DfCap,
       bar: Double = DeltaNearBar): DataFrame = {
@@ -556,11 +556,10 @@ object Dedup {
     import org.apache.spark.sql.expressions.Window
     // both sides of the candidate self-join read this; persist the
     // |docs|×8-row frame instead of running the md5+agg pipeline twice
-    val bands = sigs.map(bandKeyRowsFromSigs).getOrElse(bandKeyRows(sets))
+    val bands = Materialize.frame(sigs.map(bandKeyRowsFromSigs).getOrElse(bandKeyRows(sets))
       .withColumn("bsz", count(lit(1)).over(Window.partitionBy(col("band_key"))))
       .filter(col("bsz") <= bucketCap)
-      .select(col("doc_id"), col("band_key"))
-      .localCheckpoint()
+      .select(col("doc_id"), col("band_key")))
     val cand = bands.as("a")
       .join(bands.as("b"), Seq("band_key"))
       .filter(col("a.doc_id") < col("b.doc_id"))
@@ -646,16 +645,16 @@ object Dedup {
     // spelling md5("b:j:e1:…:er") (Round27Spec pins it), in one stage
     // instead of a |grid|-way union of three derivations.
     val grid = geos.flatMap { case (b, r) => (0 until b).map(j => (b.toLong, r, j)) }
-    val bandRows = sig.select(col("doc_id"),
+    // sizes + sample both read it. Lazy: blocks land inside the first
+    // consumer's job (bsizes) and the sample join reads them — one
+    // fewer dedicated job per frame
+    val bandRows = Materialize.frameLazy(sig.select(col("doc_id"),
         explode(array(grid.map { case (b, r, j) =>
           struct(lit(b).as("bands"), lit(r).as("r"), lit(j).as("j")) }: _*)).as("g"),
         col("sig"))
       .select(col("g.bands").as("bands"), col("doc_id"),
         md5(concat_ws(":", col("g.bands"), col("g.j"),
-          slice(col("sig"), col("g.j") * col("g.r") + 1, col("g.r")))).as("band_key"))
-      // lazy: blocks land inside the first consumer's job (bsizes) and
-      // the sample join reads them — one fewer dedicated job per frame
-      .localCheckpoint(eager = false) // sizes + sample both read it
+          slice(col("sig"), col("g.j") * col("g.r") + 1, col("g.r")))).as("band_key")))
     // bucket sizes FOLDED into the sample window's exchange (r16):
     // the size is a per-bucket window count over the SAME partition
     // keys the md5 sample rank orders by, so one shuffle of bandRows
@@ -667,13 +666,13 @@ object Dedup {
     val wBucket = Window.partitionBy(col("bands"), col("band_key"))
       .orderBy(md5(col("doc_id").cast("string")), col("doc_id"))
     val wSize = Window.partitionBy(col("bands"), col("band_key"))
-    val sampledDocs = bandRows
+    // probe sum + both self-join sides read it
+    val sampledDocs = Materialize.frameLazy(bandRows
       .withColumn("bsz", count(lit(1)).over(wSize))
       .filter(col("bsz") <= bucketCap)
       .withColumn("rn", row_number().over(wBucket))
       .filter(col("rn") <= bucketSample)
-      .select(col("bands"), col("doc_id"), col("band_key"), col("bsz"))
-      .localCheckpoint(eager = false) // probe sum + both self-join sides read it
+      .select(col("bands"), col("doc_id"), col("band_key"), col("bsz")))
     // integer `div` keeps every term (and the sum) a long — the
     // oracle sums exact integers via `//`, and a double sum could
     // diverge from it past 2^53 aggregate probe mass. Every surviving
@@ -689,26 +688,26 @@ object Dedup {
       .distinct()
     val wBudget = Window.partitionBy(col("bands"))
       .orderBy(md5(concat_ws(":", col("doc_a"), col("doc_b"))), col("doc_a"), col("doc_b"))
-    val sampled = cand
+    // per-geometry stats + the verify union read it
+    val sampled = Materialize.frameLazy(cand
       .withColumn("rn", row_number().over(wBudget))
       .filter(col("rn") <= verifyCap)
-      .select("bands", "doc_a", "doc_b")
-      .localCheckpoint(eager = false) // per-geometry stats + the verify union read it
+      .select("bands", "doc_a", "doc_b"))
     // verify the SAMPLED pair union once; geometries re-join verdicts.
     // The exact-Jaccard projection is spread across cores explicitly:
     // its input is a few MB of pair rows (AQE coalesces that to one
     // task) but each row costs an array_union over two shingle sets —
     // the compute-dense/byte-light shape Materialize.spread exists
-    // for; the pair set is verifyCap-bounded at any corpus size.
-    val verified = Materialize.spread(
+    // for; the pair set is verifyCap-bounded at any corpus size. The
+    // verdicts are pair-evidence-sized, read per geometry + union total.
+    val verified = Materialize.frameLazy(Materialize.spread(
       sampled.select("doc_a", "doc_b").distinct()
         .join(sets.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), Seq("doc_a"))
         .join(sets.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), Seq("doc_b")),
       col("doc_a"), col("doc_b"))
       .select(col("doc_a"), col("doc_b"),
         round((size(col("sh_a")) + size(col("sh_b")) - size(array_union(col("sh_a"), col("sh_b"))))
-          .cast("double") / size(array_union(col("sh_a"), col("sh_b"))), 4).as("jaccard"))
-      .localCheckpoint(eager = false) // pair-evidence-sized; read per geometry + union total
+          .cast("double") / size(array_union(col("sh_a"), col("sh_b"))), 4).as("jaccard")))
     val totalDups = verified.filter(col("jaccard") >= bar)
       .agg(count(lit(1)).as("n_dups_union"))
     sampled.join(verified, Seq("doc_a", "doc_b"))
@@ -959,7 +958,7 @@ object Dedup {
     import org.apache.spark.sql.expressions.Window
     // both sides of the chunk self-join read the simhash frame;
     // persist |docs| rows instead of running the kernel twice
-    val sh = simhash(docs).localCheckpoint()
+    val sh = Materialize.frame(simhash(docs))
     val chunks = sh.select(col("doc_id"), col("simhash"),
         explode(sequence(lit(0), lit(3))).as("j"))
       .withColumn("chunk", expr("(simhash >> (15 * j)) & 32767"))

@@ -28,8 +28,12 @@ import org.apache.spark.sql.DataFrame
   *
   * NOT routed through here: the streaming upsert sink's micro-batch
   * checkpoint (partitioning preservation is load-bearing there, and a
-  * failed micro-batch is simply replayed) and the k-row k-means
-  * centroid frames (bounded, rebuilt per iteration).
+  * failed micro-batch is simply replayed); the k-means loop STATE in
+  * `Similarity.lloyd` (≤ keys·K codebook rows, rebuilt per iteration —
+  * the corpus-grain points it reads DO come through here); and Dedup's
+  * component labelling (`labelComponents`, `propagateLabels`): a
+  * pair-count accumulator filled by the checkpoint's job steers the
+  * labelling branch, and a reliable checkpoint recomputes the frame.
   */
 object Materialize {
 

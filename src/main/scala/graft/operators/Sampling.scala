@@ -3,6 +3,7 @@ package graft.operators
 import graft.SessionMemo
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.Keys
 
 /** Dataset-assembly operators for training pipelines (SURVEY §2,
   * c13/c14). */
@@ -67,8 +68,7 @@ object Sampling {
     * training pipeline needs. 90/5/5 by bucket; narrow, shuffle-free
     * except the summary. */
   def c13Split(docs: DataFrame): DataFrame = {
-    val bucket = (conv(substring(md5(col("doc_id").cast("string")), 1, 7), 16, 10)
-      .cast("long") % 100).as("bucket")
+    val bucket = Keys.idBucket(col("doc_id"), 100).as("bucket")
     docs.select(col("doc_id"), col("lang"), bucket)
       .withColumn("split",
         when(col("bucket") < SplitTrainPct, "train")
@@ -87,8 +87,7 @@ object Sampling {
     * report-sized aggregation. */
   def c18StratifiedSample(docs: DataFrame, rates: Map[String, Double] = DefaultRates)
       : DataFrame = {
-    val bucket = (conv(substring(md5(col("doc_id").cast("string")), 1, 7), 16, 10)
-      .cast("long") % 1000).as("bucket")
+    val bucket = Keys.idBucket(col("doc_id"), 1000).as("bucket")
     val keepMille = coalesce(
       rates.foldLeft(lit(null).cast("long")) { case (acc, (lang, r)) =>
         when(col("lang") === lang, lit((r * 1000).toLong)).otherwise(acc)
@@ -245,7 +244,7 @@ object Sampling {
         count(lit(1)).as("n_docs"),
         countDistinct(col("seq_id")).as("n_seqs"),
         sum(col("n_tok")).as("n_tokens"),
-        expr("bit_xor(cast(conv(substring(md5(cast(doc_id as string)), 1, 15), 16, 10) as bigint))")
+        Keys.idChecksum(col("doc_id"))
           .as("doc_checksum"))
       .orderBy("split", "shard")
 
@@ -265,8 +264,7 @@ object Sampling {
       Materialize.frame {
         val keeps = graft.operators.TextAnalysis.funnelDecisions(docs)
           .filter(col("stage") === "keep").select("doc_id")
-        val bucket = (conv(substring(md5(col("doc_id").cast("string")), 1, 7), 16, 10)
-          .cast("long") % 100)
+        val bucket = Keys.idBucket(col("doc_id"), 100)
         val counts = graft.operators.TextAnalysis.c83StoredTokenizer(spark, dir)
           .select(col("doc_id"), col("n_bpe_tokens").as("n_tok"))
           .join(keeps, Seq("doc_id"))
@@ -914,7 +912,7 @@ object Sampling {
     pack.groupBy("shard", "seq_id")
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_tok")).as("tok"),
-        expr("bit_xor(cast(conv(substring(md5(cast(doc_id as string)), 1, 15), 16, 10) as bigint))")
+        Keys.idChecksum(col("doc_id"))
           .as("checksum"))
 
   private def seqsSfx(seqs: DataFrame, sfx: String): DataFrame =
@@ -1188,8 +1186,7 @@ object Sampling {
   private[graft] def c36Assignments(docs: DataFrame, threshold: Double = 0.5): DataFrame = {
     val labels = Dedup.verifiedDupLabels(docs, threshold)
       .withColumnRenamed("label", "cluster")
-    val bucket = conv(substring(md5(col("cluster").cast("string")), 1, 7), 16, 10)
-      .cast("long") % 100
+    val bucket = Keys.idBucket(col("cluster"), 100)
     docs.select(col("doc_id"))
       .join(labels, Seq("doc_id"), "left")
       .withColumn("cluster", coalesce(col("cluster"), col("doc_id")))
@@ -1308,8 +1305,7 @@ object Sampling {
           / (col("z") * col("n_total")))))
       .select(keyCols :+ col("mille"): _*)
     docs.select(keyCols :+
-        (conv(substring(md5(col("doc_id").cast("string")), 1, 7), 16, 10)
-          .cast("long") % 1000).as("bucket"): _*)
+        Keys.idBucket(col("doc_id"), 1000).as("bucket"): _*)
       .join(broadcast(rates), keys)
       .groupBy(keyCols: _*)
       .agg(count(lit(1)).as("n_docs"),

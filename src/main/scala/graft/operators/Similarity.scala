@@ -47,7 +47,7 @@ object Similarity {
 
   /** Default coarse centroids: the first `n` vectors — the
     * deterministic SEED the oracle pins (so the c7 oracle stays
-    * cross-engine checkable); `trainCentroids` below is the actual
+    * cross-engine checkable); [[trainCentroidsQuantized]] is the actual
     * spherical-k-means job that refines it offline. Fixed count,
     * broadcast-sized by construction. */
   def defaultCentroids(emb: DataFrame, n: Int = DefaultCentroidCount): DataFrame =
@@ -791,66 +791,38 @@ object Similarity {
     * c64's plain books, the residual frame for c65's residual books
     * (the seed is the first-[[PqCodebookK]] rows' slices either way,
     * so the residual trainer seeds from residuals, never raw
-    * vectors). Distributed shape: ONE slicing pass materialized and
-    * reused per iteration (corpus·M rows), broadcast M·K codebook,
-    * map-side-combinable min_by assignment, one (m, code, dim)
-    * shuffle per update — the corpus never collects; the output is
-    * the M·K-row codebook frame (m, k, csub). */
+    * vectors). Distributed shape: [[lloyd]] keyed by `m` over ONE
+    * slicing pass (corpus·M rows), assignment [[nearestCodeword]]
+    * against the broadcast M·K codebook — the corpus never collects;
+    * the output is the M·K-row codebook frame (m, k, csub). */
   def trainPqCodebooks(vecs: DataFrame, iters: Int = QuantIters,
-      scale: Long = QuantScale): DataFrame = {
-    val slices = (0 until PqSubspaces).map(m =>
-      struct(lit(m).as("m"), slice(col("v"), m * PqSubDim + 1, PqSubDim).as("sub")))
-    val vm = vecs
-      .select(col("vec_id"), explode(array(slices: _*)).as("e"))
-      .select(col("vec_id"), col("e.m").as("m"), col("e.sub").as("sub"))
-      .localCheckpoint() // read once per iteration, not re-sliced per lineage step
-    var cb = vm.filter(col("vec_id") < PqCodebookK)
-      .select(col("m"), col("vec_id").as("k"), col("sub").as("csub"))
-      .localCheckpoint()
-    for (_ <- 1 to iters) {
-      // round-then-argmin on the SAME 4dp cell the serving kernels
-      // use; min_by struct ties keep min k — the kernel's strict `<`
-      val assigned = vm.join(broadcast(cb), Seq("m"))
-        .select(col("vec_id"), col("m"), col("sub"), col("k"),
-          round(aggregate(zip_with(col("sub"), col("csub"),
-            (a, b) => (a - b) * (a - b)), lit(0.0), (acc, x) => acc + x), 4).as("d2"))
-        .groupBy("vec_id", "m")
-        .agg(expr("min_by(struct(k, sub), struct(d2, k))").as("best"))
-        .select(col("m"), col("best.k").as("code"), col("best.sub").as("sub"))
-      val updated = assigned
-        .select(col("m"), col("code"), posexplode(col("sub")).as(Seq("dim", "x")))
-        .groupBy("m", "code", "dim")
-        .agg(sum(floor(col("x") * scale + 0.5).cast("long")).as("s"),
-          count(lit(1)).as("n"))
-        .select(col("m"), col("code").as("k"), col("dim"),
-          (col("s").cast("double") / (col("n") * scale).cast("double")).as("c"))
-        .groupBy("m", "k")
-        .agg(transform(array_sort(collect_list(struct(col("dim"), col("c")))),
-          s => s.getField("c")).as("csub"))
-      val kept = cb.join(updated.select("m", "k"), Seq("m", "k"), "left_anti")
-      cb = updated.unionByName(kept).localCheckpoint() // M·K rows; cut lineage
+      scale: Long = QuantScale): DataFrame =
+    lloyd(subspaceRows(vecs, "v", "vec_id"), Seq("m"), iters, scale)(
+      _.filter(col("vec_id") < PqCodebookK)
+        .select(col("m"), col("vec_id").as("k"), col("sub").as("csub"))) { (vm, cb) =>
+      nearestCodeword(vm, cb, Seq("m"), "sub").withColumnRenamed("sub", "x")
     }
-    cb
+
+  /** One row per (vector, subspace): the `ids` columns, `m`, and the
+    * [[PqSubDim]]-wide slice `sub` of the array column `vec` — the
+    * subquantizer trainers' input grain (corpus·M rows). */
+  private def subspaceRows(vecs: DataFrame, vec: String, ids: String*): DataFrame = {
+    val slices = (0 until PqSubspaces).map(m =>
+      struct(lit(m).as("m"), slice(col(vec), m * PqSubDim + 1, PqSubDim).as("sub")))
+    vecs.select(ids.map(col) :+ explode(array(slices: _*)).as("e"): _*)
+      .select(ids.map(col) ++ Seq(col("e.m").as("m"), col("e.sub").as("sub")): _*)
   }
 
   /** Per-vector RESIDUAL v − centroid(assigned) over an arbitrary
     * coarse-centroid frame (c_id, c_emb double, c_nrm) — the quantity
     * Jégou §V's subquantizer actually encodes. Assignment is c7's
-    * exact map-side-combinable max_by ranking (rounded cosine desc,
-    * min c_id ties — the same decision [[ivfTopClusters]] makes in
-    * the serving kernel, so train-side and serve-side residuals agree
-    * vector-for-vector). */
-  private[graft] def residualFrameOver(emb: DataFrame, centFrame: DataFrame): DataFrame = {
-    val cent = broadcast(centFrame)
-    withNorm(emb).crossJoin(cent)
-      .select(col("vec_id"), col("embedding"), col("c_id"), col("c_emb"),
-        pairCos("embedding", "nrm", "c_emb", "c_nrm").as("c_cos"))
-      .groupBy("vec_id")
-      .agg(expr("max_by(struct(embedding, c_emb), struct(c_cos, -c_id))").as("best"))
+    * [[nearestCentroid]] (rounded cosine desc, min c_id ties — the
+    * same decision [[ivfTopClusters]] makes in the serving kernel, so
+    * train-side and serve-side residuals agree vector-for-vector). */
+  private[graft] def residualFrameOver(emb: DataFrame, centFrame: DataFrame): DataFrame =
+    nearestCentroid(withNorm(emb), centFrame, "embedding", "c_emb")
       .select(col("vec_id"),
-        zip_with(VectorFns.toDoubles(col("best.embedding")), col("best.c_emb"),
-          (a, b) => a - b).as("v"))
-  }
+        zip_with(VectorFns.toDoubles(col("embedding")), col("c_emb"), (a, b) => a - b).as("v"))
 
   /** c65: RESIDUAL IVFADC — the complete Jégou §V serving stack
     * ([[c60IvfPqAdc]] ships the non-residual compose; this closes the
@@ -1972,54 +1944,6 @@ object Similarity {
 
   // ---- c122: touched-only index repair ---------------------------------
 
-  /** The per-(cluster, m) subquantizer trainer — [[trainPqCodebooks]]
-    * with a cluster key: identical fixed-point discipline (quantized
-    * integer sums, round-then-argmin on the 4dp cell, min-k ties,
-    * empty cells keep previous), but seeds and every iteration are
-    * KEYED by the coarse cluster, so each degraded cluster gets a
-    * codebook trained on ITS OWN live residual distribution. Seed =
-    * each cluster's [[PqCodebookK]] smallest-vec_id members' slices
-    * (k = rank − 1 — the per-cluster spelling of the global
-    * first-K-rows seed). Clusters with fewer members than a seed
-    * needs must be filtered out by the caller. Input `vm0`:
-    * (cluster, vec_id, m, sub); output: (cluster, m, k, csub) —
-    * ≤ |clusters|·M·K rows, bounded by construction. */
-  private def trainPqCodebooksKeyed(vm0: DataFrame, iters: Int = QuantIters,
-      scale: Long = QuantScale): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val vm = vm0.localCheckpoint() // read once per iteration
-    val wSeed = Window.partitionBy(col("cluster"), col("m")).orderBy(col("vec_id"))
-    var cb = vm.withColumn("rk", row_number().over(wSeed))
-      .filter(col("rk") <= PqCodebookK)
-      .select(col("cluster"), col("m"), (col("rk") - 1).cast("long").as("k"),
-        col("sub").as("csub"))
-      .localCheckpoint()
-    for (_ <- 1 to iters) {
-      val assigned = vm.join(broadcast(cb), Seq("cluster", "m"))
-        .select(col("cluster"), col("vec_id"), col("m"), col("sub"), col("k"),
-          round(aggregate(zip_with(col("sub"), col("csub"),
-            (a, b) => (a - b) * (a - b)), lit(0.0), (acc, x) => acc + x), 4).as("d2"))
-        .groupBy("cluster", "vec_id", "m")
-        .agg(expr("min_by(struct(k, sub), struct(d2, k))").as("best"))
-        .select(col("cluster"), col("m"), col("best.k").as("code"), col("best.sub").as("sub"))
-      val updated = assigned
-        .select(col("cluster"), col("m"), col("code"),
-          posexplode(col("sub")).as(Seq("dim", "x")))
-        .groupBy("cluster", "m", "code", "dim")
-        .agg(sum(floor(col("x") * scale + 0.5).cast("long")).as("s"),
-          count(lit(1)).as("n"))
-        .select(col("cluster"), col("m"), col("code").as("k"), col("dim"),
-          (col("s").cast("double") / (col("n") * scale).cast("double")).as("c"))
-        .groupBy("cluster", "m", "k")
-        .agg(transform(array_sort(collect_list(struct(col("dim"), col("c")))),
-          s => s.getField("c")).as("csub"))
-      val kept = cb.join(updated.select("cluster", "m", "k"),
-        Seq("cluster", "m", "k"), "left_anti")
-      cb = updated.unionByName(kept).localCheckpoint()
-    }
-    cb
-  }
-
   /** ONE repair per (session, corpus): the degraded clusters' local
     * codebooks trained, their members re-encoded, and the versioned
     * artifacts written — `codebooks_r` (the cluster-local books),
@@ -2027,6 +1951,7 @@ object Similarity {
     * codes_v2, repaired members re-coded), and `after` (the
     * per-cluster post-repair error the report reads). */
   private[graft] def c122RepairRoot(spark: SparkSession, dir: String): String = {
+    import org.apache.spark.sql.expressions.Window
     val emb = graft.sources.Tables.embeddings(spark, dir)
     val root = churnedIndexRoot(spark, emb, dir)
     SessionMemo.store(spark, s"c122_repair_$dir") { r =>
@@ -2039,31 +1964,34 @@ object Similarity {
       // cluster-tagged residual subspace rows of ONLY the repaired
       // clusters' live members — the assignment is codes_v2's (the
       // coarse geometry is NOT retrained; only the codebooks refine)
-      val slices = (0 until PqSubspaces).map(m =>
-        struct(lit(m).as("m"), slice(col("rv"), m * PqSubDim + 1, PqSubDim).as("sub")))
-      val vm = churnedCorpus(emb)
+      val vm = subspaceRows(churnedCorpus(emb)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
         .join(v2.select(col("vec_id"), col("cluster")), Seq("vec_id"))
         .join(broadcast(repair), Seq("cluster"))
         .join(broadcast(cent), Seq("cluster"))
         .select(col("cluster"), col("vec_id"),
-          zip_with(col("v"), col("c_emb"), (a, b) => a - b).as("rv"))
-        .select(col("cluster"), col("vec_id"), explode(array(slices: _*)).as("e"))
-        .select(col("cluster"), col("vec_id"), col("e.m").as("m"), col("e.sub").as("sub"))
-      val books = trainPqCodebooksKeyed(vm)
+          zip_with(col("v"), col("c_emb"), (a, b) => a - b).as("rv")),
+        "rv", "cluster", "vec_id")
+      // trainPqCodebooks with a cluster key, so each degraded
+      // cluster gets a codebook trained on ITS OWN live residuals.
+      // Seed = each cluster's PqCodebookK smallest-vec_id members'
+      // slices (k = rank − 1, the per-cluster spelling of the global
+      // first-K-rows seed); `repair` already dropped the clusters too
+      // small to seed. Output (cluster, m, k, csub), ≤ |clusters|·M·K rows.
+      val keys = Seq("cluster", "m")
+      val wSeed = Window.partitionBy(col("cluster"), col("m")).orderBy(col("vec_id"))
+      val books = lloyd(vm, keys, QuantIters, QuantScale)(
+        _.withColumn("rk", row_number().over(wSeed))
+          .filter(col("rk") <= PqCodebookK)
+          .select(col("cluster"), col("m"), (col("rk") - 1).cast("long").as("k"),
+            col("sub").as("csub"))) { (pts, cb) =>
+        nearestCodeword(pts, cb, keys, "sub").withColumnRenamed("sub", "x")
+      }
       books.write.mode("overwrite").parquet(s"$r/codebooks_r")
       // re-encode the repaired members under their cluster-local
-      // books: rounded cell distance, argmin with min-k ties — the
-      // encode contract [[pqCellD2]] pins, spelled declaratively over
-      // the bounded (members × M × K) cell frame
-      val chosen = vm.join(broadcast(books), Seq("cluster", "m"))
-        .select(col("cluster"), col("vec_id"), col("m"), col("k"),
-          round(aggregate(zip_with(col("sub"), col("csub"),
-            (a, b) => (a - b) * (a - b)), lit(0.0), (acc, x) => acc + x), 4).as("d2"))
-        .groupBy("cluster", "vec_id", "m")
-        .agg(expr("min_by(struct(k, d2), struct(d2, k))").as("best"))
-        .select(col("cluster"), col("vec_id"), col("m"),
-          col("best.k").as("code"), col("best.d2").as("d2"))
+      // books — the encode contract [[pqCellD2]] pins, spelled
+      // declaratively over the bounded (members × M × K) cell frame
+      val chosen = nearestCodeword(vm, books, keys, "d2")
       val recoded = chosen.groupBy("vec_id", "cluster")
         .agg(transform(array_sort(collect_list(struct(col("m"), col("code")))),
           s => s.getField("code").cast("int")).as("codes"))
@@ -2086,7 +2014,7 @@ object Similarity {
     * report flags (updated members quantize worse than the cluster
     * at large — their codebooks were trained on a distribution that
     * no longer holds) get their subquantizer RETRAINED on exactly
-    * their own live residuals ([[trainPqCodebooksKeyed]] — the
+    * their own live residuals ([[lloyd]] keyed by (cluster, m) — the
     * per-cluster local-codebook refinement), and ONLY their members
     * re-encode (c82's touched-only discipline, one artifact version
     * deeper: codes_v3). The keyed report prices the repair per
@@ -2265,100 +2193,118 @@ object Similarity {
       .filter(col("rank") <= k)
   }
 
-  /** Lloyd's k-means over the embedding corpus — the offline training
-    * job that produces c7's coarse centroids (defaultCentroids is its
-    * 0-iteration seed). Per iteration, two distributed steps:
-    * (1) assignment: corpus × broadcast(centroids), argmax cosine as
-    * a max_by aggregation — map-side combine collapses the k scored
-    * rows per vector before the shuffle; (2) update: per-(cluster,
-    * dim) mean via posexplode + two-key agg, array rebuilt in dim
-    * order — one shuffle on (cluster, dim), k·dims rows out. Cosine against a
-    * mean re-normalizes, so the update IS the spherical k-means step
-    * (monotone average-cosine objective — spec-checked). The corpus
-    * never collects; centroids stay k rows, lineage cut per round.
-    * Empty clusters keep their previous centroid. */
-  def trainCentroids(emb: DataFrame, k: Int = DefaultCentroidCount, iters: Int = 3): DataFrame = {
-    val corpus = withNorm(emb).select(col("vec_id"), col("embedding"), col("nrm"))
-      .localCheckpoint() // read once per iteration, not re-scanned per lineage step
-    var cent = defaultCentroids(emb, k)
-      .select(col("c_id"), VectorFns.toDoubles(col("c_emb")).as("c_emb"), col("c_nrm"))
-      .localCheckpoint()
-    for (_ <- 1 to iters) {
-      // argmax via max_by aggregation, NOT a window: partial (map-side)
-      // combine reduces the shuffled volume k× — the training pass
-      // shuffles |corpus| pre-combined rows instead of sorting
-      // |corpus|·k. Tie-break (-c_id) == the window's `c_id ASC`.
-      val assigned = corpus.crossJoin(broadcast(cent))
-        .select(col("vec_id"), col("embedding"), col("c_id"),
-          pairCos("embedding", "nrm", "c_emb", "c_nrm").as("c_cos"))
-        .groupBy("vec_id")
-        .agg(expr("max_by(struct(c_id, embedding), struct(c_cos, -c_id))").as("best"))
-        .select(col("best.c_id").as("c_id"), col("best.embedding").as("embedding"))
-      val updated = assigned
-        .select(col("c_id"), posexplode(col("embedding")).as(Seq("dim", "v")))
-        .groupBy("c_id", "dim").agg(avg(col("v")).as("m"))
-        .groupBy("c_id")
-        .agg(transform(array_sort(collect_list(struct(col("dim"), col("m")))),
-          s => s.getField("m")).as("c_emb"))
-        .withColumn("c_nrm", VectorFns.norm(col("c_emb")))
-      val kept = cent.join(updated.select("c_id"), Seq("c_id"), "left_anti")
-      cent = updated.unionByName(kept).localCheckpoint() // k rows; cut lineage
-    }
-    cent
-  }
-
-  /** Fixed-point quantization scale for [[trainCentroidsQuantized]]
-    * and its iteration count — interpolated into the c26 oracle. */
+  /** Fixed-point quantization scale for [[lloyd]] and its iteration
+    * count — interpolated into the c26/c64/c122 oracles. */
   val QuantScale = 1000000L
   val QuantIters = 2
 
-  /** Spherical k-means with a FIXED-POINT centroid update — the
-    * cross-engine-checkable variant of [[trainCentroids]] (c26).
+  /** The coarse quantizer's assignment rule — c7's corpus assignment,
+    * the centroid trainer's assignment step, [[residualFrameOver]] and
+    * c110's cells: every `points` row (vec_id, embedding, nrm) scored
+    * against broadcast `cent` (c_id, c_emb, c_nrm) by rounded cosine
+    * ([[pairCos]]), the winner picked by a map-side-combinable struct
+    * max_by, NOT a row_number window: the window spelling sorted a
+    * corpus×k frame CARRYING the embedding array through an exchange;
+    * max_by collapses the k scored rows per vector before any shuffle.
+    * Tie-break struct(c_cos, -c_id) == the window's `c_cos DESC, c_id
+    * ASC` (desc ranks NULLs last; a null struct field sorts smallest
+    * under max, so no-evidence rows lose the same way, and an all-null
+    * vector keeps the min c_id) — the decision [[ivfTopClusters]]
+    * makes in the serving kernel. Returns (vec_id, c_id, carry…): the
+    * winning centroid plus the `carry` columns (either side's) of the
+    * winning pair. */
+  private def nearestCentroid(points: DataFrame, cent: DataFrame, carry: String*): DataFrame =
+    points.crossJoin(broadcast(cent))
+      .select((col("vec_id") +: carry.map(col)) ++ Seq(col("c_id"),
+        pairCos("embedding", "nrm", "c_emb", "c_nrm").as("c_cos")): _*)
+      .groupBy("vec_id")
+      .agg(expr(s"max_by(struct(${("c_id" +: carry).mkString(", ")}), struct(c_cos, -c_id))")
+        .as("best"))
+      .select(col("vec_id") +: ("c_id" +: carry).map(c => col(s"best.$c").as(c)): _*)
+
+  /** The subquantizer's assignment rule — both codebook trainers'
+    * assignment step and c122's re-encode: every `points` slice (keys…,
+    * vec_id, sub) against the broadcast codewords (keys…, k, csub) of
+    * its own key, by the ROUNDED 4dp squared L2 that [[pqCellD2]]
+    * computes in the serving kernels (round-then-argmin); struct
+    * min_by ties keep min k — the kernel's strict `<`. Returns
+    * (keys…, vec_id, code, carry…), `carry` read from the winning
+    * (slice, codeword) row, its distance `d2` included. */
+  private def nearestCodeword(points: DataFrame, books: DataFrame, keys: Seq[String],
+      carry: String*): DataFrame =
+    points.join(broadcast(books), keys)
+      .withColumn("d2", round(aggregate(zip_with(col("sub"), col("csub"),
+        (a, b) => (a - b) * (a - b)), lit(0.0), (acc, x) => acc + x), 4))
+      .groupBy(("vec_id" +: keys).map(col): _*)
+      .agg(expr(s"min_by(struct(${("k" +: carry).mkString(", ")}), struct(d2, k))").as("best"))
+      .select((keys :+ "vec_id").map(col) ++
+        (col("best.k").as("code") +: carry.map(c => col(s"best.$c").as(c))): _*)
+
+  /** Lloyd's k-means under the FIXED-POINT determinism contract — the
+    * one loop behind the coarse quantizer ([[trainCentroidsQuantized]],
+    * no key), the subquantizer ([[trainPqCodebooks]], keyed by `m`)
+    * and c122's cluster-local books (keyed by cluster, m).
     *
-    * Why the ordinary trainer can't be oracled: its update step is
-    * `avg(v)` over shuffled rows, and float summation order differs
-    * run-to-run and engine-to-engine, so the trained centroids drift
-    * in the last ulp and downstream assignments can flip. Here the
-    * update sums QUANTIZED per-dim values — floor(v·scale + 0.5) as
-    * exact int64 — so the aggregation is associative/commutative with
-    * NO rounding, then one IEEE-exact division s/(n·scale) rebuilds
-    * the double centroid. Every step (float→double cast, fixed-point
-    * floor, integer sum, one division, left-to-right dot) is
-    * bit-identical in any engine, making the whole iterative loop
-    * deterministic — DuckDB replays it CTE-for-CTE in the c26 oracle.
-    * Same distributed shape as trainCentroids: broadcast centroids,
-    * map-side-combined max_by assignment, one (c_id, dim) shuffle per
-    * update; the corpus never collects. int64 headroom: |v|≤~1 →
-    * |s| ≤ n·scale ≈ 1e12·1e6 < 2^63 at a 1e12-vector corpus. */
+    * Why a plain float mean can't be oracled: `avg(v)` over shuffled
+    * rows sums in an order that differs run-to-run and engine-to-
+    * engine, so the centroids drift in the last ulp and downstream
+    * assignments can flip. Here the update sums QUANTIZED per-dim
+    * values — floor(x·scale + 0.5) as exact int64 — so the
+    * aggregation is associative/commutative with NO rounding, then
+    * one IEEE-exact division s/(n·scale) rebuilds the double centroid.
+    * Every step (float→double cast, fixed-point floor, integer sum,
+    * one division) is bit-identical in any engine, so DuckDB replays
+    * the whole loop CTE-for-CTE. int64 headroom: |x|≤~1 → |s| ≤
+    * n·scale ≈ 1e12·1e6 < 2^63 at a 1e12-vector corpus.
+    *
+    * `points` is materialized once ([[Materialize.frame]] — it is
+    * corpus-grain) and read by every iteration. The codebook state is
+    * (keys…, k, csub): `seed(points)` builds it (the seed is the
+    * caller's: a fixed-count id prefix or a per-key rank), and each
+    * iteration's `assign(points, state)` returns every point's chosen
+    * cell as (keys…, code, x: array) — map-side-combined, so it
+    * shuffles one row per point. The update is one (keys…, k, dim) shuffle,
+    * the array rebuilt in dim order; empty cells keep their previous
+    * value. The state is ≤ |keys|·K rows, checkpointed per iteration
+    * to cut lineage; the corpus never collects. */
+  private def lloyd(points: DataFrame, keys: Seq[String], iters: Int, scale: Long)(
+      seed: DataFrame => DataFrame)(assign: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val pts = Materialize.frame(points)
+    val cell = keys :+ "k"
+    (1 to iters).foldLeft(seed(pts).localCheckpoint()) { (cb, _) =>
+      val updated = assign(pts, cb)
+        .select((keys :+ "code").map(col) :+ posexplode(col("x")).as(Seq("dim", "x")): _*)
+        .groupBy((keys ++ Seq("code", "dim")).map(col): _*)
+        .agg(sum(floor(col("x").cast("double") * scale + 0.5).cast("long")).as("s"),
+          count(lit(1)).as("n"))
+        .select(keys.map(col) ++ Seq(col("code").as("k"), col("dim"),
+          (col("s").cast("double") / (col("n") * scale).cast("double")).as("c")): _*)
+        .groupBy(cell.map(col): _*)
+        .agg(transform(array_sort(collect_list(struct(col("dim"), col("c")))),
+          s => s.getField("c")).as("csub"))
+      val kept = cb.join(updated.select(cell.map(col): _*), cell, "left_anti")
+      updated.unionByName(kept).localCheckpoint()
+    }
+  }
+
+  /** Spherical k-means over the embedding corpus — the offline job
+    * that trains c7's coarse centroids (c26), [[lloyd]] with no key:
+    * the seed is [[defaultCentroids]] (the 0-iteration state the c7
+    * oracle pins), assignment is [[nearestCentroid]]. Cosine against a
+    * mean re-normalizes, so the update IS the spherical k-means step
+    * (monotone average-cosine objective — spec-checked). Output
+    * (c_id, c_emb double, c_nrm), k rows. */
   def trainCentroidsQuantized(emb: DataFrame, k: Int = DefaultCentroidCount,
       iters: Int = QuantIters, scale: Long = QuantScale): DataFrame = {
-    val corpus = withNorm(emb).select(col("vec_id"), col("embedding"), col("nrm"))
-      .localCheckpoint()
-    var cent = defaultCentroids(emb, k)
-      .select(col("c_id"), VectorFns.toDoubles(col("c_emb")).as("c_emb"), col("c_nrm"))
-      .localCheckpoint()
-    for (_ <- 1 to iters) {
-      val assigned = corpus.crossJoin(broadcast(cent))
-        .select(col("vec_id"), col("embedding"), col("c_id"),
-          pairCos("embedding", "nrm", "c_emb", "c_nrm").as("c_cos"))
-        .groupBy("vec_id")
-        .agg(expr("max_by(struct(c_id, embedding), struct(c_cos, -c_id))").as("best"))
-        .select(col("best.c_id").as("c_id"), col("best.embedding").as("embedding"))
-      val updated = assigned
-        .select(col("c_id"), posexplode(col("embedding")).as(Seq("dim", "v")))
-        .groupBy("c_id", "dim")
-        .agg(sum(floor(col("v").cast("double") * scale + 0.5).cast("long")).as("s"),
-          count(lit(1)).as("n"))
-        .select(col("c_id"), col("dim"),
-          (col("s").cast("double") / (col("n") * scale).cast("double")).as("m"))
-        .groupBy("c_id")
-        .agg(transform(array_sort(collect_list(struct(col("dim"), col("m")))),
-          s => s.getField("m")).as("c_emb"))
-        .withColumn("c_nrm", VectorFns.norm(col("c_emb")))
-      val kept = cent.join(updated.select("c_id"), Seq("c_id"), "left_anti")
-      cent = updated.unionByName(kept).localCheckpoint() // k rows; cut lineage
-    }
-    cent
+    def centroids(cb: DataFrame) = cb.select(col("k").as("c_id"), col("csub").as("c_emb"),
+      VectorFns.norm(col("csub")).as("c_nrm"))
+    val seed = defaultCentroids(emb, k)
+      .select(col("c_id").as("k"), VectorFns.toDoubles(col("c_emb")).as("csub"))
+    centroids(lloyd(withNorm(emb).select(col("vec_id"), col("embedding"), col("nrm")),
+        Nil, iters, scale)(_ => seed) { (pts, cb) =>
+      nearestCentroid(pts, centroids(cb), "embedding")
+        .select(col("c_id").as("code"), col("embedding").as("x"))
+    })
   }
 
   /** c26: the c7 IVF serving path over TRAINED centroids — closes the
@@ -2391,22 +2337,8 @@ object Similarity {
       centroids: Option[DataFrame] = None, k: Int = 10, nprobe: Int = DefaultNProbe): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val cent = broadcast(centroids.getOrElse(defaultCentroids(emb)))
-    // nearest-centroid assignment as a map-side-combinable struct-max
-    // aggregate, NOT a row_number window: the window spelling sorted a
-    // corpus×k frame CARRYING the embedding array through an exchange;
-    // max_by collapses the k scored rows per vector before any shuffle
-    // (the trainer's own spelling, and c47's "codes via struct-min —
-    // no window sort"). Tie-break struct(c_cos, -c_id) == the window's
-    // `c_cos DESC, c_id ASC` (desc ranks NULLs last; a null struct
-    // field sorts smallest under max, so no-evidence rows lose the
-    // same way, and an all-null vector keeps the min c_id).
-    val assigned = withNorm(emb).crossJoin(cent)
-      .select(col("vec_id"), col("embedding"), col("nrm"), col("c_id"),
-        pairCos("embedding", "nrm", "c_emb", "c_nrm").as("c_cos"))
-      .groupBy("vec_id")
-      .agg(expr("max_by(struct(c_id, embedding, nrm), struct(c_cos, -c_id))").as("best"))
-      .select(col("vec_id"), col("best.embedding").as("embedding"),
-        col("best.nrm").as("nrm"), col("best.c_id").as("cluster"))
+    val assigned = nearestCentroid(withNorm(emb), cent, "embedding", "nrm")
+      .select(col("vec_id"), col("embedding"), col("nrm"), col("c_id").as("cluster"))
     val q = withQueryNorm(queries.getOrElse(defaultQueries(emb)))
     val wProbe = Window.partitionBy(col("q_id")).orderBy(col("c_cos").desc, col("c_id"))
     val probes = q.crossJoin(cent)
@@ -2705,12 +2637,8 @@ object Similarity {
     * scan. */
   def c110EmbedDrift(emb: DataFrame,
       eps: Double = graft.operators.TextAnalysis.DriftEps): DataFrame = {
-    val cent = broadcast(defaultCentroids(emb))
-    val assigned = withNorm(emb).crossJoin(cent)
-      .select(col("vec_id"), col("c_id"),
-        pairCos("embedding", "nrm", "c_emb", "c_nrm").as("c_cos"))
-      .groupBy("vec_id")
-      .agg(expr("max_by(c_id, struct(c_cos, -c_id))").as("cluster"))
+    val assigned = nearestCentroid(withNorm(emb), defaultCentroids(emb))
+      .select(col("vec_id"), col("c_id").as("cluster"))
     val cells = assigned.groupBy("cluster")
       .agg(
         sum(when(col("vec_id") % 2 === 0, 1L).otherwise(0L)).as("n_base"),

@@ -3,7 +3,7 @@ package graft.operators
 import graft.SessionMemo
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.functions.TextFns
+import graft.functions.{Keys, TextFns}
 
 /** Text-analysis operators (SURVEY §2: c8–c11). All single-pass
   * narrow projections over the documents scan — no shuffle at all
@@ -2483,6 +2483,12 @@ object TextAnalysis {
     * c13's spelling, so the oracle replays the exact sample). */
   val BpeSampleTrainPct: Int = 50
 
+  /** The docs whose md5 id percent bucket ([[Keys.idBucket]]) is below
+    * `pct` — the one deterministic training sample of the sampled BPE
+    * trainers (c163 c171 c172 c179) and c97's classifier refresh. */
+  private def trainSample(docs: DataFrame, pct: Int): DataFrame =
+    docs.filter(Keys.idBucket(col("doc_id"), 100) < pct)
+
   /** c163: the BOUNDED-SAMPLE byte-grain tokenizer trainer — how a
     * 100 TB deployment actually trains BPE. Nobody runs |merges|
     * sequential corpus-grain passes over the full corpus (c119's
@@ -2502,9 +2508,7 @@ object TextAnalysis {
     * split-training shape at byte grain). */
   def c163BpeSampled(docs: DataFrame, nMerges: Int = BpeMerges,
       trainPct: Int = BpeSampleTrainPct): DataFrame = {
-    val bucket = conv(substring(md5(col("doc_id").cast("string")), 1, 7), 16, 10)
-      .cast("long") % 100
-    val merges = c75BpeTrain(docs.filter(bucket < trainPct), nMerges, ByteGrain)
+    val merges = c75BpeTrain(trainSample(docs, trainPct), nMerges, ByteGrain)
       .select(col("a"), col("b")).collect()
       .map(r => (r.getString(0), r.getString(1)))
     encodeUnderMerges(docs, merges, ByteGrain)
@@ -2650,9 +2654,7 @@ object TextAnalysis {
     * unrolled as "first pair disjoint from all earlier slots". */
   def c171BpeBatched(docs: DataFrame, nMerges: Int = BpeMerges,
       batchB: Int = BpeBatchB, trainPct: Int = BpeSampleTrainPct): DataFrame = {
-    val bucket = conv(substring(md5(col("doc_id").cast("string")), 1, 7), 16, 10)
-      .cast("long") % 100
-    bpeBatchTrain(docs.filter(bucket < trainPct), nMerges, batchB, ByteGrain)
+    bpeBatchTrain(trainSample(docs, trainPct), nMerges, batchB, ByteGrain)
   }
 
   /** Per-term symbol count under a STEPPED merge schedule (one
@@ -2681,9 +2683,7 @@ object TextAnalysis {
       batchB: Int = BpeBatchB, trainPct: Int = BpeSampleTrainPct): DataFrame = {
     val spark0 = docs.sparkSession
     import spark0.implicits._
-    val bucket = conv(substring(md5(col("doc_id").cast("string")), 1, 7), 16, 10)
-      .cast("long") % 100
-    val train = docs.filter(bucket < trainPct)
+    val train = trainSample(docs, trainPct)
     // the audit's cost IS two trainer chains by definition — but they
     // are independent driver loops of tiny jobs, so the batched one
     // runs on its own thread while the exact one runs here: the
@@ -2748,9 +2748,7 @@ object TextAnalysis {
       bs: Seq[Int] = BpeSweepBs, trainPct: Int = BpeSampleTrainPct): DataFrame = {
     val spark0 = docs.sparkSession
     import spark0.implicits._
-    val bucket = conv(substring(md5(col("doc_id").cast("string")), 1, 7), 16, 10)
-      .cast("long") % 100
-    val train = docs.filter(bucket < trainPct)
+    val train = trainSample(docs, trainPct)
     // the four widths' trainer loops are independent driver loops of
     // tiny jobs (the profiled cost is inter-job driver gaps, not
     // executor time) — run them as CONCURRENT actions so the gaps
@@ -3607,8 +3605,7 @@ object TextAnalysis {
   def c91FeatureDrift(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
     val docs = graft.sources.Tables.documents(spark, dir)
-    val bucket = conv(substring(md5(col("doc_id").cast("string")), 1, 7), 16, 10)
-      .cast("long") % 100
+    val bucket = Keys.idBucket(col("doc_id"), 100)
     def binOf(x: Column, lo: Double, hi: Double): Column =
       least(greatest(floor((x - lit(lo)) / lit(hi - lo) * DriftBins), lit(0.0)), lit(DriftBins - 1.0))
         .cast("long")
@@ -3678,8 +3675,7 @@ object TextAnalysis {
   def c92TokenizerHoldout(spark: org.apache.spark.sql.SparkSession, dir: String,
       nMerges: Int = BpeMerges): DataFrame = {
     val docs = graft.sources.Tables.documents(spark, dir)
-    val bucket = conv(substring(md5(col("doc_id").cast("string")), 1, 7), 16, 10)
-      .cast("long") % 100
+    val bucket = Keys.idBucket(col("doc_id"), 100)
     val root = SessionMemo.store(spark, s"c92_tokenizer_$dir") { r =>
       c75BpeTrain(docs.filter(bucket < Sampling.SplitTrainPct), nMerges)
         .write.mode("overwrite").parquet(s"$r/merges")
@@ -3728,10 +3724,8 @@ object TextAnalysis {
   def c97ClassifierRefresh(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
     val docs = graft.sources.Tables.documents(spark, dir)
-    val bucket = conv(substring(md5(col("doc_id").cast("string")), 1, 7), 16, 10)
-      .cast("long") % 100
     val vintageRoot = SessionMemo.store(spark, s"c97_vintage_$dir") { r =>
-      val (_, wE6) = trainQualityClassifier(docs.filter(bucket < Sampling.SplitTrainPct))
+      val (_, wE6) = trainQualityClassifier(trainSample(docs, Sampling.SplitTrainPct))
       import spark.implicits._
       wE6.toSeq.zipWithIndex.map { case (v, i) => (i.toLong, v) }
         .toDF("idx", "w_e6").coalesce(1).write.mode("overwrite").parquet(s"$r/weights")

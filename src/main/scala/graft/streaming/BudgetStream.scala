@@ -4,6 +4,7 @@ import graft.SessionMemo
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{Materialize, TextAnalysis}
+import graft.functions.Keys
 
 /** The TOKEN-BUDGET admission gate — the door a data-collection run
   * closes when its training budget fills: every arriving doc is
@@ -116,20 +117,13 @@ object BudgetStream {
       ledgerStore, "batch_id")
   }
 
-  /** The doors' arrival population: every document outside the
-    * `doc_id % 97` benchmark slice, as (doc_id, text, source). */
-  private def doorPop(spark: SparkSession, dir: String): DataFrame =
-    graft.sources.Tables.documents(spark, dir)
-      .select(col("doc_id"), col("text"), col("source"))
-      .filter(col("doc_id") % 97 =!= 0)
-
   /** ONE budget-gate store build per (session, corpus, batch count) —
     * the funnel audits' poll discipline: the population arrives as
     * `nBatches` disjoint polls in doc_id-slice order, each driven
     * through [[processBatch]], the exact code the live stream runs. */
   private def budgetStores(spark: SparkSession, dir: String,
       nBatches: Int): String = {
-    val pop = doorPop(spark, dir)
+    val pop = Door.population(spark, dir)
     val merges = TextAnalysis.storedMerges(spark, dir)
     Door.replay(spark, s"budget_${dir}_$nBatches", pop, nBatches) { (b, root, i) =>
       processBatch(b, merges, s"$root/decisions", s"$root/ledger", i)
@@ -201,7 +195,7 @@ object BudgetStream {
 
   private def noveltyQuotaStores(spark: SparkSession, dir: String,
       nBatches: Int): String = {
-    val pop = doorPop(spark, dir)
+    val pop = Door.population(spark, dir)
     val merges = TextAnalysis.storedMerges(spark, dir)
     val quotas = noveltyQuotas(spark, dir)
     Door.replay(spark, s"nquota_${dir}_$nBatches", pop, nBatches) { (b, root, i) =>
@@ -267,7 +261,7 @@ object BudgetStream {
 
   private def quotaStores(spark: SparkSession, dir: String,
       nBatches: Int): String = {
-    val pop = doorPop(spark, dir)
+    val pop = Door.population(spark, dir)
     val merges = TextAnalysis.storedMerges(spark, dir)
     val quotas = sourceQuotas(spark, dir)
     Door.replay(spark, s"quota_${dir}_$nBatches", pop, nBatches) { (b, root, i) =>
@@ -405,7 +399,7 @@ object BudgetStream {
 
   private[graft] def noveltyDoorStores(spark: SparkSession, dir: String,
       nBatches: Int): String = {
-    val pop = doorPop(spark, dir)
+    val pop = Door.population(spark, dir)
     val merges = TextAnalysis.storedMerges(spark, dir)
     val quotas = noveltyQuotas(spark, dir)
     Door.replay(spark, s"ndoor_${dir}_$nBatches", pop, nBatches) { (b, root, i) =>
@@ -431,7 +425,7 @@ object BudgetStream {
 
   private def composedStores(spark: SparkSession, dir: String,
       nBatches: Int): String = {
-    val pop = doorPop(spark, dir)
+    val pop = Door.population(spark, dir)
     val merges = TextAnalysis.storedMerges(spark, dir)
     val quotas = sourceQuotas(spark, dir)
     Door.replay(spark, s"composed_${dir}_$nBatches", pop, nBatches) { (b, root, i) =>
@@ -581,7 +575,7 @@ object BudgetStream {
 
   private[graft] def handoffStores(spark: SparkSession, dir: String,
       nBatches: Int): String = {
-    val pop = doorPop(spark, dir)
+    val pop = Door.population(spark, dir)
     val merges = TextAnalysis.storedMerges(spark, dir)
     val quotas = sourceQuotas(spark, dir)
     val cuts = graft.operators.Sampling.pinnedCuts(spark, dir)
@@ -683,7 +677,7 @@ object BudgetStream {
         countDistinct(col("batch_id")).as("n_batches"),
         count(lit(1)).as("n_docs"),
         sum(col("n_tok")).as("sum_tok"),
-        expr("bit_xor(cast(conv(substring(md5(cast(doc_id as string)), 1, 15), 16, 10) as bigint))")
+        Keys.idChecksum(col("doc_id"))
           .as("doc_checksum"))
       .join(nSeqs, Seq("shard"))
       .select("shard", "n_batches", "n_docs", "n_seqs", "sum_tok", "doc_checksum")
@@ -711,7 +705,7 @@ object BudgetStream {
 
   private[graft] def registerDoorStores(spark: SparkSession, dir: String,
       nBatches: Int): String = {
-    val pop = doorPop(spark, dir)
+    val pop = Door.population(spark, dir)
     Door.replay(spark, s"regdoor_${dir}_$nBatches", pop, nBatches) { (b, root, i) =>
       processRegisterBatch(b, root + "/registers", i)
     }
@@ -792,7 +786,7 @@ object BudgetStream {
 
   private def logNoveltyStores(spark: SparkSession, dir: String,
       nBatches: Int): String = {
-    val pop = doorPop(spark, dir)
+    val pop = Door.population(spark, dir)
     val merges = TextAnalysis.storedMerges(spark, dir)
     val quotas = logNoveltyQuotas(spark, dir, nBatches)
     Door.replay(spark, s"lnquota_${dir}_$nBatches", pop, nBatches) { (b, root, i) =>
@@ -917,7 +911,7 @@ object BudgetStream {
 
   private[graft] def chunkRegisterStores(spark: SparkSession, dir: String,
       nBatches: Int): String = {
-    val pop = doorPop(spark, dir)
+    val pop = Door.population(spark, dir)
     Door.replay(spark, s"cregdoor_${dir}_$nBatches", pop, nBatches) { (b, root, i) =>
       processChunkRegisterBatch(b, root + "/registers", i)
     }
@@ -1030,7 +1024,7 @@ object BudgetStream {
 
   private[graft] def histDoorStores(spark: SparkSession, dir: String,
       nBatches: Int): String = {
-    val pop = doorPop(spark, dir)
+    val pop = Door.population(spark, dir)
     Door.replay(spark, s"histdoor_${dir}_$nBatches", pop, nBatches) { (b, root, i) =>
       processHistBatch(b, root + "/bins", i)
     }
@@ -1149,7 +1143,7 @@ object BudgetStream {
 
   private[graft] def sampleDoorStores(spark: SparkSession, dir: String,
       nBatches: Int): String = {
-    val pop = doorPop(spark, dir)
+    val pop = Door.population(spark, dir)
     Door.replay(spark, s"sampledoor_${dir}_$nBatches", pop, nBatches) { (b, root, i) =>
       processSampleBatch(b, root + "/sample", i)
     }

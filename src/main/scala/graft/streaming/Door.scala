@@ -37,6 +37,15 @@ object Door {
       .foreachBatch(step)
       .start()
 
+  /** The replayed doors' arrival population: every document outside
+    * the `doc_id % 97` benchmark slice (the slice the leakage gates'
+    * Bloom bits are built from), as (doc_id, text, source); each store
+    * builder projects the columns its step reads. */
+  def population(spark: SparkSession, dir: String): DataFrame =
+    graft.sources.Tables.documents(spark, dir)
+      .select(col("doc_id"), col("text"), col("source"))
+      .filter(col("doc_id") % 97 =!= 0)
+
   /** Replay `pop` through `step` as `nBatches` disjoint polls in
     * `pmod(key, nBatches)` order, into ONE scratch store root per
     * (session, `memoName`); returns the root. Batch i is poll i, and

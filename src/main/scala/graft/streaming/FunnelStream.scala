@@ -4,6 +4,7 @@ import graft.SessionMemo
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{Materialize, TextAnalysis}
+import graft.functions.Keys
 
 /** The THREE live gates composed into ONE ingest funnel — quality
   * (CurationStream's cascade), then leakage (DecontamStream's Bloom
@@ -237,7 +238,7 @@ object FunnelStream {
   private def gate4Stores(spark: SparkSession, dir: String, nBatches: Int): String = {
     val docs = graft.sources.Tables.documents(spark, dir)
       .select(col("doc_id"), col("text"))
-    val pop = docs.filter(col("doc_id") % 97 =!= 0)
+    val pop = Door.population(spark, dir).select(col("doc_id"), col("text"))
     val bits = c67Bits(docs)
     Door.replay(spark, s"gate4_${dir}_$nBatches", pop, nBatches) { (b, root, i) =>
       processBatch4(b, bits, s"$root/decisions", s"$root/keep", s"$root/bands",
@@ -305,7 +306,7 @@ object FunnelStream {
       nBatches: Int): String = {
     val docs = graft.sources.Tables.documents(spark, dir)
       .select(col("doc_id"), col("text"))
-    val pop = docs.filter(col("doc_id") % 97 =!= 0)
+    val pop = Door.population(spark, dir).select(col("doc_id"), col("text"))
     val bits = c67Bits(docs)
     val wE6 = TextAnalysis.storedClassifierWeights(spark, dir)
     Door.replay(spark, s"gateq_${dir}_$nBatches", pop, nBatches) { (b, root, _) =>
@@ -344,7 +345,8 @@ object FunnelStream {
       .select(col("doc_id"), col("text"))
     val vecs = graft.sources.Tables.embeddings(spark, dir)
       .select(col("vec_id").as("doc_id"), col("embedding"))
-    val pop = docs.filter(col("doc_id") % 97 =!= 0).join(vecs, Seq("doc_id"))
+    val pop = Door.population(spark, dir).select(col("doc_id"), col("text"))
+      .join(vecs, Seq("doc_id"))
     val bits = c67Bits(docs)
     Door.replay(spark, s"gate5_${dir}_$nBatches", pop, nBatches) { (b, root, i) =>
       processBatch5(b, bits, s"$root/decisions", s"$root/keep", s"$root/bands",
@@ -365,7 +367,8 @@ object FunnelStream {
       .select(col("doc_id"), col("text"))
     val vecs = graft.sources.Tables.embeddings(spark, dir)
       .select(col("vec_id").as("doc_id"), col("embedding"))
-    val pop = docs.filter(col("doc_id") % 97 =!= 0).join(vecs, Seq("doc_id"))
+    val pop = Door.population(spark, dir).select(col("doc_id"), col("text"))
+      .join(vecs, Seq("doc_id"))
     val bits = c67Bits(docs)
     val wE6 = TextAnalysis.storedClassifierWeights(spark, dir)
     Door.replay(spark, s"gate5q_${dir}_$nBatches", pop, nBatches) { (b, root, i) =>
@@ -447,7 +450,7 @@ object FunnelStream {
       // footer to infer) audits as the empty inventory row
       EventsStream.readStore(spark, s"$root/$s", s"$k string")
         .agg(count(lit(1)).as("n_rows"),
-          expr(s"bit_xor(cast(conv(substring(md5(cast($k as string)), 1, 15), 16, 10) as bigint))")
+          Keys.idChecksum(col(k))
             .as("key_checksum"))
         .select(lit(s).as("store"), col("n_rows"), col("key_checksum"))
     }.reduce(_.unionByName(_)).orderBy("store")

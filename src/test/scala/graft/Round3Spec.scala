@@ -56,7 +56,7 @@ class Round3Spec extends AnyFunSuite {
 
   test("trainCentroids improves the spherical k-means objective, serves c7 unchanged") {
     val r0 = Similarity.kmeansObjective(emb, Similarity.defaultCentroids(emb))
-    val trained = Similarity.trainCentroids(emb, iters = 3)
+    val trained = Similarity.trainCentroidsQuantized(emb, iters = 3)
     assert(trained.count() == Similarity.DefaultCentroidCount.toLong,
       "empty clusters lost their centroid")
     val r3 = Similarity.kmeansObjective(emb, trained)

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.{Marts, Multimodal, Sampling, Staging, TextAnalysis}
+import graft.operators.{Dedup, Marts, Multimodal, Sampling, Similarity, Staging, TextAnalysis}
 import graft.sources.Tables
 
 /** Round-5 invariants: the chunk-grain curation composition (c27)
@@ -390,27 +390,36 @@ class Round5Spec extends AnyFunSuite {
     val docs = Tables.documents(spark, sf)
     val key = "graft.materialize"
     val saved = spark.conf.getOption(key)
+    val emb = Tables.embeddings(spark, sf)
     spark.sparkContext.setCheckpointDir("/tmp/graft-test-ckpt")
-    def runAll(): (Array[org.apache.spark.sql.Row], Array[org.apache.spark.sql.Row], Array[org.apache.spark.sql.Row]) = {
+    def runAll(): Seq[(String, Array[org.apache.spark.sql.Row])] = {
       // r8: c31's tf frame is session-memoized (SessionMemo) — drop the
       // memo so each strategy run actually MATERIALIZES under the
       // strategy being tested instead of reading the previous
       // strategy's blocks
       SessionMemo.invalidate()
-      (TextAnalysis.c31UnigramLogprob(docs).collect(),
-        Checks.a9DqChecks(Staging.stgEvents(Tables.events(spark, sf))).collect(),
-        TextAnalysis.c30SourceMixtureBucketed(docs).collect())
+      Seq("c31" -> TextAnalysis.c31UnigramLogprob(docs).collect(),
+        "a9" -> Checks.a9DqChecks(Staging.stgEvents(Tables.events(spark, sf))).collect(),
+        "c30" -> TextAnalysis.c30SourceMixtureBucketed(docs).collect(),
+        // the k-means trainer's corpus-grain points and c4's simhash frame
+        "c26" -> Similarity.c26AnnIvfTrained(emb).collect(),
+        "c4" -> Dedup.c4Simhash(docs).collect())
     }
     try {
       spark.conf.set(key, "local")
       val base = runAll()
       for (strategy <- Seq("reliable", "scratch:/tmp/graft-test-scratch")) {
         spark.conf.set(key, strategy)
-        val got = runAll()
-        assert(got._1.sameElements(base._1), s"$strategy: c31 diverged")
-        assert(got._2.sameElements(base._2), s"$strategy: a9 diverged")
-        assert(got._3.sameElements(base._3), s"$strategy: c30 diverged")
+        for (((name, got), (_, want)) <- runAll().zip(base))
+          assert(got.sameElements(want), s"$strategy: $name diverged")
       }
+      // the trainer's points follow the strategy: under scratch: they
+      // land as a parquet dir in the root, not as executor blocks
+      val root = java.nio.file.Files.createTempDirectory("graft-test-trainer").toString
+      spark.conf.set(key, s"scratch:$root")
+      Similarity.trainCentroidsQuantized(emb).collect()
+      assert(new java.io.File(root).list().exists(_.startsWith("graft_mat_")),
+        "trainCentroidsQuantized pinned its points outside graft.materialize")
       spark.conf.set(key, "bogus")
       SessionMemo.invalidate() // force a re-materialization
       intercept[IllegalArgumentException] {
